@@ -2080,8 +2080,6 @@ class LakehouseCatalog:
                         dim_vs[dim] = int(pin["v"])
                         if "s" in pin:
                             dim_sids[dim] = pin["s"]
-                    # legacy single-dim spellings mirrored by
-                    # _dim_pin_props so pre-r9 tooling keeps working
                     props.update(
                         self._dim_pin_props(dims, dim_vs, dim_sids)
                     )
@@ -2152,11 +2150,7 @@ class LakehouseCatalog:
         # reference any table.
         base_tbl = props.get("mv.base_table")
         if base_tbl:
-            dims = (
-                self._join_dim_pins(props)[0]
-                if ("mv.join_dims" in props or "mv.join_dim" in props)
-                else []
-            )
+            dims = json.loads(props.get("mv.join_dims", "[]"))
             for ident in {base_tbl, *dims}:
                 self.create_view(ident)
         else:
@@ -3680,38 +3674,6 @@ class LakehouseCatalog:
             },
         )
 
-    def _missing_sketch_state(
-        self,
-        t: LakehouseTable,
-        aggs: list,
-        agg_args: dict | None = None,
-    ) -> bool:
-        """True when an APPROX_COUNT_DISTINCT / APPROX_PERCENTILE
-        aggregate has no stored ``__mv_hll_`` / ``__mv_kll_`` sketch
-        column - an MV created before the sketch tier materialized the
-        state - or when a KLL column's recorded argument no longer
-        parses to a usable (family, percentile) spec. Merging is
-        impossible either way; callers decline to full refresh, which
-        is always correct."""
-        types = {f.name: f.dataType for f in t.schema.fields}
-        for name, op in aggs:
-            if (
-                op == "approx_count_distinct"
-                and f"__mv_hll_{name}" not in types
-            ):
-                return True
-            if op == "approx_percentile":
-                if f"__mv_kll_{name}" not in types:
-                    return True
-                if agg_args is not None and (
-                    self._kll_spec(
-                        agg_args.get(name, ""), types.get(name)
-                    )
-                    is None
-                ):
-                    return True
-        return False
-
     def _merged_agg_columns(
         self, t: LakehouseTable, aggs: list, agg_args: dict | None = None
     ) -> dict[str, "F.Column"]:
@@ -3931,16 +3893,7 @@ class LakehouseCatalog:
         group_cols = json.loads(props["mv.group_cols"])
         aggs = json.loads(props["mv.aggs"])
         agg_args = json.loads(props.get("mv.agg_args", "{}"))
-        if (
-            not group_cols
-            or "mv.view_agg" in props
-            # an approx MV without its __mv_hll_/__mv_kll_ sketch
-            # column (pre-sketch-tier layout) cannot recompute the
-            # stored state (review r11: this path crashed with
-            # KeyError instead of declining to the always-correct
-            # full refresh)
-            or self._missing_sketch_state(t, aggs, agg_args)
-        ):
+        if not group_cols or "mv.view_agg" in props:
             return NotImplemented
         if any(
             op
@@ -4239,8 +4192,6 @@ class LakehouseCatalog:
         (r14's fold of the two separate gate jobs)."""
         from .dml import merge_into
 
-        if self._missing_sketch_state(t, aggs, agg_args):
-            return NotImplemented  # pre-sketch-tier approx MV
         if probe is None:
             from functools import reduce
 
@@ -4337,18 +4288,6 @@ class LakehouseCatalog:
                 upd["mv.join_dim_versions"] = json.dumps(cur_vs)
                 if cur_sids:
                     upd["mv.join_dim_snapshots"] = json.dumps(cur_sids)
-                # keep the legacy single-dim mirror keys consistent
-                # (review r11: _dim_pin_props writes both spellings;
-                # a recovery that advances only the multi-dim keys
-                # would leave pre-r9 tooling reading a stale pin)
-                if len(cur_vs) == 1 and "mv.join_dim_version" in props:
-                    (d0, v0), = cur_vs.items()
-                    upd["mv.join_dim"] = d0
-                    upd["mv.join_dim_version"] = str(v0)
-                    if d0 in cur_sids:
-                        upd["mv.join_dim_snapshot"] = cur_sids[d0]
-                    elif "mv.join_dim_snapshot" in props:
-                        unset.append("mv.join_dim_snapshot")
         if upd:
             _log.warning(
                 "completing crashed MV pin write for %s: %s",
@@ -4362,43 +4301,27 @@ class LakehouseCatalog:
     @staticmethod
     def _join_dim_pins(props: dict) -> tuple[list[str], dict, dict]:
         """The MV's dim pin state: ([dim idents], {ident: version},
-        {ident: snapshot-uuid}). Reads the r9 multi-dim spellings
-        (mv.join_dims/join_dim_versions/join_dim_snapshots) with a
-        fallback to the pre-r9 single-dim keys."""
-        if "mv.join_dims" in props:
-            dims = json.loads(props["mv.join_dims"])
-            vs = {
-                k: int(v)
-                for k, v in json.loads(
-                    props["mv.join_dim_versions"]
-                ).items()
-            }
-            sids = json.loads(props.get("mv.join_dim_snapshots", "{}"))
-            return dims, vs, sids
-        dim = props["mv.join_dim"]
-        sids = {}
-        if "mv.join_dim_snapshot" in props:
-            sids[dim] = props["mv.join_dim_snapshot"]
-        return [dim], {dim: int(props["mv.join_dim_version"])}, sids
+        {ident: snapshot-uuid}) from mv.join_dims/join_dim_versions/
+        join_dim_snapshots."""
+        dims = json.loads(props["mv.join_dims"])
+        vs = {
+            k: int(v)
+            for k, v in json.loads(props["mv.join_dim_versions"]).items()
+        }
+        sids = json.loads(props.get("mv.join_dim_snapshots", "{}"))
+        return dims, vs, sids
 
     def _dim_pin_props(
         self, dims: list[str], vs: dict, sids: dict
     ) -> dict:
-        """Serialize dim pins back to properties (legacy keys mirrored
-        for a single dim)."""
-        out = {
+        """Serialize dim pins back to properties."""
+        return {
             "mv.join_dims": json.dumps(dims),
             "mv.join_dim_versions": json.dumps(
                 {k: str(v) for k, v in vs.items()}
             ),
             "mv.join_dim_snapshots": json.dumps(sids),
         }
-        if len(dims) == 1:
-            out["mv.join_dim"] = dims[0]
-            out["mv.join_dim_version"] = str(vs[dims[0]])
-            if dims[0] in sids:
-                out["mv.join_dim_snapshot"] = sids[dims[0]]
-        return out
 
     def _join_store_query(
         self, sql_text: str, aggs: list, agg_args: dict
@@ -4673,12 +4596,8 @@ class LakehouseCatalog:
         from pyspark.errors import AnalysisException
 
         group_cols = json.loads(props["mv.group_cols"])
-        aggs = json.loads(props["mv.aggs"])
-        agg_args = json.loads(props.get("mv.agg_args", "{}"))
         store_sql = props.get("mv.store_query", sql_text)
-        if not group_cols or self._missing_sketch_state(
-            t, aggs, agg_args
-        ):
+        if not group_cols:
             return NotImplemented
         m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
         sm = self._MV_JOIN_AGG_SHAPE.match(store_sql)
@@ -5084,41 +5003,30 @@ class LakehouseCatalog:
                         t.set_properties(**upd)
                         return snap
             else:
-                if self._missing_sketch_state(
-                    t,
-                    json.loads(props["mv.aggs"]),
-                    json.loads(props.get("mv.agg_args", "{}")),
-                ):
-                    # legacy approx MV (no stored sketch): the merge
-                    # would only decline AFTER aggregating the delta -
-                    # skip the wasted pass, full-refresh directly
-                    # (review r11)
-                    pass
-                else:
-                    delta.createOrReplaceTempView(
-                        self.view_name(fact_ident)
-                    )
-                    inc = self.spark.sql(store_sql).localCheckpoint(
-                        eager=True
-                    )
-                    # restore the fact's public view immediately (the
-                    # MV watcher / concurrent-reader discipline, r8
-                    # finding)
-                    ft.scan(
-                        snapshot=ft.snapshot(fact_v)
-                    ).createOrReplaceTempView(
-                        self.view_name(fact_ident)
-                    )
-                    upd = self._base_pin_props_for(
-                        ft, fact_v, dim_repin
-                    )
-                    snap = self._merge_agg_delta(
-                        t, props, inc, pin_updates=upd
-                    )
-                    if snap is not NotImplemented:
-                        t.set_properties(**upd)
-                        return snap
-                    # NULL group key in delta: fall through to full
+                delta.createOrReplaceTempView(
+                    self.view_name(fact_ident)
+                )
+                inc = self.spark.sql(store_sql).localCheckpoint(
+                    eager=True
+                )
+                # restore the fact's public view immediately (the
+                # MV watcher / concurrent-reader discipline, r8
+                # finding)
+                ft.scan(
+                    snapshot=ft.snapshot(fact_v)
+                ).createOrReplaceTempView(
+                    self.view_name(fact_ident)
+                )
+                upd = self._base_pin_props_for(
+                    ft, fact_v, dim_repin
+                )
+                snap = self._merge_agg_delta(
+                    t, props, inc, pin_updates=upd
+                )
+                if snap is not NotImplemented:
+                    t.set_properties(**upd)
+                    return snap
+                # NULL group key in delta: fall through to full
         if (
             not force_full
             and not all_pinned
@@ -5346,8 +5254,6 @@ class LakehouseCatalog:
             # replaces the contents atomically - O(1) either way
             from .dml import overwrite_partitions
 
-            if self._missing_sketch_state(t, aggs, agg_args):
-                return NotImplemented  # pre-sketch-tier approx MV
             joined = inc.alias("d").crossJoin(t.to_df().alias("t"))
             by_name = self._merged_agg_columns(t, aggs, agg_args)
             merged_cols = [by_name[f.name] for f in t.schema.fields]
@@ -6060,25 +5966,12 @@ class LakehouseCatalog:
             return fps[p]
 
         raw = json.loads(t.properties().get("copy.ledger", "{}"))
-        if isinstance(raw, list):
-            # pre-r9 ledger: flat list of path::mtime_ns::size keys.
-            # Honored as-is (exact-key match still skips); any file the
-            # legacy key no longer matches reloads once and migrates to
-            # the fingerprint map.
-            ledger: dict[str, str] = {}
-            legacy: set[str] = set(raw)
-            mtimes: dict[str, int] = {}
-        else:
-            ledger = dict(raw.get("fp", {}))
-            legacy = set(raw.get("legacy", []))
-            mtimes = dict(raw.get("mt", {}))
+        ledger: dict[str, str] = dict(raw.get("fp", {}))
+        mtimes: dict[str, int] = dict(raw.get("mt", {}))
         for s in t.snapshots():  # reconcile a crashed property write
             for k in s.summary.get("copied_file_keys", []):
-                if "::fp::" in k:
-                    p, fp = k.split("::fp::", 1)
-                    ledger[p] = fp
-                else:
-                    legacy.add(k)
+                p, fp = k.split("::fp::", 1)
+                ledger[p] = fp
 
         refreshed: list[str] = []
 
@@ -6088,8 +5981,6 @@ class LakehouseCatalog:
             # that loaded it - a steady-state no-op re-scan of 10k
             # files does 10k stats and ZERO hashing
             if p in ledger and mtimes.get(p) == st.st_mtime_ns:
-                return True
-            if f"{p}::{st.st_mtime_ns}::{st.st_size}" in legacy:
                 return True
             if ledger.get(p) == _fp(p):
                 # touched / byte-identical rewrite: refresh the stat
@@ -6104,8 +5995,6 @@ class LakehouseCatalog:
             mt = {p: v for p, v in mtimes.items() if p in ledger}
             if mt:
                 payload["mt"] = mt
-            if legacy:
-                payload["legacy"] = sorted(legacy)
             t.set_properties(**{"copy.ledger": json.dumps(payload)})
 
         new_paths = sorted(p for p in stats if not _loaded(p))
@@ -6130,10 +6019,6 @@ class LakehouseCatalog:
         for p in new_paths:
             ledger[p] = fps[p]
             mtimes[p] = stats[p].st_mtime_ns
-        # a migrated path's legacy keys are dead: drop them (this is
-        # what bounds the ledger - one entry per path, not per version)
-        new_set = set(new_paths)
-        legacy = {k for k in legacy if k.rsplit("::", 2)[0] not in new_set}
         _persist_ledger()
         return self.spark.createDataFrame(
             [("copy", ident, len(new_paths), snap.version)],

@@ -1258,7 +1258,7 @@ def add_column(
         schema_json=schema_json,
         partition_spec=cur.partition_spec,
         manifest=cur.manifest,
-        manifest_files=table._parent_manifest_files(cur),
+        manifest_files=list(cur.manifest_files),
         summary={"added_column": name},
     )
     table._commit(snap)
@@ -1357,7 +1357,7 @@ def drop_column(table: LakehouseTable, name: str) -> Snapshot:
         schema_json=schema_json,
         partition_spec=cur.partition_spec,
         manifest=cur.manifest,
-        manifest_files=table._parent_manifest_files(cur),
+        manifest_files=list(cur.manifest_files),
         summary={"dropped_column": name},
     )
     table._commit(snap)
@@ -1433,7 +1433,7 @@ def promote_column(table: LakehouseTable, name: str, new_type: str) -> Snapshot:
         schema_json=schema_json,
         partition_spec=cur.partition_spec,
         manifest=cur.manifest,
-        manifest_files=table._parent_manifest_files(cur),
+        manifest_files=list(cur.manifest_files),
         summary={"promoted_column": name, "from": old_type, "to": new_type},
     )
     table._commit(snap)
@@ -1492,7 +1492,7 @@ def rename_column(table: LakehouseTable, old: str, new: str) -> Snapshot:
         schema_json=schema_json,
         partition_spec=new_spec,
         manifest=cur.manifest,
-        manifest_files=table._parent_manifest_files(cur),
+        manifest_files=list(cur.manifest_files),
         summary={"renamed_column": {old: new}},
     )
     table._commit(snap)
@@ -1553,7 +1553,7 @@ def set_partition_spec(table: LakehouseTable, spec: list) -> Snapshot:
         schema_json=cur.schema_json,
         partition_spec=spec,
         manifest=cur.manifest,
-        manifest_files=table._parent_manifest_files(cur),
+        manifest_files=list(cur.manifest_files),
         summary={"new_partition_spec": [p.to_json() for p in spec]},
     )
     table._commit(snap)
@@ -1670,10 +1670,10 @@ def overwrite_partitions(
         # directory-encoded values are percent-escaped by Spark
         return tuple(unquote(str(part[n])) for n in names)
 
-    legacy = [e for e in snap.data_entries if entry_key(e) is None]
-    if legacy:
+    unkeyed = [e for e in snap.data_entries if entry_key(e) is None]
+    if unkeyed:
         raise ValueError(
-            f"{len(legacy)} data file(s) predate the current partition "
+            f"{len(unkeyed)} data file(s) predate the current partition "
             "spec, so their partition membership is unknown - a dynamic "
             "overwrite could silently leave stale rows next to the new "
             "ones. Run maintenance.compact first to rewrite them under "

@@ -150,16 +150,13 @@ def expire_snapshots(
 
     # Ref aging (Iceberg's max-ref-age-ms): tags/branches past the age
     # release their pin BEFORE protection is computed, so a forgotten
-    # audit tag cannot hold 100 TB of superseded files forever. Refs
-    # without a creation stamp (legacy) never age out - pinning must
-    # fail safe.
+    # audit tag cannot hold 100 TB of superseded files forever.
     expired_refs = 0
     aged_ref_names: set[str] = set()
     if max_ref_age_ms is not None:
         cutoff = int(time.time() * 1000) - max_ref_age_ms
         for name, meta in list(table._load_refs().items()):
-            created = meta.get("created_ms")
-            if created is not None and created < cutoff:
+            if meta["created_ms"] < cutoff:
                 if dry_run:
                     aged_ref_names.add(name)
                 else:
@@ -261,10 +258,9 @@ def expire_snapshots(
     # `identity.epoch.min-records-to-keep` (default 8) survive
     # regardless of age PER QUERY (records carry a __query
     # fingerprint; review r11 - a global floor let a busy sibling
-    # stream age out an idle stream's replay record; pre-r11 records
-    # without the fingerprint share one legacy group). Spark replays
-    # at most the LAST epoch per query, so a long-idle live stream
-    # still finds its replay record. The chain files (r<seq>.json) are
+    # stream age out an idle stream's replay record; unreadable records
+    # share one group). Spark replays at most the LAST epoch per query,
+    # so a long-idle live stream still finds its replay record. The chain files (r<seq>.json) are
     # the identity WATERMARK, pruned by their own head-preserving
     # logic - never touched here. The 256-file cap inside the
     # reservation path stays as a backstop for tables that never run
@@ -275,7 +271,7 @@ def expire_snapshots(
         keep_floor = int(
             props.get("identity.epoch.min-records-to-keep", 8)
         )
-        by_query: dict[str, list] = {}
+        by_query: dict[str | None, list] = {}
         for name in os.listdir(rsv_dir):
             if not name.startswith("epoch-"):
                 continue
@@ -283,11 +279,11 @@ def expire_snapshots(
             try:
                 mtime_ns = os.stat(p).st_mtime_ns
                 with open(p) as f:
-                    q = str(json.load(f).get("__query", "legacy"))
+                    q = str(json.load(f)["__query"])
             except FileNotFoundError:
                 continue
             except (ValueError, OSError):
-                q = "legacy"
+                q = None
             by_query.setdefault(q, []).append((mtime_ns, p))
         for eps in by_query.values():
             eps.sort(reverse=True)  # newest first within the query
@@ -991,7 +987,7 @@ def auto_maintain(
     # expiry / manifest rewrite stay enabled (metadata-only; orphan GC
     # already excludes marker-protected staged files).
     replace_pending = any(
-        table.staged_doc(sid).get("kind") == "replace"
+        table.staged_doc(sid)["kind"] == "replace"
         for sid in table.list_staged()
     )
     _DEFER = "deferred: staged replace pending"

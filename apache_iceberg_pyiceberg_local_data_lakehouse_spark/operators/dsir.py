@@ -45,6 +45,14 @@ def _grams(text: Column, sep: str, n: int) -> Column:
     )
 
 
+def _check_ngrams(ngrams: tuple) -> None:
+    """``_grams`` builds unigrams and adjacent pairs only; any other
+    order would silently be counted as bigrams."""
+    bad = [n for n in ngrams if n not in (1, 2)]
+    if bad:
+        raise ValueError(f"dsir ngrams must be 1 or 2, got {bad}")
+
+
 def _bucket_counts(
     df: DataFrame, text_col: str, sep: str, ngrams: tuple, n_buckets: int
 ) -> dict[int, int]:
@@ -84,6 +92,7 @@ def dsir_fit(
     floats — the whole model, broadcastable as a plan literal."""
     import math
 
+    _check_ngrams(ngrams)
     tc = _bucket_counts(target, text_col, sep, ngrams, n_buckets)
     rc = _bucket_counts(raw, text_col, sep, ngrams, n_buckets)
     t_total = sum(tc.values()) + smoothing * n_buckets
@@ -185,6 +194,7 @@ def dsir_logweights(
     seps keep the plan-literal Catalyst fold. Either way a pure
     projection — no shuffle; at 100 TB this is a map-only pass the scan
     absorbs."""
+    _check_ngrams(ngrams)
     if sep == " ":
         return df.withColumn(
             out_col, _logw_arrow(log_ratios, ngrams)(F.col(text_col))

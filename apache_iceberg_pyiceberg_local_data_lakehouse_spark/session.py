@@ -28,24 +28,11 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    prefer_shuffled_hash_join: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
     On a real cluster, ``master`` comes from the environment; locally we
     default to ``local[$SPARK_GRAFT_CPUS]``.
-
-    ``prefer_shuffled_hash_join=True`` sets
-    ``spark.sql.join.preferSortMergeJoin=false`` (guide §3.1) - an
-    OPT-IN for workloads whose non-broadcast equi-joins have a build
-    side that provably fits per-partition memory. It was briefly a
-    global default (r14) and was reverted (r15, VERDICT r14 #4): at
-    bench scale it is plan-neutral (every dimension join broadcasts -
-    plan-verified), and as a blanket default it biases every
-    non-broadcast join toward shuffled-hash, which builds an in-memory
-    hash map per partition and degrades far worse than SMJ+AQE under
-    skew or size misestimates at cluster scale. Callers who turn it on
-    should pair it with AQE skew handling and a measured build side.
     """
     master = master or f"local[{DEFAULT_CPUS}]"
     builder = (
@@ -71,8 +58,6 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", "false")
     )
-    if prefer_shuffled_hash_join:
-        builder = builder.config("spark.sql.join.preferSortMergeJoin", "false")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -44,14 +44,11 @@ _EPOCH_KEY = "streaming-epoch-id"
 # Per-table sidecars persisting each query's max committed epoch OUTSIDE
 # the snapshot summaries, so the high-watermark replay guard survives
 # even an expiry that pruned EVERY stamped snapshot (review r13).
-# ONE FILE PER query_id (r14, VERDICT r13 #3): the r13 layout kept all
-# queries in one shared JSON, and its read-modify-write let two
+# ONE FILE PER query_id: a shared JSON's read-modify-write would let two
 # concurrent streams into one table lose each other's entry
 # (last-rename-wins). A per-query file has a single writer - Spark never
 # runs two epochs of one query concurrently - so the atomic tmp+rename
-# needs no lock. The legacy shared doc is still READ (never written) so
-# pre-r14 watermarks carry forward.
-_WATERMARK_FILE = "streaming-watermarks.json"  # legacy, read-only
+# needs no lock.
 _WATERMARK_DIR = "streaming-watermarks"
 
 
@@ -69,22 +66,14 @@ def _watermark_path(table: LakehouseTable, query_id: str) -> str:
 
 
 def _read_watermark(table: LakehouseTable, query_id: str) -> int:
-    best = -1
     try:
         with open(_watermark_path(table, query_id)) as f:
             doc = json.load(f)
         if doc.get("query_id") == query_id:
-            best = int(doc.get("epoch", -1))
+            return int(doc.get("epoch", -1))
     except (OSError, ValueError):
         pass
-    # legacy shared doc (pre-r14 layout): read so existing tables keep
-    # their guard across the upgrade; never written anymore
-    try:
-        with open(os.path.join(table.metadata_dir, _WATERMARK_FILE)) as f:
-            best = max(best, int(json.load(f).get(query_id, -1)))
-    except (OSError, ValueError):
-        pass
-    return best
+    return -1
 
 
 def _advance_watermark(
@@ -105,9 +94,8 @@ def reset_watermark(table: LakehouseTable, query_id: str) -> None:
     escape hatch for the one case the high-watermark guard is wrong: a
     RECREATED checkpoint that batches genuinely new rows into epoch ids
     at-or-below the old maximum (the guard would silently skip them;
-    see ``write_stream_to_table``). Removes the per-query sidecar and
-    the query's entry in the legacy shared doc. Only call while the
-    query is stopped.
+    see ``write_stream_to_table``). Removes the per-query sidecar.
+    Only call while the query is stopped.
 
     Note the guard also derives a watermark from RETAINED epoch stamps
     in the snapshot log - resetting the sidecar only unblocks low epoch
@@ -118,18 +106,6 @@ def reset_watermark(table: LakehouseTable, query_id: str) -> None:
         os.remove(_watermark_path(table, query_id))
     except OSError:
         pass
-    legacy = os.path.join(table.metadata_dir, _WATERMARK_FILE)
-    try:
-        with open(legacy) as f:
-            doc = json.load(f)
-    except (OSError, ValueError):
-        return
-    if query_id in doc:
-        doc.pop(query_id)
-        tmp = f"{legacy}.tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, legacy)
 
 
 class EpochCommitSink:

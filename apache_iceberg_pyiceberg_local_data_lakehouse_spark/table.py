@@ -29,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -120,6 +121,10 @@ class PartitionField:
 # Snapshot metadata
 # ---------------------------------------------------------------------------
 
+# Stamped into every snapshot JSON. A table whose snapshots carry another
+# stamp (or none) is refused, never migrated (Iceberg's format-version).
+FORMAT_VERSION = 1
+
 
 @dataclass
 class Snapshot:
@@ -133,13 +138,14 @@ class Snapshot:
     manifest: list[dict[str, Any]]  # per data file: path, rows, stats, partition
     summary: dict[str, Any] = field(default_factory=dict)
     # Iceberg-style manifest list: metadata-relative paths of immutable
-    # manifest files that together hold `manifest`. When set, the
-    # snapshot JSON stores ONLY this list - an append re-serializes its
-    # own delta (one new manifest file), never the full O(files) set.
+    # manifest files that together hold `manifest`. The snapshot JSON
+    # stores ONLY this list - an append re-serializes its own delta (one
+    # new manifest file), never the full O(files) set.
     manifest_files: list[str] = field(default_factory=list)
 
     def to_json(self) -> dict[str, Any]:
-        d = {
+        return {
+            "format_version": FORMAT_VERSION,
             "snapshot_id": self.snapshot_id,
             "version": self.version,
             "timestamp_ms": self.timestamp_ms,
@@ -148,12 +154,8 @@ class Snapshot:
             "schema": self.schema_json,
             "partition_spec": [p.to_json() for p in self.partition_spec],
             "summary": self.summary,
+            "manifest_files": self.manifest_files,
         }
-        if self.manifest_files:
-            d["manifest_files"] = self.manifest_files
-        else:
-            d["manifest"] = self.manifest
-        return d
 
     @staticmethod
     def from_json(d: dict[str, Any]) -> "Snapshot":
@@ -162,14 +164,14 @@ class Snapshot:
             version=d["version"],
             timestamp_ms=d["timestamp_ms"],
             operation=d["operation"],
-            parent_id=d.get("parent_id"),
+            parent_id=d["parent_id"],
             schema_json=d["schema"],
             partition_spec=[PartitionField.from_json(p) for p in d["partition_spec"]],
-            # None marks "stored in manifest files"; the table loader
-            # resolves it (Snapshot alone has no filesystem context)
-            manifest=d.get("manifest") if "manifest" in d else None,
-            summary=d.get("summary", {}),
-            manifest_files=d.get("manifest_files", []),
+            # filled from manifest_files by the table loader (Snapshot
+            # alone has no filesystem context)
+            manifest=[],
+            summary=d["summary"],
+            manifest_files=d["manifest_files"],
         )
 
     @property
@@ -218,11 +220,14 @@ class StagedReplaceConflict(ValueError):
 # Scan-plan memo (r15): (session, location, snapshot uuid+version, file
 # set, pos flag, extra fields) -> the base read DataFrame. Module-level
 # because load_table constructs a fresh LakehouseTable per call; bounded
-# LRU so dead snapshots age out. See _read_data_plain.
+# LRU so dead snapshots age out. See _read_data_plain. The lock covers
+# every read-touch and insert-evict step: streaming foreachBatch and the
+# MV watcher scan from their own threads.
 from collections import OrderedDict as _OrderedDict  # noqa: E402
 
 _SCAN_DF_CACHE: _OrderedDict = _OrderedDict()
 _SCAN_DF_CACHE_MAX = 32
+_SCAN_DF_CACHE_LOCK = threading.Lock()
 
 
 class LakehouseTable:
@@ -285,14 +290,23 @@ class LakehouseTable:
         self._manifest_cache[rel] = list(entries)
         return rel
 
-    def _resolve_manifest(self, snap: Snapshot) -> Snapshot:
-        """Fill in ``snap.manifest`` from its manifest-file list (no-op
-        for legacy snapshots that inline the manifest)."""
-        if snap.manifest is None:
-            entries: list[dict[str, Any]] = []
-            for rel in snap.manifest_files:
-                entries.extend(self._read_manifest_file(rel))
-            snap.manifest = entries
+    def _load_snapshot(self, path: str) -> Snapshot:
+        """Parse one snapshot JSON and fill in its manifest from the
+        manifest-file list. Every snapshot read goes through here, so
+        this is where a table in another on-disk format is refused."""
+        with open(path) as f:
+            d = json.load(f)
+        found = d.get("format_version")
+        if found != FORMAT_VERSION:
+            raise ValueError(
+                f"table at {self.location} has snapshot "
+                f"{os.path.basename(path)} with format_version "
+                f"{found!r}; this engine reads only format_version "
+                f"{FORMAT_VERSION} and does not migrate other formats"
+            )
+        snap = Snapshot.from_json(d)
+        for rel in snap.manifest_files:
+            snap.manifest.extend(self._read_manifest_file(rel))
         return snap
 
     def current_version(self) -> int:
@@ -328,8 +342,7 @@ class LakehouseTable:
 
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = self.current_version() if version is None else version
-        with open(self._version_path(v)) as f:
-            return self._resolve_manifest(Snapshot.from_json(json.load(f)))
+        return self._load_snapshot(self._version_path(v))
 
     def snapshots(self) -> list[Snapshot]:
         """All retained snapshots, oldest first (M1 snapshot listing,
@@ -339,8 +352,9 @@ class LakehouseTable:
         out = []
         for name in sorted(os.listdir(self.metadata_dir)):
             if name.startswith("v") and name.endswith(".json"):
-                with open(os.path.join(self.metadata_dir, name)) as f:
-                    out.append(self._resolve_manifest(Snapshot.from_json(json.load(f))))
+                out.append(
+                    self._load_snapshot(os.path.join(self.metadata_dir, name))
+                )
         out.sort(key=lambda s: s.version)
         return out
 
@@ -665,7 +679,8 @@ class LakehouseTable:
     @staticmethod
     def _lineage_next(cur: Snapshot) -> int:
         """The table-lifetime row-id counter (Iceberg v3 next-row-id):
-        read from the parent's summary; legacy snapshots derive it from
+        read from the parent's summary; snapshots that do not record it
+        (e.g. create, schema-change and restore commits) derive it from
         the entries that already carry ids. Ids are never reused - the
         counter only grows, even across deletes."""
         n = cur.summary.get("next_row_id")
@@ -724,7 +739,7 @@ class LakehouseTable:
                 new_mf = self._write_manifest_file(new_files)
             elif not new_files:
                 next_row_id = self._lineage_next(cur)
-            mfs = self._parent_manifest_files(cur) + ([new_mf] if new_mf else [])
+            mfs = cur.manifest_files + ([new_mf] if new_mf else [])
             manifest = cur.manifest + new_files
             if len(mfs) >= self._MANIFEST_MERGE_THRESHOLD:
                 mfs = [self._write_manifest_file(manifest)]
@@ -751,16 +766,6 @@ class LakehouseTable:
             except CommitConflict:
                 continue
         raise CommitConflict(f"append to {self.location} failed after retries")
-
-    def _parent_manifest_files(self, cur: Snapshot) -> list[str]:
-        """Manifest-file list to inherit from the parent snapshot. A
-        legacy parent that inlines a non-empty manifest is migrated by
-        materializing it as one manifest file (one-time cost)."""
-        if cur.manifest_files:
-            return list(cur.manifest_files)
-        if cur.manifest:
-            return [self._write_manifest_file(cur.manifest)]
-        return []
 
     def overwrite_manifest(
         self,
@@ -828,7 +833,7 @@ class LakehouseTable:
         next_row_id = self._stamp_row_ids(cur, added)
         mfs: list[str] = []
         manifest: list[dict] = []
-        for rel in self._parent_manifest_files(cur):
+        for rel in cur.manifest_files:
             entries = self._read_manifest_file(rel)
             if any(e["path"] in removed_paths for e in entries):
                 kept = [e for e in entries if e["path"] not in removed_paths]
@@ -1030,9 +1035,10 @@ class LakehouseTable:
         # driver, repeated ~9x per MV refresh term for IDENTICAL
         # (snapshot, file-set) scans (view binds, changelog reads,
         # public-view restores). The key pins everything the plan
-        # depends on - session, table location, snapshot identity
-        # (uuid + version, so a commit or a drop/recreate can never
-        # serve a stale frame), the exact entry paths (file_filter
+        # depends on - session (by UUID: a recycled ``id()`` of a
+        # stopped session must not match), table location, snapshot
+        # identity (uuid + version, so a commit or a drop/recreate can
+        # never serve a stale frame), the exact entry paths (file_filter
         # subsets key apart), the pos-identity flag and extra fields -
         # and the value is the immutable logical plan (callers only
         # derive from it, never mutate). Bounded LRU; entries for old
@@ -1045,7 +1051,7 @@ class LakehouseTable:
                 "\n".join(e["path"] for e in entries).encode()
             ).hexdigest()
             key = (
-                id(self.spark),
+                self.spark._jsparkSession.sessionUUID(),
                 self.location,
                 snap.snapshot_id,
                 snap.version,
@@ -1056,17 +1062,19 @@ class LakehouseTable:
                 ),
                 digest,
             )
-            hit = _SCAN_DF_CACHE.get(key)
-            if hit is not None:
-                _SCAN_DF_CACHE.move_to_end(key)
-                return hit
+            with _SCAN_DF_CACHE_LOCK:
+                hit = _SCAN_DF_CACHE.get(key)
+                if hit is not None:
+                    _SCAN_DF_CACHE.move_to_end(key)
+                    return hit
         df = self._read_data_plain_uncached(
             entries, snap, with_pos, extra_fields
         )
         if key is not None:
-            _SCAN_DF_CACHE[key] = df
-            while len(_SCAN_DF_CACHE) > _SCAN_DF_CACHE_MAX:
-                _SCAN_DF_CACHE.popitem(last=False)
+            with _SCAN_DF_CACHE_LOCK:
+                _SCAN_DF_CACHE[key] = df
+                while len(_SCAN_DF_CACHE) > _SCAN_DF_CACHE_MAX:
+                    _SCAN_DF_CACHE.popitem(last=False)
         return df
 
     def _read_data_plain_uncached(
@@ -1982,6 +1990,7 @@ class LakehouseTable:
         os.makedirs(self._staged_dir(), exist_ok=True)
         doc = {
             "id": staged_id,
+            "kind": "append",
             "created_ms": int(time.time() * 1000),
             "entries": entries,
         }
@@ -2053,9 +2062,9 @@ class LakehouseTable:
         )
 
     def staged_doc(self, staged_id: str) -> dict:
-        """The full staged-commit record: ``kind`` is 'append' (absent
-        pre-r14) or 'replace' (carries removed_paths/operation/
-        base_version alongside the added entries)."""
+        """The full staged-commit record: ``kind`` is 'append' or
+        'replace' (carries removed_paths/operation/base_version
+        alongside the added entries)."""
         try:
             with open(self._staged_marker(staged_id)) as f:
                 return json.load(f)
@@ -2147,7 +2156,7 @@ class LakehouseTable:
             **(extra_summary or {}),
             "published_stage": staged_id,
         }
-        if doc.get("kind") == "replace":
+        if doc["kind"] == "replace":
             last_exc: Exception | None = None
             for _ in range(max(1, max_retries)):
                 cur = self.snapshot()
@@ -2815,25 +2824,13 @@ class LakehouseTable:
         return os.path.join(self.metadata_dir, "refs.json")
 
     def _load_refs(self) -> dict[str, dict[str, Any]]:
-        """Typed refs: name -> {"type": "tag"|"branch", "version": N}.
-        Legacy refs.json (plain name -> int) loads as tags."""
+        """Typed refs: name -> {"type": "tag"|"branch", "version": N,
+        "created_ms": T}."""
         try:
             with open(self._refs_path()) as f:
-                raw = json.load(f)
+                return json.load(f)
         except FileNotFoundError:
             return {}
-        out: dict[str, dict[str, Any]] = {}
-        for k, v in raw.items():
-            if isinstance(v, dict):
-                out[k] = {
-                    "type": v.get("type", "tag"),
-                    "version": int(v["version"]),
-                }
-                if "created_ms" in v:  # ref aging measures from creation
-                    out[k]["created_ms"] = int(v["created_ms"])
-            else:
-                out[k] = {"type": "tag", "version": int(v)}
-        return out
 
     def refs(self) -> dict[str, int]:
         """Named refs: name -> pinned snapshot version (tags AND branch
@@ -2863,7 +2860,7 @@ class LakehouseTable:
             "type": kind,
             "version": v,
             # ref aging (history.expire.max-ref-age-ms) measures from
-            # creation; legacy refs without the stamp never age out
+            # creation
             "created_ms": int(time.time() * 1000),
         }
         self._write_refs(refs)
@@ -2982,7 +2979,7 @@ class LakehouseTable:
                 manifest=fork.manifest,
                 # fork-era manifest files resolve through the branch's
                 # read-through to the main metadata dir - zero copies
-                manifest_files=self._parent_manifest_files(fork),
+                manifest_files=list(fork.manifest_files),
                 summary={
                     "forked_from": fork.version,
                     "branch": name,
@@ -3824,8 +3821,9 @@ def _range_keep(
 ):
     """Manifest file filter for ``scan_where``: transform-aware partition
     check first (cheapest, exact per file), then min/max stats overlap.
-    Any non-interpretable partition value (null partitions, legacy
-    layouts) falls through to stats; missing stats mean unprunable."""
+    Any non-interpretable partition value (null partitions, files
+    written under an earlier spec) falls through to stats; missing
+    stats mean unprunable."""
     lower, upper = _as_instant(lower), _as_instant(upper)
     lo_n, hi_n = _prune_bound(lower), _prune_bound(upper)
     # a date-only STRING upper bound ("2024-01-05") sorts BELOW that

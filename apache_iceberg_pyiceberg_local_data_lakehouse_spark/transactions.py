@@ -347,7 +347,12 @@ class MultiTableTransaction:
         t = self.catalog.load_table(identifier)
         staged_id = uuid.uuid4().hex[:16]
         self.participants.append(
-            {"table": identifier, "staged_id": staged_id, "published": False}
+            {
+                "table": identifier,
+                "staged_id": staged_id,
+                "published": False,
+                "kind": "append",
+            }
         )
         _write_record(self.catalog, self._record("pending"))
         try:
@@ -404,10 +409,10 @@ class MultiTableTransaction:
         for p in self.participants:
             if p["table"].lower() != ident:
                 continue
-            if kind == "replace" or p.get("kind") == "replace":
+            if kind == "replace" or p["kind"] == "replace":
                 raise ValueError(
                     f"{identifier} already has a staged "
-                    f"{p.get('kind', 'append')} in transaction "
+                    f"{p['kind']} in transaction "
                     f"{self.txn_id}: a transaction carries at most one "
                     "row-DML statement per table, and row-DML cannot "
                     "mix with appends on the same table (statements "
@@ -651,7 +656,7 @@ class MultiTableTransaction:
         from .table import StagedReplaceConflict
 
         for p in self.participants:
-            if p.get("kind") != "replace":
+            if p["kind"] != "replace":
                 continue
             t = self.catalog.load_table(p["table"])
             try:

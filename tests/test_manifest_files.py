@@ -151,26 +151,6 @@ def test_expiry_gcs_unreferenced_manifest_files(catalog, spark):
     assert t2.to_df().count() == 9
 
 
-def test_legacy_inline_manifest_migrates(catalog, spark):
-    t = catalog.create_table("gold.mf7", TICK_SCHEMA, [])
-    t.append(tick_df(spark, n=5))
-    # rewrite v1 as a legacy snapshot with the manifest inlined
-    d = _vjson(t, 1)
-    entries = t.snapshot(1).manifest
-    d.pop("manifest_files", None)
-    d["manifest"] = entries
-    with open(os.path.join(t.metadata_dir, "v1.json"), "w") as f:
-        json.dump(d, f)
-    t2 = LakehouseTable(spark, t.location)
-    assert t2.to_df().count() == 5
-    # next append migrates: new snapshot is manifest-file based and
-    # carries the legacy entries forward
-    t2.append(tick_df(spark, n=5))
-    d2 = _vjson(t2, 2)
-    assert "manifest" not in d2
-    assert t2.to_df().count() == 10
-
-
 def test_merge_into_reuses_out_of_range_manifests(catalog, spark):
     t = catalog.create_table("gold.mf8", TICK_SCHEMA, [])
     # one file per append: an empty task's zero-row file has no stats

@@ -2719,6 +2719,29 @@ def test_dsir_arrow_matches_catalyst_exactly(spark, sf_small):
         assert sel_a == sel_c
 
 
+def test_dsir_rejects_gram_orders_other_than_1_and_2(spark):
+    """Only unigrams and bigrams are modeled: (1, 3) must raise on both
+    the Arrow path (single-space sep) and the Catalyst path, not count
+    bigrams twice."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.operators.dsir import (
+        dsir_fit,
+        dsir_logweights,
+        dsir_select,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "b c d")], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="ngrams"):
+        dsir_fit(docs, docs, ngrams=(1, 3), n_buckets=16)
+    lr = dsir_fit(docs, docs, ngrams=(1, 2), n_buckets=16)
+    for sep in (" ", "[ ]"):
+        with pytest.raises(ValueError, match="ngrams"):
+            dsir_logweights(docs, lr, sep=sep, ngrams=(1, 3))
+        with pytest.raises(ValueError, match="ngrams"):
+            dsir_select(docs, lr, k=1, sep=sep, ngrams=(3,))
+
+
 def test_quality_classifier_filtering(spark):
     """r10 quality-classifier curation (GPT-3 Appendix A / LLaMA
     pattern): a hashed-feature logistic regression fit driver-side on

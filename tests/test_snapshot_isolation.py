@@ -170,18 +170,17 @@ def test_randomized_maintenance_interleaving_keeps_invariants(
 
 def test_ref_aging_releases_pin(spark, tmp_path):
     """history.expire.max-ref-age-ms: an aged tag releases its pin and
-    the next expiry collects the snapshot it protected; younger (and
-    unstamped legacy) refs keep pinning."""
+    the next expiry collects the snapshot it protected; younger refs
+    keep pinning."""
     t = _table(spark, tmp_path, "e")
     t.append(_batch(spark, 0, 10).coalesce(1))
     v_pin = t.current_version()
     t.create_tag("old_audit", v_pin)
-    t.create_tag("legacy", v_pin)
+    t.create_tag("young", v_pin)
     t.append(_batch(spark, 10, 20).coalesce(1))
-    # backdate one ref; strip the stamp from the other (legacy format)
+    # backdate one ref
     refs = t._load_refs()
     refs["old_audit"]["created_ms"] = int(time.time() * 1000) - 10_000_000
-    refs["legacy"].pop("created_ms", None)
     t._write_refs(refs)
 
     res = expire_snapshots(
@@ -193,11 +192,11 @@ def test_ref_aging_releases_pin(spark, tmp_path):
     )
     assert res["expired_refs"] == 1
     assert "old_audit" not in t.refs()
-    # legacy ref (no stamp) fails safe: still pinning
-    assert t.refs().get("legacy") == v_pin
+    # the younger ref is still pinning
+    assert t.refs().get("young") == v_pin
     assert v_pin in {s.version for s in t.snapshots()}
-    # drop the legacy pin too: now the snapshot goes
-    t.drop_tag("legacy")
+    # drop the younger pin too: now the snapshot goes
+    t.drop_tag("young")
     expire_snapshots(
         t, older_than_ms=FUTURE_MS(), retain_last=1, orphan_grace_secs=0
     )

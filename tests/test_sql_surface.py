@@ -2008,6 +2008,8 @@ def test_mv_join_agg_incremental_refresh(catalog, spark):
     to the pinned dim and merging partials - append commits a merge,
     values always equal the full recompute, and an up-to-date MV is a
     no-op."""
+    import json as _json
+
     f, d = _join_fixture(catalog, spark)
     mv = catalog.create_materialized_view(
         "gold.jmv",
@@ -2017,7 +2019,7 @@ def test_mv_join_agg_incremental_refresh(catalog, spark):
     )
     props = mv.properties()
     assert props.get("mv.refresh_mode") == "join_agg"
-    assert props.get("mv.join_dim") == "gold.dim"
+    assert _json.loads(props["mv.join_dims"]) == ["gold.dim"]
 
     def via_view():
         catalog.register_views()
@@ -2366,36 +2368,6 @@ def test_copy_into_touch_does_not_reload(catalog, spark, tmp_path):
     ledger = _json.loads(t.properties()["copy.ledger"])
     # dict ledger: exactly one entry for the rewritten path
     assert list(ledger["fp"].keys()) == [str(part)]
-
-
-def test_copy_into_legacy_list_ledger_honored(catalog, spark, tmp_path):
-    """A pre-r9 flat-list ledger (path::mtime_ns::size keys) still
-    skips exactly-matching files and migrates on reload."""
-    import json as _json
-    import os as _os
-
-    src = tmp_path / "landing_legacy"
-    src.mkdir()
-    df1 = spark.createDataFrame([(1, "x")], "id long, s string")
-    df1.coalesce(1).write.mode("overwrite").parquet(str(src / "a"))
-    part = next(
-        p for p in (src / "a").iterdir() if p.name.endswith(".parquet")
-    )
-    t = catalog.create_table("gold.legacy9", df1.schema, [])
-    st = _os.stat(part)
-    t.set_properties(**{
-        "copy.ledger": _json.dumps(
-            [f"{part}::{st.st_mtime_ns}::{st.st_size}"]
-        )
-    })
-    out = catalog.sql(f"COPY INTO gold.legacy9 FROM '{src}'").first()
-    assert out["loaded_files"] == 0  # legacy key matched -> skip
-    # touching invalidates the legacy key -> reloads once, migrates
-    _os.utime(part, None)
-    out = catalog.sql(f"COPY INTO gold.legacy9 FROM '{src}'").first()
-    assert out["loaded_files"] == 1
-    ledger = _json.loads(t.properties()["copy.ledger"])
-    assert str(part) in ledger["fp"] and "legacy" not in ledger
 
 
 def test_copy_fingerprint_detects_midfile_change(tmp_path):
@@ -4661,57 +4633,6 @@ def test_merge_by_source_conditioned_on_mor_tombstoned_table(
     assert got == [(1, 99), (2, 20), (10, 101)]
 
 
-def test_mv_pin_recovery_mirrors_legacy_single_dim_keys(catalog, spark):
-    """Review r11: completing a crashed pin write on a SINGLE-dim join
-    MV must advance the legacy mirror keys (mv.join_dim_version /
-    mv.join_dim_snapshot) together with the multi-dim spellings -
-    _dim_pin_props writes both, so recovery has to as well or the two
-    spellings contradict."""
-    import json as _json
-
-    f = catalog.create_table(
-        "gold.lgm_f",
-        spark.createDataFrame([], "fk long, v long").schema,
-    )
-    d = catalog.create_table(
-        "gold.lgm_d",
-        spark.createDataFrame([], "k long, seg string").schema,
-    )
-    d.append(
-        spark.createDataFrame(
-            [(i, chr(65 + i % 2)) for i in range(4)], "k long, seg string"
-        )
-    )
-    f.append(
-        spark.createDataFrame(
-            [(i % 4, i * 10) for i in range(8)], "fk long, v long"
-        )
-    )
-    q = (
-        "SELECT seg, COUNT(*) AS n, SUM(v) AS sv FROM gold_lgm_f "
-        "JOIN gold_lgm_d ON gold_lgm_f.fk = gold_lgm_d.k GROUP BY seg"
-    )
-    catalog.create_materialized_view("gold.lgm_mv", q)
-    mv = catalog.load_table("gold.lgm_mv")
-    assert "mv.join_dim_version" in mv.properties()  # legacy mirror
-    before = {
-        k: v
-        for k, v in mv.properties().items()
-        if k.startswith("mv.base_") or k.startswith("mv.join_dim")
-    }
-    catalog.sql("UPDATE gold.lgm_d SET seg = 'Z' WHERE k = 2")
-    snap = catalog.refresh_materialized_view("gold.lgm_mv")
-    assert snap.summary.get("cdc_refresh") is True
-    # CRASH SIMULATION + recovery
-    catalog.load_table("gold.lgm_mv").set_properties(**before)
-    assert catalog.refresh_materialized_view("gold.lgm_mv") is None
-    props = catalog.load_table("gold.lgm_mv").properties()
-    dv = str(d.current_version())
-    assert _json.loads(props["mv.join_dim_versions"])["gold.lgm_d"] == dv
-    # the legacy mirror advanced too - both spellings agree
-    assert props["mv.join_dim_version"] == dv
-
-
 def test_mv_approx_distinct_sketch_tier(catalog, spark):
     """r11: APPROX_COUNT_DISTINCT MVs store a mergeable DataSketches
     HLL per group - an append refreshes by UNIONING the delta's sketch
@@ -5559,112 +5480,6 @@ def test_mv_approx_incompatible_arg_declines_to_plain(catalog, spark):
         r["lbl"]: r["dx"]
         for r in spark.sql("SELECT * FROM gold_inc_m2").collect()
     } == {"a": 2, "b": 1}
-
-
-def test_mv_approx_legacy_single_table_dml_full_refreshes(
-    catalog, spark
-):
-    """review r11: a single-table approx MV WITHOUT its __mv_hll_
-    state (pre-sketch-tier layout) under base DML used to reach
-    _cdc_group_recompute and crash with KeyError '__mv_hll_*' - the
-    column-shape gate passed vacuously on an empty hidden set. It now
-    declines there too, and the refresh lands as a correct full
-    overwrite."""
-    b = catalog.create_table(
-        "gold.leg_f",
-        spark.createDataFrame([], "k long, v long").schema,
-    )
-    b.append(
-        spark.createDataFrame(
-            [(1, 10), (1, 30), (2, 20)], "k long, v long"
-        )
-    )
-    catalog.register_views()
-    catalog.create_materialized_view(
-        "gold.leg_mv",
-        "SELECT k, APPROX_COUNT_DISTINCT(v) AS dv FROM gold_leg_f "
-        "GROUP BY k",
-    )
-    t = catalog.load_table("gold.leg_mv")
-    legacy_props = {
-        k: v
-        for k, v in t.properties().items()
-        if k.startswith("mv.") and k != "mv.store_query"
-    }
-    catalog.drop_table("gold.leg_mv")
-    catalog.register_views()
-    lt = catalog.create_table(
-        "gold.leg_mv",
-        spark.sql(legacy_props["mv.query"]).schema,
-    )
-    lt.append(spark.sql(legacy_props["mv.query"]))
-    lt.set_properties(**legacy_props)
-
-    catalog.sql("DELETE FROM gold.leg_f WHERE v = 30")
-    snap = catalog.refresh_materialized_view("gold.leg_mv")
-    assert snap is not None and snap.operation != "merge"
-    catalog.register_views()
-    assert {
-        r["k"]: r["dv"]
-        for r in spark.sql("SELECT * FROM gold_leg_mv").collect()
-    } == {1: 1, 2: 1}
-
-
-def test_mv_join_approx_legacy_without_state_full_refreshes(
-    catalog, spark
-):
-    """A join MV whose properties claim an approx aggregate but whose
-    table has no ``__mv_hll_`` state (created before the sketch tier)
-    must decline the merge and full-refresh - pre-fix this path
-    CRASHED with KeyError on the first fact append."""
-    f = catalog.create_table(
-        "gold.lfact",
-        spark.createDataFrame([], "k long, u string").schema,
-    )
-    f.append(
-        spark.createDataFrame(
-            [(0, "a"), (0, "b"), (1, "a")], "k long, u string"
-        )
-    )
-    d = catalog.create_table(
-        "gold.ldim",
-        spark.createDataFrame([], "k long, lbl string").schema,
-    )
-    d.append(
-        spark.createDataFrame([(0, "x"), (1, "y")], "k long, lbl string")
-    )
-    catalog.register_views()
-    catalog.create_materialized_view(
-        "gold.lad_mv",
-        "SELECT lbl, APPROX_COUNT_DISTINCT(u) AS du FROM gold_lfact "
-        "JOIN gold_ldim ON gold_lfact.k = gold_ldim.k GROUP BY lbl",
-    )
-    # simulate the legacy layout: strip the store query and rebuild the
-    # table WITHOUT the hidden sketch column (visible estimate only)
-    t = catalog.load_table("gold.lad_mv")
-    legacy_props = {
-        k: v
-        for k, v in t.properties().items()
-        if k.startswith("mv.") and k != "mv.store_query"
-    }
-    catalog.drop_table("gold.lad_mv")
-    catalog.register_views()
-    lt = catalog.create_table(
-        "gold.lad_mv",
-        spark.sql(legacy_props["mv.query"]).schema,
-    )
-    lt.append(spark.sql(legacy_props["mv.query"]))
-    lt.set_properties(**legacy_props)
-
-    f.append(spark.createDataFrame([(0, "c")], "k long, u string"))
-    snap = catalog.refresh_materialized_view("gold.lad_mv")
-    assert snap is not None and snap.operation != "merge"  # full, no crash
-    catalog.register_views()
-    got = {
-        r["lbl"]: r["du"]
-        for r in spark.sql("SELECT * FROM gold_lad_mv").collect()
-    }
-    assert got == {"x": 3, "y": 1}
 
 
 def test_call_apply_retention_procedure(catalog, spark):

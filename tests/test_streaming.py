@@ -2665,13 +2665,10 @@ def test_watermarks_are_per_query_no_lost_update(spark, tmp_path):
     assert t.to_df().count() == 21
 
 
-def test_watermark_legacy_shared_doc_still_read(spark, tmp_path):
-    """Pre-r14 tables persisted watermarks in one shared JSON; the
-    per-query layout must still READ it so the guard carries across
-    the upgrade, and reset_watermark must clear both layouts."""
-    import json
-    import os
-
+def test_reset_watermark_clears_only_its_query(spark, tmp_path):
+    """reset_watermark removes exactly one query's sidecar; while that
+    query's epoch stamps remain in the snapshot log a low epoch id is
+    still skipped, and once expiry prunes them the reset frees it."""
     from apache_iceberg_pyiceberg_local_data_lakehouse_spark.catalog import (
         LakehouseCatalog,
     )
@@ -2686,24 +2683,11 @@ def test_watermark_legacy_shared_doc_still_read(spark, tmp_path):
     cat = LakehouseCatalog(spark, str(tmp_path / "wh"))
     cat.create_namespace("gold")
     t = cat.create_table("gold.wm4", TICK_SCHEMA, [])
-    # simulate the pre-r14 layout
-    legacy = os.path.join(t.metadata_dir, "streaming-watermarks.json")
-    with open(legacy, "w") as f:
-        json.dump({"old_q": 5, "other_q": 9}, f)
-    assert _read_watermark(t, "old_q") == 5
     sink = EpochCommitSink(t, query_id="old_q")
-    sink(tick_df(spark, n=3), 4)  # at-or-below the legacy watermark
-    assert t.to_df().count() == 0  # guarded by the migrated value
     sink(tick_df(spark, n=3), 6)
     assert t.to_df().count() == 3
-    # the advance went to the per-query sidecar; legacy doc untouched
     assert _read_watermark(t, "old_q") == 6
-    with open(legacy) as f:
-        assert json.load(f)["old_q"] == 5
-    # per-query advances never touch other queries' entries
-    _advance_watermark(t, "new_q", 2)
-    assert _read_watermark(t, "other_q") == 9
-    # the escape hatch clears BOTH layouts for exactly this query
+    _advance_watermark(t, "other_q", 9)
     reset_watermark(t, "old_q")
     assert _read_watermark(t, "old_q") == -1
     assert _read_watermark(t, "other_q") == 9

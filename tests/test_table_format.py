@@ -24,7 +24,9 @@ from apache_iceberg_pyiceberg_local_data_lakehouse_spark.maintenance import (
     expire_snapshots,
 )
 from apache_iceberg_pyiceberg_local_data_lakehouse_spark.table import (
+    FORMAT_VERSION,
     CommitConflict,
+    LakehouseTable,
     PartitionField,
     Snapshot,
     year_prune,
@@ -113,6 +115,56 @@ def test_time_travel(catalog, spark):
     assert t.to_df().count() == 17
     assert t.scan(snapshot=t.snapshot(v1)).count() == 10
     assert t.snapshot_as_of(ts_after_v1).version == v1
+
+
+def test_snapshot_format_stamp_refuses_other_formats(catalog, spark):
+    """Every snapshot JSON carries FORMAT_VERSION; a table whose snapshot
+    has no stamp or another one is refused with the location named."""
+    import json
+    import re
+
+    t = catalog.create_table("gold.fmt", TICK_SCHEMA, [])
+    t.append(tick_df(spark, n=3))
+    for v in (0, 1):
+        with open(os.path.join(t.metadata_dir, f"v{v}.json")) as f:
+            assert json.load(f)["format_version"] == FORMAT_VERSION
+    with open(os.path.join(t.metadata_dir, "v1.json")) as f:
+        doc = json.load(f)
+    for stamp in (None, FORMAT_VERSION + 1):
+        if stamp is None:
+            doc.pop("format_version", None)
+        else:
+            doc["format_version"] = stamp
+        with open(os.path.join(t.metadata_dir, "v1.json"), "w") as f:
+            json.dump(doc, f)
+        loaded = catalog.load_table("gold.fmt")
+        with pytest.raises(ValueError, match=f"{re.escape(t.location)}.*{stamp!r}"):
+            loaded.snapshot()
+        with pytest.raises(ValueError, match="format_version"):
+            loaded.snapshots()
+
+
+def test_scan_memo_keys_on_session_uuid(catalog, spark):
+    """The scan memo keys on the JVM session's UUID: another Python
+    wrapper of the same session shares the memoized frame, and a
+    different session never gets it back."""
+    from pyspark.sql import SparkSession
+
+    t = catalog.create_table("gold.memo", TICK_SCHEMA, [])
+    t.append(tick_df(spark, n=5))
+    snap = t.snapshot()
+    base = t._read_data_plain(snap.data_entries, snap)
+    same = SparkSession(spark.sparkContext, spark._jsparkSession)
+    shared = LakehouseTable(same, t.location)._read_data_plain(
+        snap.data_entries, snap
+    )
+    assert shared is base
+    other = spark.newSession()
+    df = LakehouseTable(other, t.location)._read_data_plain(
+        snap.data_entries, snap
+    )
+    assert df is not base and df.sparkSession is other
+    assert df.count() == 5
 
 
 def test_commit_conflict_is_atomic(catalog, spark):
@@ -1053,9 +1105,8 @@ def test_expire_snapshots_prunes_identity_epoch_records(catalog, spark):
 def test_epoch_record_gc_floor_is_per_query(catalog, spark):
     """Review r11: the epoch-record retention floor groups by the
     stream's __query fingerprint - a busy sibling stream cannot age
-    out an idle stream's last replay record, and legacy records
-    (no fingerprint) share one group without crashing GC."""
-    import json as _json
+    out an idle stream's last replay record, and unreadable records
+    share one group without crashing GC."""
     import os
 
     t = catalog.create_table(
@@ -1069,11 +1120,10 @@ def test_epoch_record_gc_floor_is_per_query(catalog, spark):
     idle_base = t._reserve_identity_epoch("idleq:0", 2)
     for ep in range(10):
         t._reserve_identity_epoch(f"busyq:{ep}", 2)
-    # one legacy record without the fingerprint (pre-r11 format)
+    # one record that does not parse
     rsv = t._identity_rsv_dir()
-    legacy = os.path.join(rsv, "epoch-legacyrecord.json")
-    with open(legacy, "w") as f:
-        _json.dump({"rid": 999, "__n_rows": 2}, f)
+    with open(os.path.join(rsv, "epoch-unreadable.json"), "w") as f:
+        f.write('{"rid": 999, "__n_')
     # age EVERYTHING far past the horizon, idle's record oldest
     old = int((time.time() - 90 * 86400) * 1e9)
     for i, n in enumerate(
@@ -1086,7 +1136,7 @@ def test_epoch_record_gc_floor_is_per_query(catalog, spark):
     t.set_properties(**{"identity.epoch.min-records-to-keep": "2"})
     res = expire_snapshots(t, retain_last=1, delete_orphan_files=False)
     # busy keeps its newest 2 (8 pruned), idle keeps its only record,
-    # the legacy group keeps its only record
+    # the unreadable group keeps its only record
     assert res["identity_epoch_records_pruned"] == 8
     left = [n for n in os.listdir(rsv) if n.startswith("epoch-")]
     assert len(left) == 4

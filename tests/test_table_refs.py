@@ -142,6 +142,8 @@ def test_tags_never_fast_forward(catalog, spark):
     t.create_tag("release")
     with pytest.raises(ValueError, match="no branch"):
         t.fast_forward("release")
+    with pytest.raises(ValueError, match="no branch"):
+        t.drop_branch("release")
     with pytest.raises(ValueError, match="no tag"):
         t.drop_tag("nope")
 
@@ -158,23 +160,6 @@ def test_branch_head_protected_from_expiry(catalog, spark):
     t.drop_branch("prod")
     with pytest.raises(ValueError, match="no ref"):
         t.snapshot_by_ref("prod")
-
-
-def test_legacy_refs_file_loads_as_tags(catalog, spark, tmp_path):
-    """Pre-branch refs.json (name -> int) must keep working."""
-    import json
-    import os
-
-    t = catalog.create_table("gold.br5", TICK_SCHEMA, [])
-    t.append(tick_df(spark, n=4))
-    with open(os.path.join(t.metadata_dir, "refs.json"), "w") as f:
-        json.dump({"old-tag": 1}, f)
-    assert t.refs() == {"old-tag": 1}
-    assert t.snapshot_by_tag("old-tag").total_rows == 4
-    t.create_branch("b")  # mixed-type file round-trips
-    assert set(t.refs()) == {"old-tag", "b"}
-    with pytest.raises(ValueError, match="no branch"):
-        t.drop_branch("old-tag")
 
 
 def test_table_properties_roundtrip(catalog, spark):
