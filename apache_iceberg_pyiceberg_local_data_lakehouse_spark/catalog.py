@@ -22,13 +22,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructType
-
-import logging
+from pyspark.sql.types import StructType
 
 from .table import LakehouseTable, PartitionField, Snapshot
-
-_log = logging.getLogger(__name__)
 
 # SQL DML statements handled by catalog.sql (Spark temp views are
 # read-only, so DELETE/UPDATE compile to the table-format DML engines)
@@ -887,1410 +883,33 @@ class LakehouseCatalog:
                 break  # no progress: remaining views are genuinely broken
             pending = nxt
 
-    # -- materialized views (stored query + refreshable table) --------------
-
-    # append-distributive plan nodes: a query whose analyzed plan is
-    # built ONLY of these maps each new base row to >= 0 result rows
-    # independently, so REFRESH can process the base's append-diff
-    # instead of re-running over the full table
-    _MV_NON_DISTRIBUTIVE = (
-        "Aggregate", "Join", "Window", "Distinct", "Limit", "Sort",
-        "Union", "Intersect", "Except", "Offset", "WithCTE",
-        "scalar-subquery", "exists-subquery", "in-subquery",
-    )
-
-    def _mv_incremental_base(self, sql_text: str) -> str | None:
-        """The single base table of an append-distributive MV query, or
-        None when incremental maintenance is impossible (aggregation /
-        join / window / set-op / subquery, or not exactly one table
-        referenced). Detection is conservative: anything unrecognized
-        falls back to full refresh - never to a wrong result."""
-        try:
-            plan = str(
-                self.spark.sql(sql_text)._jdf.queryExecution().analyzed()
-            )
-        except Exception:
-            return None
-        if any(tok in plan for tok in self._MV_NON_DISTRIBUTIVE):
-            return None
-        if self._MV_NONDETERMINISTIC.search(sql_text):
-            # a refresh-variant predicate/projection (current_date()
-            # etc.) evaluates differently over each delta than it did
-            # over the materialization - decline to full refresh
-            return None
-        cands = [
-            ident
-            for ns in self.list_namespaces()
-            for ident in self.list_tables(ns)
-            if re.search(
-                rf"\b{re.escape(self.view_name(ident))}\b", sql_text
-            )
-        ]
-        return cands[0] if len(cands) == 1 else None
-
-    # GROUP BY + distributive aggregates: the classic second tier of
-    # incremental view maintenance. COUNT/SUM merge by addition,
-    # MIN/MAX by least/greatest, so REFRESH can aggregate ONLY the
-    # base's append-diff and MERGE the partials into the
-    # materialization on the group keys - O(delta + touched groups).
-    _MV_AGG_SHAPE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<ref>[A-Za-z_]\w*)"
-        r"(?:\s+WHERE\s+(?P<where>.+?))?"
-        r"(?:\s+GROUP\s+BY\s+(?P<keys>.+?))?\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    # the arg may nest ONE paren level (r12: APPROX_PERCENTILE's
-    # array(p1, p2) form; single-call exprs like SUM(coalesce(a, b))).
-    # Deeper nesting falls out of the tier at the parse level - and
-    # _agg_item_rejected separately rejects args containing aggregate
-    # tokens, so the widening cannot admit a nested aggregate.
-    _MV_AGG_ITEM = re.compile(
-        r"^\s*(?P<op>APPROX_COUNT_DISTINCT|APPROX_PERCENTILE|"
-        r"PERCENTILE_APPROX|COUNT|SUM|MIN|MAX|AVG)\s*\("
-        r"(?P<distinct>\s*DISTINCT\b)?"
-        r"(?P<arg>(?:[^()]|\([^()]*\))*|\*)\)"
-        r"\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$",
-        re.IGNORECASE,
-    )
-
-    @staticmethod
-    def _norm_op(op: str) -> str:
-        """Canonical aggregate-op tag: Spark spells the same quantile
-        aggregate both ``APPROX_PERCENTILE`` and ``PERCENTILE_APPROX``;
-        everything downstream (mv.aggs, the sketch tiers, CDC gates)
-        keys on the one canonical name."""
-        op = op.lower()
-        return "approx_percentile" if op == "percentile_approx" else op
-    # expression group key: any non-aggregate select item with an alias
-    _MV_KEY_EXPR = re.compile(
-        r"^\s*(?P<expr>.+?)\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    # a nondeterministic group key would re-derive DIFFERENTLY on every
-    # refresh (delta partials landing in groups the materialization
-    # never had) - refuse agg mode for these, conservatively by name
-    _MV_NONDETERMINISTIC = re.compile(
-        r"\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id|"
-        r"current_timezone|now|localtimestamp|"
-        r"input_file_name|input_file_block_start|input_file_block_length|"
-        r"spark_partition_id)\s*\(|\bunix_timestamp\s*\(\s*\)|"
-        # Spark accepts these as PAREN-LESS keywords too - a bare-word
-        # match covers both spellings (a column happening to carry one
-        # of these names falls back to full refresh: safe, never wrong)
-        r"\b(current_date|current_timestamp|current_user|session_user)\b",
-        re.IGNORECASE,
-    )
-
-    @classmethod
-    def _agg_item_rejected(cls, op: str, arg: str, alias: str) -> bool:
-        """Per-aggregate-item gates shared by the single-table and
-        join parsers: reserved output names, ``*`` outside COUNT,
-        nested aggregates, and refresh-variant (nondeterministic or
-        time-dependent) argument expressions all decline to full
-        refresh. The last gate matters since r12's one-paren-level
-        arg widening: ``MAX(now())`` analyzes fine but a delta
-        re-aggregation at refresh time would merge refresh-time values
-        into creation-time ones - a state no single run of the store
-        query can produce."""
-        return (
-            alias.startswith("__mv_")
-            or (arg == "*" and op != "count")
-            or bool(
-                re.search(
-                    r"\b(COUNT|SUM|MIN|MAX|AVG|APPROX_COUNT_DISTINCT"
-                    r"|APPROX_PERCENTILE|PERCENTILE_APPROX)\b",
-                    arg,
-                    re.IGNORECASE,
-                )
-            )
-            or bool(cls._MV_NONDETERMINISTIC.search(arg))
-        )
-
-    # the ONE estimator spelling every sketch-MV path shares: the
-    # visible distinct count / quantile is ALWAYS the DataSketches
-    # estimate (creation, append union, full refresh, touched-group
-    # recompute) - never Spark's HLL++/GK approx, so the value cannot
-    # jump between algorithms (review r11: hand-rolled copies had to
-    # agree)
-    _HLL_EST_FMT = (
-        "CAST(HLL_SKETCH_ESTIMATE(HLL_SKETCH_AGG(({arg}))) AS BIGINT)"
-    )
-    _HLL_AGG_FMT = "HLL_SKETCH_AGG(({arg}))"
-    # KLL quantile spellings: the agg over an all-NULL group returns a
-    # non-NULL EMPTY buffer whose GET_QUANTILE THROWS (probe-confirmed,
-    # r11), so every estimate guards on GET_N = 0 first - NULL, exactly
-    # APPROX_PERCENTILE's answer for an all-NULL group
-    _KLL_AGG_FMT = "KLL_SKETCH_AGG_{f}(CAST(({arg}) AS {t}))"
-    _KLL_EST_FMT = (
-        "CASE WHEN KLL_SKETCH_GET_N_{f}({sk}) = 0 THEN NULL "
-        "ELSE KLL_SKETCH_GET_QUANTILE_{f}({sk}, {p}) END"
-    )
-
-    @staticmethod
-    def _kll_spec(
-        arg: str, vis_type
-    ) -> tuple[str, str, str, list[str], bool] | None:
-        """Parse an APPROX_PERCENTILE argument list into (KLL family
-        suffix, cast type, value expression, percentile literals,
-        array-form flag), or None when the KLL tier cannot model it:
-        a third accuracy argument, a non-literal percentile (the
-        stored sketch must answer FIXED quantiles), or a value type
-        outside the KLL families (DECIMAL would change type under the
-        BIGINT/DOUBLE cast). ``array(p1, p2, ...)`` of literals IS
-        modeled (r12, VERDICT r11 #4): ONE stored sketch answers
-        every requested quantile - the literals list carries them and
-        the visible column is the guarded ARRAY of estimates."""
-        from pyspark.sql.types import (
-            ArrayType,
-            ByteType,
-            DoubleType,
-            FloatType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
-
-        def _lit_ok(p: str) -> bool:
-            return bool(
-                re.fullmatch(r"[0-9]*\.?[0-9]+([eE]-?[0-9]+)?", p)
-            ) and 0.0 <= float(p) <= 1.0
-
-        pieces = [p.strip() for p in _split_top_level(arg)]
-        if len(pieces) != 2:
-            return None
-        expr, p = pieces
-        arr = re.fullmatch(r"(?is)array\s*\((?P<inner>.*)\)", p)
-        if arr is not None:
-            ps = [s.strip() for s in _split_top_level(arr.group("inner"))]
-            if not ps or not all(_lit_ok(s) for s in ps):
-                return None
-            if not isinstance(vis_type, ArrayType):
-                return None
-            elem, is_array = vis_type.elementType, True
-        else:
-            if not _lit_ok(p):
-                return None
-            ps, elem, is_array = [p], vis_type, False
-        if isinstance(
-            elem, (ByteType, ShortType, IntegerType, LongType)
-        ):
-            return "BIGINT", "BIGINT", expr, ps, is_array
-        if isinstance(elem, (FloatType, DoubleType)):
-            return "DOUBLE", "DOUBLE", expr, ps, is_array
-        return None
-
-    @classmethod
-    def _kll_est_sql(
-        cls, fam: str, sk: str, ps: list[str], is_array: bool
-    ) -> str:
-        """The ONE visible-quantile spelling over a (possibly inlined)
-        sketch expression ``sk``: GET_N = 0 guards the whole result
-        (an all-NULL group's sketch is a non-NULL EMPTY buffer whose
-        GET_QUANTILE THROWS; APPROX_PERCENTILE answers NULL there for
-        BOTH the scalar and the array form - probe-confirmed r12)."""
-        if not is_array:
-            return cls._KLL_EST_FMT.format(f=fam, sk=sk, p=ps[0])
-        qs = ", ".join(
-            f"KLL_SKETCH_GET_QUANTILE_{fam}({sk}, {p})" for p in ps
-        )
-        return (
-            f"CASE WHEN KLL_SKETCH_GET_N_{fam}({sk}) = 0 THEN NULL "
-            f"ELSE ARRAY({qs}) END"
-        )
-
-    def _approx_rewrite_items(
-        self,
-        parts: list[str],
-        aggs: list,
-        agg_args: dict,
-        vis_types: dict,
-    ) -> list[str] | None:
-        """Rewrite APPROX_COUNT_DISTINCT / APPROX_PERCENTILE select
-        items so the VISIBLE column is the DataSketches estimate and
-        append the mergeable ``__mv_hll_`` / ``__mv_kll_`` sketch
-        columns - shared by the single-table and join store-query
-        builders. Returns None when a percentile item is outside the
-        KLL tier (the caller declines agg mode)."""
-        items = []
-        for part in parts:
-            im = self._MV_AGG_ITEM.match(part)
-            op = self._norm_op(im.group("op")) if im is not None else ""
-            if op == "approx_count_distinct":
-                a = im.group("alias")
-                arg = im.group("arg").strip()
-                items.append(
-                    self._HLL_EST_FMT.format(arg=arg) + f" AS {a}"
-                )
-            elif op == "approx_percentile":
-                a = im.group("alias")
-                spec = self._kll_spec(
-                    im.group("arg").strip(), vis_types.get(a)
-                )
-                if spec is None:
-                    return None
-                fam, ct, expr, ps, is_arr = spec
-                sk = self._KLL_AGG_FMT.format(f=fam, arg=expr, t=ct)
-                est = self._kll_est_sql(fam, sk, ps, is_arr)
-                native = vis_types[a].simpleString()
-                items.append(f"CAST({est} AS {native}) AS {a}")
-            else:
-                items.append(part)
-        for alias, op in aggs:
-            if op == "approx_count_distinct":
-                items.append(
-                    self._HLL_AGG_FMT.format(arg=agg_args[alias])
-                    + f" AS __mv_hll_{alias}"
-                )
-            elif op == "approx_percentile":
-                spec = self._kll_spec(
-                    agg_args[alias], vis_types.get(alias)
-                )
-                if spec is None:
-                    return None
-                fam, ct, expr, _ps, _arr = spec
-                items.append(
-                    self._KLL_AGG_FMT.format(f=fam, arg=expr, t=ct)
-                    + f" AS __mv_kll_{alias}"
-                )
-        return items
-
-    def _analyzes(self, query: str) -> bool:
-        """True when ``query`` passes Spark analysis over the current
-        views - the gate a REWRITTEN store query must clear before the
-        MV commits to it (a sketch rewrite can turn a valid user query
-        into an invalid one, e.g. HLL_SKETCH_AGG over a DOUBLE)."""
-        try:
-            self.spark.sql(query).schema
-            return True
-        except Exception:
-            return False
-
-    def _mv_agg_spec(
-        self, sql_text: str
-    ) -> (
-        tuple[
-            str,
-            list[str],
-            list[tuple[str, str]],
-            str | None,
-            str | None,
-            dict[str, str],
-            str | None,
-            dict[str, str],
-            dict | None,
-        ]
-        | None
-    ):
-        """Parse an aggregate-distributive MV query: ``SELECT <group
-        keys and COUNT/SUM/MIN/MAX/AVG(expr) AS alias> FROM <one table
-        view> [WHERE ...] GROUP BY <the keys> [HAVING <pred>]``.
-        Returns (base identifier, STORED group columns, [(stored agg
-        column, op)], store query or None, having predicate over
-        visible columns or None, {stored agg column -> raw argument
-        expression}, WHERE clause text or None, {stored key column ->
-        defining expression} for non-bare keys, view re-aggregation
-        spec or None). agg args + key exprs feed CDC-incremental
-        maintenance, which must re-derive each stored column over
-        changelog rows. Conservative like :meth:`_mv_incremental_base`:
-        unaliased aggregates, nondeterministic or base-column-shadowing
-        key expressions, subqueries, a second table, DISTINCT anywhere
-        but a single ``COUNT(DISTINCT expr)``, or a HAVING referencing
-        an aggregate that is not in the select list all fall back to
-        full refresh - never to a wrong result.
-
-        Group keys may be arbitrary deterministic expressions when
-        aliased (``date_trunc('day', ts) AS day ... GROUP BY day`` /
-        the spelled-out expression / its ordinal): the MV materializes
-        the alias column, REFRESH aggregates the delta with the same
-        expressions and merges on the alias - the expression-key tier.
-
-        ``COUNT(DISTINCT expr) AS a`` (at most one per MV) switches the
-        materialization to the FINER (keys, expr) grain - the classic
-        two-level distinct rewrite: every other aggregate is stored as
-        a per-(keys, value) partial (``__mv_p_*``), the distinct value
-        itself as ``__mv_dv_a``, and the SQL-surface view re-aggregates
-        (COUNT of distinct-value rows, SUM/MIN/MAX of partials) back to
-        the user grain. Incremental refresh then merges at the finer
-        grain with the SAME distributive operators - and stays
-        CDC-invertible when the partials are all COUNT/integral-SUM.
-
-        HAVING over the selected distributive aggregates IS
-        incremental: the table materializes the UNFILTERED aggregate
-        (hidden state, like the AVG partials), REFRESH merges partials
-        exactly as without HAVING, and the predicate applies in the
-        SQL-surface view projection - so a group dipping below the
-        threshold reappears correctly when later appends push it back
-        over.
-
-        AVG is algebraic, not distributive: partials do not merge by a
-        single operator, so ``AVG(x) AS a`` decomposes into stored
-        SUM/COUNT partial columns (``__mv_sum_a``/``__mv_cnt_a``,
-        appended by the returned *store query*, which is what the
-        materialization actually runs). REFRESH merges the partials
-        additively and recomputes the visible column as sum/count -
-        NULL for an all-NULL group, matching AVG. Only double-typed
-        AVG is accepted (a DECIMAL average would change type under the
-        sum/count recomputation)."""
-        # HAVING tier: detach the predicate first and parse the
-        # UNFILTERED query - the MV stores the unfiltered aggregate as
-        # hidden state (the __mv_* partials precedent) so below-threshold
-        # groups keep accumulating partials across refreshes, and the
-        # filter applies in the view projection instead.
-        having = None
-        hm = re.search(
-            r"\s+HAVING\s+(?P<pred>.+?)\s*;?\s*$",
-            sql_text,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if hm is not None:
-            having = hm.group("pred").strip()
-            sql_text = sql_text[: hm.start()].rstrip(" ;\n\t")
-        m = self._MV_AGG_SHAPE.match(sql_text)
-        if m is None:
-            return None
-        if m.group("where") and self._MV_NONDETERMINISTIC.search(
-            m.group("where")
-        ):
-            # a refresh-variant WHERE would admit different rows into
-            # the delta than the materialization's - decline
-            return None
-
-        def norm(s: str) -> str:
-            return re.sub(r"\s+", " ", s.strip()).lower()
-
-        # no GROUP BY = the global-aggregate tier: a one-row MV whose
-        # refresh combines the diff's single partial-aggregate row
-        keys_raw = [
-            k.strip()
-            for k in _split_top_level(m.group("keys") or "")
-            if k.strip()
-        ]
-        parts = [p.strip() for p in _split_top_level(m.group("items"))]
-        group_items: list[tuple[str, str | None]] = []  # (alias, expr)
-        aggs: list[tuple[str, str]] = []  # visible (alias, op)
-        agg_args: dict[str, str] = {}
-        select_order: list[str] = []  # visible column order
-        distinct_item: tuple[str, str] | None = None  # (alias, arg)
-        for part in parts:
-            if re.fullmatch(r"[A-Za-z_]\w*", part):
-                if part.startswith("__mv_"):
-                    return None  # reserved for engine-managed state
-                group_items.append((part, None))
-                select_order.append(part)
-                continue
-            im = self._MV_AGG_ITEM.match(part)
-            if im is not None:
-                arg = im.group("arg").strip()
-                op = self._norm_op(im.group("op"))
-                alias = im.group("alias")
-                if self._agg_item_rejected(op, arg, alias):
-                    return None
-                if op in (
-                    "approx_count_distinct",
-                    "approx_percentile",
-                ) and (
-                    im.group("distinct")
-                    or arg == "*"
-                    or self._MV_NONDETERMINISTIC.search(arg)
-                ):
-                    return None
-                if im.group("distinct") and op != "approx_count_distinct":
-                    # only a single COUNT(DISTINCT expr) has the
-                    # finer-grain rewrite; SUM/AVG DISTINCT or a second
-                    # distinct argument would multiply the grain
-                    if (
-                        op != "count"
-                        or distinct_item is not None
-                        or arg == "*"
-                        or self._MV_NONDETERMINISTIC.search(arg)
-                    ):
-                        return None
-                    distinct_item = (alias, arg)
-                aggs.append((alias, op))
-                agg_args[alias] = arg
-                select_order.append(alias)
-                continue
-            km = self._MV_KEY_EXPR.match(part)
-            if km is None:
-                return None
-            expr = km.group("expr").strip()
-            alias = km.group("alias")
-            if alias.startswith("__mv_"):
-                return None
-            if re.search(
-                r"\b(COUNT|SUM|MIN|MAX|AVG)\s*\(", expr, re.IGNORECASE
-            ):
-                return None  # aggregate disguised as a key expression
-            if self._MV_NONDETERMINISTIC.search(expr):
-                return None
-            group_items.append((alias, expr))
-            select_order.append(alias)
-        if not aggs or len(set(select_order)) != len(select_order):
-            return None  # duplicate output names: ambiguous merge keys
-        # every DISTINCT in the (HAVING-detached) text must be the one
-        # parsed COUNT(DISTINCT ...) - a DISTINCT hiding in WHERE or an
-        # unparsed corner means this regex did not understand the query
-        n_distinct = len(
-            re.findall(r"\bDISTINCT\b", sql_text, re.IGNORECASE)
-        )
-        if n_distinct != (1 if distinct_item is not None else 0):
-            return None
-
-        # GROUP BY entries must each name a select-list group item: by
-        # alias, by bare column, by the spelled-out expression, or by
-        # select-list ordinal - and cover ALL group items exactly
-        if group_items and not keys_raw:
-            return None
-        by_alias = {a for a, _ in group_items}
-        by_expr = {norm(e): a for a, e in group_items if e is not None}
-        matched: set[str] = set()
-        for k in keys_raw:
-            if re.fullmatch(r"\d+", k):
-                i = int(k) - 1
-                if not (0 <= i < len(parts)):
-                    return None
-                target = parts[i]
-                if re.fullmatch(r"[A-Za-z_]\w*", target):
-                    if target not in by_alias:
-                        return None
-                    matched.add(target)
-                    continue
-                tm = self._MV_KEY_EXPR.match(target)
-                if tm is None or tm.group("alias") not in by_alias:
-                    return None
-                matched.add(tm.group("alias"))
-                continue
-            if re.fullmatch(r"[A-Za-z_]\w*", k):
-                if k not in by_alias:
-                    return None
-                matched.add(k)
-                continue
-            a = by_expr.get(norm(k))
-            if a is None:
-                return None
-            matched.add(a)
-        if matched != by_alias:
-            return None
-        group_cols = [a for a, _ in group_items]
-        key_exprs = {a: e for a, e in group_items if e is not None}
-        # the FROM ref must be exactly one lakehouse table's view name
-        idents = [
-            ident
-            for ns in self.list_namespaces()
-            for ident in self.list_tables(ns)
-            if self.view_name(ident) == m.group("ref")
-        ]
-        if len(idents) != 1:
-            return None
-        # expression keys must not shadow base-table columns: GROUP BY
-        # <alias> (and the delta-side withColumn in CDC maintenance)
-        # would silently resolve to the base column instead
-        if key_exprs:
-            base_cols = {
-                f.name.lower()
-                for f in self.load_table(idents[0]).schema.fields
-            }
-            # ... and must not shadow the changelog metadata columns
-            # either: CDC maintenance withColumn()s each key expression
-            # onto changelog rows BEFORE reading _change_type's sign,
-            # so an alias named _change_type would flip deletes to +1
-            reserved = {"_change_type", "_change_version"}
-            if any(
-                a.lower() in base_cols or a.lower() in reserved
-                for a in key_exprs
-            ):
-                return None
-        # plan-level guard: exactly the one Aggregate, nothing sneaky
-        # (a subquery in WHERE would add plan nodes the regex missed)
-        try:
-            self.register_views()
-            df = self.spark.sql(sql_text)
-            plan = str(df._jdf.queryExecution().analyzed())
-        except Exception:
-            return None
-        bad = tuple(
-            tok for tok in self._MV_NON_DISTRIBUTIVE if tok != "Aggregate"
-        )
-        if any(tok in plan for tok in bad) or plan.count("Aggregate") != 1:
-            return None
-        vis_types = {f.name: f.dataType for f in df.schema.fields}
-        for alias, op in aggs:
-            if op == "avg" and not isinstance(
-                vis_types.get(alias), DoubleType
-            ):
-                return None  # DECIMAL/interval AVG: full refresh
-        if having is not None:
-            # rewrite into the MV's visible column space: each selected
-            # aggregate expression (same spelling, whitespace-tolerant)
-            # becomes its alias; what remains may reference only group
-            # keys and aliases - an aggregate NOT in the select list
-            # has no stored state to filter on, so refuse (full refresh)
-            for part in parts:
-                im = self._MV_AGG_ITEM.match(part)
-                if im is None:
-                    continue
-                pat = re.compile(
-                    im.group("op")
-                    + r"\s*\(\s*"
-                    + (r"DISTINCT\s+" if im.group("distinct") else "")
-                    + re.escape(im.group("arg").strip())
-                    + r"\s*\)",
-                    re.IGNORECASE,
-                )
-                # quote-aware: an aggregate SPELLING inside a HAVING
-                # string literal (lang = 'COUNT(n_chars)') must stay a
-                # literal, not become an alias reference
-                having = _sub_outside_quotes(
-                    pat, im.group("alias"), having
-                )
-            leftover = _sub_outside_quotes(
-                re.compile(
-                    r"\b(COUNT|SUM|MIN|MAX|AVG)\s*\(", re.IGNORECASE
-                ),
-                "\x00",
-                having,
-            )
-            if "\x00" in leftover:
-                return None  # an aggregate with no stored column
-            try:
-                # validate against the unfiltered output schema (catches
-                # unknown identifiers, subqueries, type errors)
-                df.filter(F.expr(having)).schema
-            except Exception:
-                return None
-        from pyspark.sql.types import IntegerType, LongType
-
-        group_by_sql = [
-            e if e is not None else a for a, e in group_items
-        ]
-
-        has_approx = any(
-            op == "approx_count_distinct" for _, op in aggs
-        )
-        has_kll = any(op == "approx_percentile" for _, op in aggs)
-        if (has_approx or has_kll) and distinct_item is not None:
-            # the finer-grain COUNT(DISTINCT) rewrite re-aggregates
-            # stored partials in the view; a sketch column cannot
-            # re-aggregate there - full refresh
-            return None
-        if has_kll and any(
-            op == "approx_percentile"
-            and self._kll_spec(agg_args[alias], vis_types.get(alias))
-            is None
-            for alias, op in aggs
-        ):
-            # a percentile the KLL tier cannot model (accuracy arg,
-            # non-literal p - scalar or array element - or a
-            # DECIMAL/temporal value; literal arrays ride the tier
-            # since r12): decline agg mode entirely - the plain
-            # full-refresh MV keeps the native estimator on every path
-            return None
-        if distinct_item is None:
-            # ---- user-grain storage (bare or expression keys) -------
-            has_avg = any(op == "avg" for _, op in aggs)
-            store_items = list(parts)
-            if has_approx or has_kll:
-                # APPROX_COUNT_DISTINCT tier (r11): the MV stores a
-                # mergeable DataSketches HLL per group (__mv_hll_*)
-                # and the VISIBLE column is always the sketch estimate
-                # - one estimator on every path (creation, full
-                # refresh, incremental union), so the value never
-                # jumps between algorithms. Refresh unions the delta
-                # sketch into the stored one: O(delta + touched
-                # groups) with no re-scan of the base - the only
-                # distinct-count maintenance shape that survives
-                # 100 TB appends. DML in the range declines to full
-                # refresh (sketches are not invertible).
-                store_items = self._approx_rewrite_items(
-                    store_items, aggs, agg_args, vis_types
-                )
-                if store_items is None:
-                    return None  # ineligible sketch item: plain MV
-            for alias, op in aggs:
-                if op == "avg":
-                    # the stored partials AVG merges from; the visible
-                    # column keeps the native AVG value at creation and
-                    # is recomputed as sum/count after partial merges
-                    store_items.append(
-                        f"SUM(CAST(({agg_args[alias]}) AS DOUBLE)) "
-                        f"AS __mv_sum_{alias}"
-                    )
-                    store_items.append(
-                        f"COUNT({agg_args[alias]}) AS __mv_cnt_{alias}"
-                    )
-            # CDC-invertibility state: COUNT/SUM deltas can be
-            # SUBTRACTED, so base DML in the refresh range can maintain
-            # the MV from the changelog instead of a full
-            # re-aggregation - provided the MV stores (a) a per-group
-            # row count (__mv_rows, to detect groups whose last row was
-            # deleted: they must LEAVE the view) and (b) a non-null
-            # count per SUM (__mv_nn_<alias>: an inverted sum reaching
-            # "0 non-null rows" must read NULL, not 0). Only integral
-            # SUMs qualify (float subtraction is inexact); MIN/MAX/AVG
-            # are not invertible and keep the full-refresh fallback.
-            cdc_ready = bool(group_cols) and all(
-                op == "count"
-                or (
-                    op == "sum"
-                    and isinstance(
-                        vis_types.get(alias), (IntegerType, LongType)
-                    )
-                )
-                for alias, op in aggs
-            )
-            if cdc_ready:
-                store_items.append("COUNT(*) AS __mv_rows")
-                for alias, op in aggs:
-                    if op == "sum":
-                        store_items.append(
-                            f"COUNT({agg_args[alias]}) AS __mv_nn_{alias}"
-                        )
-            store_query = None
-            if (
-                has_avg
-                or has_approx
-                or has_kll
-                or having is not None
-                or cdc_ready
-            ):
-                # a HAVING/AVG/CDC-ready MV must MATERIALIZE hidden
-                # state alongside the visible columns (running the
-                # plain query would discard it)
-                store_query = (
-                    f"SELECT {', '.join(store_items)} FROM "
-                    + m.group("ref")
-                )
-                if m.group("where"):
-                    store_query += f" WHERE {m.group('where')}"
-                if group_by_sql:
-                    store_query += (
-                        f" GROUP BY {', '.join(group_by_sql)}"
-                    )
-                if (has_approx or has_kll) and not self._analyzes(
-                    store_query
-                ):
-                    # HLL_SKETCH_AGG rejects this argument (a type
-                    # outside INT/BIGINT/STRING/BINARY, or the rsd
-                    # form APPROX_COUNT_DISTINCT(x, 0.05) whose
-                    # parenthesized arg becomes a struct): no
-                    # mergeable sketch state is possible, so decline
-                    # agg mode entirely - the plain full-refresh MV
-                    # keeps the NATIVE estimator on every path
-                    # (review r11: the unvalidated rewrite crashed MV
-                    # creation with AnalysisException)
-                    return None
-            return (
-                idents[0],
-                group_cols,
-                aggs,
-                store_query,
-                having,
-                agg_args,
-                m.group("where"),
-                key_exprs,
-                None,
-            )
-
-        # ---- COUNT(DISTINCT) tier: finer (keys, value) grain --------
-        dv_owner, dv_arg = distinct_item
-        dv_col = f"__mv_dv_{dv_owner}"
-        inner_items = [
-            (f"{e} AS {a}" if e is not None else a)
-            for a, e in group_items
-        ]
-        inner_items.append(f"({dv_arg}) AS {dv_col}")
-        inner_aggs: list[tuple[str, str]] = []
-        inner_args: dict[str, str] = {}
-        final_exprs: list[str] = []
-        # generated hidden names can collide across FAMILIES (an AVG
-        # aliased 'aw' stores __mv_p_sum_aw; a sibling SUM the user
-        # aliased 'sum_aw' stores __mv_p_sum_aw too) - a duplicate
-        # stored column would silently corrupt the stypes probe and
-        # crash the materialization, so reserve each name and fall
-        # back to full refresh on any clash
-        stored_names: set[str] = set(group_cols) | {dv_col}
-
-        def reserve(n: str) -> bool:
-            if n in stored_names:
-                return False
-            stored_names.add(n)
-            return True
-
-        for alias, op in aggs:
-            native = vis_types[alias].simpleString()
-            if alias == dv_owner:
-                # each stored row is one distinct (keys, value) pair:
-                # COUNT of non-null value rows IS the distinct count
-                final_exprs.append(
-                    f"CAST(COUNT({dv_col}) AS {native}) AS {alias}"
-                )
-                continue
-            arg = agg_args[alias]
-            if op == "avg":
-                ps = f"__mv_p_sum_{alias}"
-                pc = f"__mv_p_cnt_{alias}"
-                if not (reserve(ps) and reserve(pc)):
-                    return None
-                inner_items.append(
-                    f"SUM(CAST(({arg}) AS DOUBLE)) AS {ps}"
-                )
-                inner_items.append(f"COUNT({arg}) AS {pc}")
-                inner_aggs.append((ps, "sum"))
-                inner_args[ps] = f"CAST(({arg}) AS DOUBLE)"
-                inner_aggs.append((pc, "count"))
-                inner_args[pc] = arg
-                final_exprs.append(
-                    f"CAST(CASE WHEN SUM({pc}) = 0 THEN NULL "
-                    f"ELSE SUM({ps}) / SUM({pc}) END AS DOUBLE) "
-                    f"AS {alias}"
-                )
-                continue
-            p = f"__mv_p_{alias}"
-            if not reserve(p):
-                return None
-            inner_fn = {
-                "count": "COUNT", "sum": "SUM", "min": "MIN",
-                "max": "MAX",
-            }[op]
-            inner_items.append(f"{inner_fn}({arg}) AS {p}")
-            inner_aggs.append((p, op))
-            inner_args[p] = arg
-            # counts of subgroups re-aggregate by SUM; SUM/MIN/MAX by
-            # themselves (all distributive over the finer grain). A
-            # COUNT sibling re-aggregates as SUM of partials, which is
-            # NULL over an EMPTY stored grain (global tier, empty base
-            # or every grain row evicted) where the defining COUNT
-            # returns 0 - COALESCE restores it (no-op for surviving
-            # keyed groups: >=1 grain row means a non-null partial).
-            outer_fn = "SUM" if op in ("count", "sum") else inner_fn
-            if op == "count":
-                final_exprs.append(
-                    f"CAST(COALESCE(SUM({p}), 0) AS {native}) "
-                    f"AS {alias}"
-                )
-            else:
-                final_exprs.append(
-                    f"CAST({outer_fn}({p}) AS {native}) AS {alias}"
-                )
-        inner_group_by = group_by_sql + [f"({dv_arg})"]
-
-        def build_store() -> str:
-            q = (
-                f"SELECT {', '.join(inner_items)} FROM "
-                + m.group("ref")
-            )
-            if m.group("where"):
-                q += f" WHERE {m.group('where')}"
-            return q + f" GROUP BY {', '.join(inner_group_by)}"
-
-        # CDC-invertibility needs the STORED partial types (a SUM
-        # partial is integral iff its input is): one analysis pass over
-        # the store query decides, then the hidden state appends. An
-        # MV of pure COUNT(DISTINCT) (no other aggregates) is
-        # trivially invertible - grain rows leave via __mv_rows = 0.
-        try:
-            stypes = {
-                f.name: f.dataType
-                for f in self.spark.sql(build_store()).schema.fields
-            }
-        except Exception:
-            return None
-        cdc_ready = all(
-            op == "count"
-            or (
-                op == "sum"
-                and isinstance(
-                    stypes.get(name), (IntegerType, LongType)
-                )
-            )
-            for name, op in inner_aggs
-        )
-        if cdc_ready:
-            inner_items.append("COUNT(*) AS __mv_rows")
-            for name, op in inner_aggs:
-                if op == "sum":
-                    inner_items.append(
-                        f"COUNT({inner_args[name]}) AS __mv_nn_{name}"
-                    )
-        view_agg = {
-            "keys": group_cols,
-            "exprs": final_exprs,
-            "order": select_order,
-        }
-        return (
-            idents[0],
-            group_cols + [dv_col],
-            inner_aggs,
-            build_store(),
-            having,
-            inner_args,
-            m.group("where"),
-            {**key_exprs, dv_col: f"({dv_arg})"},
-            view_agg,
-        )
-
-    # fact-JOIN-dim aggregates: the third incremental-maintenance tier.
-    # With the DIM side frozen at its pinned version, every fact row
-    # contributes to the join result independently, so COUNT/SUM/MIN/
-    # MAX over the join distribute over fact appends exactly like the
-    # single-table tier: REFRESH joins ONLY the fact delta to the dim
-    # and MERGEs the partials - O(delta x dim-match + touched groups),
-    # never the fact history. A moved dim (or fact DML in range) falls
-    # back to full refresh - never to a wrong result.
-    _MV_JOIN_AGG_SHAPE = re.compile(
-        r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<f>[A-Za-z_]\w*)\s+"
-        r"(?P<joins>(?:INNER\s+)?JOIN\s+.+?)"
-        r"(?:\s+WHERE\s+(?P<where>.+?))?"
-        r"\s+GROUP\s+BY\s+(?P<keys>.+?)\s*;?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    # one step of the join chain: JOIN <dim> ON <cond>, the condition
-    # ending where the next JOIN begins (or the chain ends). Real star
-    # queries join several dims (q05's shape) - the tier handles
-    # fact JOIN d1 ON ... JOIN d2 ON ... JOIN dN ON ... uniformly.
-    _MV_JOIN_STEP = re.compile(
-        r"(?:INNER\s+)?JOIN\s+(?P<d>[A-Za-z_]\w*)\s+ON\s+"
-        r"(?P<on>.+?)(?=\s+(?:INNER\s+)?JOIN\s+|\s*$)",
-        re.IGNORECASE | re.DOTALL,
-    )
-    _MV_JOIN_KEY = re.compile(
-        r"^\s*(?:(?P<qual>[A-Za-z_]\w*)\s*\.\s*)?(?P<col>[A-Za-z_]\w*)"
-        r"(?:\s+AS\s+(?P<alias>[A-Za-z_]\w*))?\s*$",
-        re.IGNORECASE,
-    )
-
-    def _mv_join_agg_spec(self, sql_text: str) -> (
-        tuple[
-            str,
-            list[str],
-            list[str],
-            list[tuple[str, str]],
-            dict[str, str],
-        ]
-        | None
-    ):
-        """Parse a join-aggregate MV: ``SELECT <bare/qualified key cols
-        and COUNT/SUM/MIN/MAX(expr) AS alias> FROM <fact view> [INNER]
-        JOIN <dim view> ON <cond> [JOIN <dim2> ON <cond2> ...]
-        [WHERE ...] GROUP BY <the keys>``. Returns (fact identifier,
-        [dim identifiers], group columns, [(agg alias, op)],
-        {agg alias: arg spelling}) or None.
-        Conservative gates in the family tradition: AVG/DISTINCT/
-        HAVING/expression keys, a self-join, outer joins, subqueries,
-        or extra plan nodes all decline to full refresh. Which side is
-        the FACT is positional (the left table): its appends refresh
-        incrementally, every joined side is a pinned dim."""
-        if re.search(
-            r"\b(DISTINCT|HAVING|LEFT|RIGHT|FULL|CROSS|SEMI|ANTI)\b",
-            sql_text,
-            re.IGNORECASE,
-        ):
-            return None
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        if m is None:
-            return None
-        steps = list(self._MV_JOIN_STEP.finditer(m.group("joins")))
-        if not steps:
-            return None
-        # the steps must tile the whole join chain (anything the step
-        # regex could not account for - stray tokens between ON and the
-        # next JOIN - is a shape we don't understand: decline)
-        pos = 0
-        for st in steps:
-            if m.group("joins")[pos : st.start()].strip():
-                return None
-            pos = st.end()
-        if m.group("joins")[pos:].strip():
-            return None
-        # a refresh-variant ON/WHERE (current_date() etc.) would filter
-        # only the DELTA with the new value while materialized rows
-        # keep the old one - decline to full refresh
-        if any(
-            self._MV_NONDETERMINISTIC.search(st.group("on"))
-            for st in steps
-        ) or (
-            m.group("where")
-            and self._MV_NONDETERMINISTIC.search(m.group("where"))
-        ):
-            return None
-        f_view = m.group("f")
-        d_views = [st.group("d") for st in steps]
-        lowers = [f_view.lower()] + [d.lower() for d in d_views]
-        if len(set(lowers)) != len(lowers):
-            return None  # self-join: one delta side is not enough
-
-        def resolve(view: str) -> str | None:
-            hits = [
-                ident
-                for ns in self.list_namespaces()
-                for ident in self.list_tables(ns)
-                if self.view_name(ident) == view
-            ]
-            return hits[0] if len(hits) == 1 else None
-
-        fact = resolve(f_view)
-        dims = [resolve(d) for d in d_views]
-        if fact is None or any(d is None for d in dims):
-            return None
-        group_cols: list[str] = []
-        key_names: dict[str, set[str]] = {}  # out name -> GROUP BY spellings
-        aggs: list[tuple[str, str]] = []
-        agg_args: dict[str, str] = {}
-        out_names: list[str] = []
-        parts = [p.strip() for p in _split_top_level(m.group("items"))]
-        for i, part in enumerate(parts):
-            im = self._MV_AGG_ITEM.match(part)
-            if im is not None:
-                op = self._norm_op(im.group("op"))
-                arg = im.group("arg").strip()
-                alias = im.group("alias")
-                if (
-                    op == "avg"
-                    or im.group("distinct")
-                    or self._agg_item_rejected(op, arg, alias)
-                    or self._MV_NONDETERMINISTIC.search(arg)
-                ):
-                    return None
-                aggs.append((alias, op))
-                agg_args[alias] = arg
-                out_names.append(alias)
-                continue
-            km = self._MV_JOIN_KEY.match(part)
-            if km is None:
-                return None  # expression key: decline
-            name = km.group("alias") or km.group("col")
-            if name.startswith("__mv_"):
-                return None
-            group_cols.append(name)
-            out_names.append(name)
-            spellings = {name.lower(), km.group("col").lower(), str(i + 1)}
-            if km.group("qual"):
-                spellings.add(
-                    f"{km.group('qual')}.{km.group('col')}".lower()
-                )
-            key_names[name] = spellings
-        if not aggs or not group_cols:
-            return None  # global join-agg: keep v1 keyed (merge path)
-        if len(set(out_names)) != len(out_names):
-            return None
-
-        def norm(s: str) -> str:
-            return re.sub(r"\s*\.\s*", ".", re.sub(r"\s+", " ", s.strip())).lower()
-
-        matched: set[str] = set()
-        for k in _split_top_level(m.group("keys")):
-            kn = norm(k)
-            hit = next(
-                (
-                    name
-                    for name, sp in key_names.items()
-                    if kn in sp
-                ),
-                None,
-            )
-            if hit is None:
-                return None
-            matched.add(hit)
-        if matched != set(key_names):
-            return None
-        # plan guard: exactly one Aggregate over exactly N INNER
-        # joins, nothing else non-distributive (subqueries, windows, a
-        # hidden extra join from a view definition)
-        try:
-            self.register_views()
-            plan = str(
-                self.spark.sql(sql_text)._jdf.queryExecution().analyzed()
-            )
-        except Exception:
-            return None
-        bad = tuple(
-            tok
-            for tok in self._MV_NON_DISTRIBUTIVE
-            if tok not in ("Aggregate", "Join")
-        )
-        if (
-            any(tok in plan for tok in bad)
-            or plan.count("Aggregate") != 1
-            or plan.count("Join") != len(dims)
-            or plan.count("Join Inner") != len(dims)
-        ):
-            return None
-        return fact, dims, group_cols, aggs, agg_args
-
-    def _pin_base_view(self, base_ident: str) -> int:
-        """Register the base table's view at an EXACT pinned version and
-        return it - the recorded mv.base_version must be precisely the
-        snapshot the materialization read, or a commit racing the
-        refresh would be skipped (version read after registration) or
-        double-counted (before)."""
-        bt = self.load_table(base_ident)
-        v = bt.current_version()
-        bt.scan(snapshot=bt.snapshot(v)).createOrReplaceTempView(
-            self.view_name(base_ident)
-        )
-        return v
-
-    def _base_pin_props_for(
-        self, bt, version: int, extra: dict | None = None
-    ) -> dict:
-        """``{mv.base_version, mv.base_snapshot?}`` for a base table
-        at ``version``, merged with ``extra`` pin keys - the ONE
-        spelling every refresh path and ``_recover_mv_pins`` consumer
-        shares (review r11: four hand-rolled copies had to agree)."""
-        upd = {"mv.base_version": str(version), **(extra or {})}
-        sid = self._snap_id(bt, version)
-        if sid is not None:
-            upd["mv.base_snapshot"] = sid
-        return upd
-
-    @staticmethod
-    def _snap_id(bt, version: int) -> str | None:
-        """The snapshot UUID at ``version``, or None when that version
-        is gone (expired or the table was dropped and recreated)."""
-        try:
-            return bt.snapshot(int(version)).snapshot_id
-        except Exception:
-            return None
-
-    def _pin_props(self, ident: str, vkey: str, skey: str) -> dict:
-        """Pin ``ident``'s view and return {version, snapshot-id}
-        properties. Version NUMBERS alone cannot prove a base is the
-        one the MV materialized - a dropped-and-recreated table counts
-        back up to the same number with different contents (r8 review
-        finding, empirically a wrong-results bug) - so every pin
-        records the snapshot UUID and every refresh checks it."""
-        v = self._pin_base_view(ident)
-        sid = self._snap_id(self.load_table(ident), v)
-        out = {vkey: str(v)}
-        if sid is not None:
-            out[skey] = sid
-        return out
+    # -- materialized views (maintenance lives in mv.py) --------------------
 
     def create_materialized_view(self, identifier: str, sql_text: str):
         """A table whose contents are a stored query's result: created
-        by running the query once (CTAS), refreshed on demand. Readers
-        see either the old or the new result, never a mix; time travel
-        keeps prior refreshes until expiry.
+        by running the query once, refreshed on demand by
+        :meth:`refresh_materialized_view`. Readers see either the old or
+        the new result, never a mix; time travel keeps prior refreshes
+        until expiry. See :func:`mv.create_materialized_view`."""
+        from . import mv
 
-        Refresh strategy is recorded at creation: a query that is a
-        pure projection/filter (optionally exploding) of ONE table is
-        append-distributive, so REFRESH processes only the base's
-        append-diff (``scan_incremental``) - O(new data), the
-        incremental-view-maintenance fast path. Everything else (aggs,
-        joins, windows, multi-table) re-runs in full as one atomic
-        overwrite; base DML in the diff range also falls back to full."""
-        ns, _, _name = identifier.rpartition(".")
-        if not ns:
-            raise ValueError(f"identifier must be namespace.table: {identifier}")
-        if self.table_exists(identifier):
-            raise ValueError(f"table already exists: {identifier}")
-        self.register_views()
-        self._register_stored_views()
-        props = {"mv.query": sql_text}
-        base_ident = self._mv_incremental_base(sql_text)
-        if base_ident is not None:
-            props["mv.base_table"] = base_ident
-            props.update(
-                self._pin_props(
-                    base_ident, "mv.base_version", "mv.base_snapshot"
-                )
-            )
-        else:
-            agg_spec = self._mv_agg_spec(sql_text)
-            if agg_spec is not None:
-                (
-                    base_ident,
-                    group_cols,
-                    aggs,
-                    store_query,
-                    having,
-                    agg_args,
-                    where_clause,
-                    key_exprs,
-                    view_agg,
-                ) = agg_spec
-                props["mv.base_table"] = base_ident
-                props.update(
-                    self._pin_props(
-                        base_ident, "mv.base_version", "mv.base_snapshot"
-                    )
-                )
-                props["mv.refresh_mode"] = "agg"
-                props["mv.group_cols"] = json.dumps(group_cols)
-                props["mv.aggs"] = json.dumps(aggs)
-                props["mv.agg_args"] = json.dumps(agg_args)
-                if where_clause:
-                    props["mv.where"] = where_clause
-                if key_exprs:
-                    # expression group keys (and the distinct-value
-                    # grain column): CDC maintenance re-derives them
-                    # over changelog rows before grouping
-                    props["mv.key_exprs"] = json.dumps(key_exprs)
-                if view_agg is not None:
-                    # COUNT(DISTINCT) tier: the table stores the finer
-                    # (keys, value) grain; the SQL-surface view
-                    # re-aggregates back to the user grain
-                    props["mv.view_agg"] = json.dumps(view_agg)
-                if store_query is not None:
-                    # AVG decomposition / HAVING / finer grain: the
-                    # materialization runs the store query (visible
-                    # cols + __mv_* state, UNFILTERED)
-                    props["mv.store_query"] = store_query
-                if having is not None:
-                    # applied in the view projection (create_view);
-                    # the stored rows are the hidden unfiltered state
-                    props["mv.having"] = having
-            else:
-                join_spec = self._mv_join_agg_spec(sql_text)
-                store_query = (
-                    self._join_store_query(
-                        sql_text, join_spec[3], join_spec[4]
-                    )
-                    if join_spec is not None
-                    else None
-                )
-                if (
-                    join_spec is not None
-                    and store_query is None
-                    and any(
-                        op
-                        in ("approx_count_distinct", "approx_percentile")
-                        for _, op in join_spec[3]
-                    )
-                ):
-                    # a sketch aggregate whose store query cannot
-                    # materialize (incompatible arg type, rsd form,
-                    # ineligible percentile) has nothing mergeable:
-                    # decline join_agg mode entirely - the plain
-                    # full-refresh MV keeps the native estimator on
-                    # every path (review r11)
-                    join_spec = None
-                if join_spec is not None:
-                    fact, dims, group_cols, aggs, agg_args = join_spec
-                    props["mv.base_table"] = fact
-                    props.update(
-                        self._pin_props(
-                            fact, "mv.base_version", "mv.base_snapshot"
-                        )
-                    )
-                    dim_vs: dict[str, int] = {}
-                    dim_sids: dict[str, str] = {}
-                    for dim in dims:
-                        pin = self._pin_props(dim, "v", "s")
-                        dim_vs[dim] = int(pin["v"])
-                        if "s" in pin:
-                            dim_sids[dim] = pin["s"]
-                    props.update(
-                        self._dim_pin_props(dims, dim_vs, dim_sids)
-                    )
-                    props["mv.refresh_mode"] = "join_agg"
-                    props["mv.group_cols"] = json.dumps(group_cols)
-                    props["mv.aggs"] = json.dumps(aggs)
-                    props["mv.agg_args"] = json.dumps(agg_args)
-                    if store_query is not None:
-                        # CDC-invertible (COUNT/integral-SUM only):
-                        # materialize __mv_rows + per-SUM __mv_nn_
-                        # alongside the visible columns, so base DML
-                        # (fact OR a single dim) can refresh from the
-                        # signed changelog instead of re-running the
-                        # whole star join. APPROX_COUNT_DISTINCT
-                        # instead stores a mergeable HLL sketch per
-                        # group (__mv_hll_*) so fact appends union
-                        # instead of re-scanning the star (r11)
-                        props["mv.store_query"] = store_query
-        src = self.spark.sql(
-            props.get("mv.store_query", sql_text)
-        ).localCheckpoint(eager=True)
-        self.create_namespace(ns)
-        t = self.create_table(identifier, src.schema)
-        t.append(src)
-        t.set_properties(**props)
-        return t
+        return mv.create_materialized_view(self, identifier, sql_text)
 
     def refresh_materialized_view(self, identifier: str):
-        """Bring the MV up to date with its stored query.
+        """Bring the MV up to date with its stored query: incrementally
+        when the moved inputs allow it, else one atomic full refresh.
+        Returns the commit snapshot, or None when already up to date.
+        See :func:`mv.refresh_materialized_view`."""
+        from . import mv
 
-        Incremental path (recorded at creation for append-distributive
-        single-table queries): read ONLY the base's append-diff since
-        ``mv.base_version`` (``scan_incremental``), run the stored query
-        over the diff, append the result - O(new data) per refresh, one
-        append commit, and an up-to-date MV is a no-op (returns None).
-        Base DML in the range (the diff is not append-only) falls back
-        to full refresh automatically.
+        return mv.refresh_materialized_view(self, identifier)
 
-        Full path: re-run the query and atomically replace the contents
-        (one overwrite commit; a zero-row result commits an explicit
-        truncate instead of silently keeping the stale contents).
+    def mv_refresh_estimate(self, identifier: str) -> dict:
+        """What refreshing the join-aggregate MV would cost, priced
+        from manifest stats alone. See :func:`mv.mv_refresh_estimate`."""
+        from . import mv
 
-        Side-effect contract (r15, ADVICE r14): since the r14 narrowed
-        binding, refresh re-registers temp views ONLY for the stored
-        query's recorded base table and dim pins (plus the stored-view
-        pass, whose definitions bind against whatever table views the
-        session currently holds). Refresh is NOT a freshen-the-whole-
-        SQL-surface operation: callers that relied on it re-binding
-        every catalog table's view should call ``register_views()``
-        themselves. MVs created without a recorded base keep the full
-        sweep because their query may reference any table."""
-        from .dml import overwrite_partitions, truncate_table
-
-        t = self.load_table(identifier)
-        props = t.properties()
-        sql_text = props.get("mv.query")
-        if not sql_text:
-            raise ValueError(
-                f"{identifier} is not a materialized view (no mv.query)"
-            )
-        # refresh binds only the tables the STORED query references -
-        # recorded at creation for both incremental modes - instead of
-        # the O(catalog) register_views() sweep (r14: ~30 ms per
-        # catalog table per refresh; a thousand-table catalog would pay
-        # seconds of view churn to refresh one MV). MVs whose creation
-        # recorded no base (the generic full-refresh tail over
-        # arbitrary SQL) keep the full sweep - their query may
-        # reference any table.
-        base_tbl = props.get("mv.base_table")
-        if base_tbl:
-            dims = json.loads(props.get("mv.join_dims", "[]"))
-            for ident in {base_tbl, *dims}:
-                self.create_view(ident)
-        else:
-            self.register_views()
-        self._register_stored_views()
-        # complete a crashed refresh's pin write BEFORE computing what
-        # moved - otherwise the committed delta would re-apply
-        props = self._recover_mv_pins(t, props)
-        if props.get("mv.refresh_mode") == "join_agg":
-            return self._refresh_join_agg(t, props, sql_text)
-        base_ident = props.get("mv.base_table")
-        base_v = props.get("mv.base_version")
-        if base_ident is not None and base_v is not None:
-            bt = self.load_table(base_ident)
-            cur_v = bt.current_version()
-            # the pinned version must be the SAME SNAPSHOT the MV
-            # materialized - a dropped-and-recreated base counts back
-            # to the same number with different contents, and version
-            # equality alone would serve stale/wrong results (r8
-            # review finding on the join tier; same hole here)
-            rec_sid = props.get("mv.base_snapshot")
-            lineage_ok = rec_sid is None or (
-                self._snap_id(bt, int(base_v)) == rec_sid
-            )
-
-            def pin_upd(v: int) -> dict:
-                return self._base_pin_props_for(bt, v)
-
-            if lineage_ok and cur_v == int(base_v):
-                return None  # already up to date: no commit
-            # cur_v < base_v means the base was dropped/recreated (its
-            # history restarted): an empty diff would silently miss the
-            # new table's initial rows - full-refresh instead
-            if lineage_ok and cur_v > int(base_v):
-                try:
-                    delta = bt.scan_incremental(int(base_v), cur_v)
-                except ValueError:
-                    # DML in range: COUNT/SUM are INVERTIBLE, so an
-                    # agg-mode MV with stored CDC state can refresh
-                    # from the changelog (insert adds, delete
-                    # subtracts) - O(changed rows), never the base
-                    if props.get("mv.refresh_mode") == "agg":
-                        upd = pin_upd(cur_v)
-                        snap = self._cdc_agg_refresh(
-                            t, props, bt, int(base_v), cur_v,
-                            pin_updates=upd,
-                        )
-                        if snap is NotImplemented:
-                            # MIN/MAX (or missing signed state): the
-                            # touched-group recompute tier (r10) -
-                            # still O(changed groups), never the view
-                            snap = self._cdc_group_recompute(
-                                t, props, bt, int(base_v), cur_v,
-                                pin_updates=upd,
-                            )
-                        if snap is not NotImplemented:
-                            t.set_properties(**upd)
-                            return snap
-                    # not modelable incrementally: full refresh
-                else:
-                    # the stored query over ONLY the new rows;
-                    # distributivity was proven at creation (pure
-                    # projection/filter, or GROUP BY + distributive
-                    # aggregates in 'agg' mode)
-                    delta.createOrReplaceTempView(
-                        self.view_name(base_ident)
-                    )
-                    inc_q = self.spark.sql(
-                        props.get("mv.store_query", sql_text)
-                    )
-                    # the mode's gate metrics ride the checkpoint job
-                    # (r15, guide §2.4): agg mode probes (count, NULL
-                    # group key) through _checkpoint_group_probe;
-                    # projection mode observes only the row count that
-                    # previously cost a separate inc.count() job
-                    agg_groups = (
-                        json.loads(props.get("mv.group_cols", "[]"))
-                        if props.get("mv.refresh_mode") == "agg"
-                        else []
-                    )
-                    if agg_groups:
-                        inc, inc_n, inc_null = (
-                            self._checkpoint_group_probe(
-                                inc_q, agg_groups
-                            )
-                        )
-                        probe = (inc_n, inc_null)
-                    else:
-                        from pyspark.sql import Observation
-
-                        _obs = Observation()
-                        inc = inc_q.observe(
-                            _obs, F.count(F.lit(1)).alias("__n")
-                        ).localCheckpoint(eager=True)
-                        inc_n = int(_obs.get["__n"] or 0)
-                        probe = None
-                    # inc is MATERIALIZED (eager checkpoint): restore
-                    # the base's PUBLIC view immediately so concurrent
-                    # readers - and the daemon MV watcher's foreground
-                    # peers - never resolve it while it points at the
-                    # append-delta (r8 review finding)
-                    bt.scan(
-                        snapshot=bt.snapshot(cur_v)
-                    ).createOrReplaceTempView(
-                        self.view_name(base_ident)
-                    )
-                    upd = pin_upd(cur_v)
-                    if props.get("mv.refresh_mode") == "agg":
-                        snap = self._merge_agg_delta(
-                            t, props, inc, pin_updates=upd,
-                            probe=probe,
-                        )
-                        if snap is not NotImplemented:
-                            t.set_properties(**upd)
-                            return snap
-                        # NULL group key in the delta: fall through to
-                        # the full-refresh path below
-                    else:
-                        snap = (
-                            t.append(
-                                inc, extra_summary={"mv_pins": upd}
-                            )
-                            if inc_n
-                            else t.snapshot()
-                        )
-                        t.set_properties(**upd)
-                        return snap
-        # full refresh; MV tables are created unpartitioned, so the
-        # non-empty path is a full-table replace in one commit
-        if base_ident is not None:
-            new_pin = self._pin_props(
-                base_ident, "mv.base_version", "mv.base_snapshot"
-            )
-        src = self.spark.sql(props.get("mv.store_query", sql_text))
-        snap = overwrite_partitions(t, src)
-        if snap is None:
-            snap = truncate_table(t)
-        if base_ident is not None:
-            t.set_properties(**new_pin)
-        return snap
+        return mv.mv_refresh_estimate(self, identifier)
 
     def _sql_merge(self, m: re.Match, txn=None) -> DataFrame:
         """Compile ``MERGE INTO t USING s ON t.k = s.k WHEN ...`` to
@@ -3569,1711 +2188,6 @@ class LakehouseCatalog:
             by_source_sets=by_source_sets,
             by_source_clauses=by_source_clauses,
             stage_as=stage_as,
-        )
-
-    @staticmethod
-    def _combine_partial(op: str, tv, dv):
-        """NULL-deferring combine of two partial aggregates: COUNT/SUM
-        add, MIN least, MAX greatest; a NULL partial on either side
-        defers to the other (a group absent from one side keeps the
-        other side's value)."""
-        if op in ("count", "sum"):
-            merged = tv + dv
-        elif op == "min":
-            merged = F.least(tv, dv)
-        else:  # max
-            merged = F.greatest(tv, dv)
-        return F.when(tv.isNull(), dv).when(dv.isNull(), tv).otherwise(merged)
-
-    # a recompute touching more groups than this is full-refresh-shaped
-    # anyway (shared by the single-table and join recompute tiers)
-    _GROUP_RECOMPUTE_CAP = 10_000
-
-    @staticmethod
-    def _has_null_group_key(df: DataFrame, group_cols: list) -> bool:
-        """True when any row's group key is NULL - an equality-keyed
-        MERGE cannot address the NULL group, so incremental tiers
-        decline (shared gate)."""
-        from functools import reduce
-
-        return bool(
-            df.filter(
-                reduce(
-                    lambda a, b: a | b,
-                    [F.col(k).isNull() for k in group_cols],
-                )
-            )
-            .limit(1)
-            .count()
-        )
-
-    def _changelog_bound(self, ident: str, df: DataFrame):
-        """Context manager: bind ``ident``'s public view to ``df`` (a
-        changelog frame) for the duration, then ALWAYS restore through
-        :meth:`create_view` so MV view semantics survive (a side that
-        is itself an MV must come back as its STRIPPED/HAVING-filtered
-        public view, not a raw scan exposing ``__mv_*`` state) - one
-        restore discipline for every changelog-swap site (review
-        r11)."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _bound():
-            df.createOrReplaceTempView(self.view_name(ident))
-            try:
-                yield
-            finally:
-                self.create_view(ident)
-
-        return _bound()
-
-    def _merge_recomputed_groups(
-        self,
-        t: LakehouseTable,
-        touched: DataFrame,
-        recomputed: DataFrame,
-        group_cols: list,
-        pin_updates: dict | None,
-    ):
-        """Shared tail of the touched-group recompute tiers
-        (single-table r10, join-star r11): touched groups absent from
-        the recomputation have no surviving rows and LEAVE the view via
-        a delete directive in the same MERGE commit as the updated
-        groups."""
-        from .dml import merge_into
-
-        types = {f.name: f.dataType for f in t.schema.fields}
-        gone = touched.join(
-            recomputed.select(*group_cols), on=group_cols, how="left_anti"
-        )
-        upd = recomputed.withColumn(
-            "__mv_gone", F.lit(False)
-        ).unionByName(
-            gone.select(
-                *group_cols,
-                *[
-                    F.lit(None).cast(types[f.name]).alias(f.name)
-                    for f in t.schema.fields
-                    if f.name not in group_cols
-                ],
-            ).withColumn("__mv_gone", F.lit(True))
-        )
-        return merge_into(
-            t,
-            upd,
-            key=group_cols,
-            when_matched="update",
-            when_not_matched="insert",
-            source_delete_condition="__mv_gone",
-            extra_summary={
-                "cdc_refresh": True,
-                "group_recompute": True,
-                **(
-                    {"mv_pins": pin_updates} if pin_updates else {}
-                ),
-            },
-        )
-
-    def _merged_agg_columns(
-        self, t: LakehouseTable, aggs: list, agg_args: dict | None = None
-    ) -> dict[str, "F.Column"]:
-        """Combined expressions (over a ``d``/``t``-aliased join of the
-        delta partials and the materialization) for every non-key MV
-        column, keyed by name. Distributive ops combine directly; AVG
-        merges its stored ``__mv_sum_``/``__mv_cnt_`` partials and
-        recomputes the visible column as sum/count (NULL when the
-        merged count is 0: an all-NULL group, exactly AVG's answer);
-        sketch ops union/merge their stored sketches and recompute the
-        visible estimate (``agg_args`` carries the percentile literal
-        a KLL column re-answers)."""
-        types = {f.name: f.dataType for f in t.schema.fields}
-        out: dict = {}
-        for name, op in aggs:
-            if op == "avg":
-                s_name, c_name = f"__mv_sum_{name}", f"__mv_cnt_{name}"
-                s = self._combine_partial(
-                    "sum", F.col(f"t.{s_name}"), F.col(f"d.{s_name}")
-                )
-                c = self._combine_partial(
-                    "count", F.col(f"t.{c_name}"), F.col(f"d.{c_name}")
-                )
-                out[s_name] = s.cast(types[s_name]).alias(s_name)
-                out[c_name] = c.cast(types[c_name]).alias(c_name)
-                out[name] = (
-                    F.when(c.isNull() | (c == 0), F.lit(None))
-                    .otherwise(s / c)
-                    .cast(types[name])
-                    .alias(name)
-                )
-            elif op == "approx_count_distinct":
-                # sketch tier (r11): union the delta's HLL into the
-                # stored one (NULL partials defer to the other side -
-                # hll_union itself nulls on a NULL input) and recompute
-                # the visible estimate from the merged sketch; an
-                # empty sketch estimates 0, matching
-                # APPROX_COUNT_DISTINCT over an all-NULL group
-                h_name = f"__mv_hll_{name}"
-                th, dh = F.col(f"t.{h_name}"), F.col(f"d.{h_name}")
-                merged = (
-                    F.when(th.isNull(), dh)
-                    .when(dh.isNull(), th)
-                    .otherwise(F.hll_union(th, dh))
-                )
-                out[h_name] = merged.cast(types[h_name]).alias(h_name)
-                out[name] = (
-                    F.when(merged.isNull(), F.lit(None))
-                    .otherwise(F.hll_sketch_estimate(merged))
-                    .cast(types[name])
-                    .alias(name)
-                )
-            elif op == "approx_percentile":
-                # KLL quantile tier (r11): merge the delta's sketch
-                # into the stored one (kll_sketch_merge nulls on a
-                # NULL side, so NULL partials defer manually) and
-                # recompute the visible quantile from the merged
-                # sketch. An all-NULL group's sketch is a non-NULL
-                # EMPTY buffer whose GET_QUANTILE THROWS, so the
-                # estimate guards on GET_N = 0 -> NULL, exactly
-                # APPROX_PERCENTILE's answer (probe-confirmed r11)
-                k_name = f"__mv_kll_{name}"
-                fam, _ct, _e, ps, is_arr = self._kll_spec(
-                    (agg_args or {}).get(name, ""), types.get(name)
-                )
-                f_lo = fam.lower()
-                tk, dk = F.col(f"t.{k_name}"), F.col(f"d.{k_name}")
-                merged = (
-                    F.when(tk.isNull(), dk)
-                    .when(dk.isNull(), tk)
-                    .otherwise(
-                        F.call_function(
-                            f"kll_sketch_merge_{f_lo}", tk, dk
-                        )
-                    )
-                )
-                out[k_name] = merged.cast(types[k_name]).alias(k_name)
-                n = F.call_function(f"kll_sketch_get_n_{f_lo}", merged)
-                # array form (r12): the ONE merged sketch answers every
-                # requested quantile; the guard still covers the whole
-                # result (all-NULL group -> NULL array, probe-confirmed)
-                quantiles = [
-                    F.call_function(
-                        f"kll_sketch_get_quantile_{f_lo}",
-                        merged,
-                        F.lit(float(p)),
-                    )
-                    for p in ps
-                ]
-                visible = (
-                    F.array(*quantiles) if is_arr else quantiles[0]
-                )
-                out[name] = (
-                    F.when(
-                        merged.isNull() | (n == 0), F.lit(None)
-                    )
-                    .otherwise(visible)
-                    .cast(types[name])
-                    .alias(name)
-                )
-            elif op == "sum" and f"__mv_nn_{name}" in types:
-                # CDC-invertible SUM: the stored non-null count decides
-                # NULL-vs-0 after subtraction (an inverted sum whose
-                # group lost its last non-null value must read NULL)
-                nn_name = f"__mv_nn_{name}"
-                nn = self._combine_partial(
-                    "count", F.col(f"t.{nn_name}"), F.col(f"d.{nn_name}")
-                )
-                s = self._combine_partial(
-                    "sum", F.col(f"t.{name}"), F.col(f"d.{name}")
-                )
-                out[nn_name] = nn.cast(types[nn_name]).alias(nn_name)
-                out[name] = (
-                    F.when(nn.isNull() | (nn == 0), F.lit(None))
-                    .otherwise(s)
-                    .cast(types[name])
-                    .alias(name)
-                )
-            else:
-                combined = self._combine_partial(
-                    op, F.col(f"t.{name}"), F.col(f"d.{name}")
-                )
-                out[name] = combined.cast(types[name]).alias(name)
-        if "__mv_rows" in types:
-            out["__mv_rows"] = (
-                self._combine_partial(
-                    "count",
-                    F.col("t.__mv_rows"),
-                    F.col("d.__mv_rows"),
-                )
-                .cast(types["__mv_rows"])
-                .alias("__mv_rows")
-            )
-        return out
-
-    @staticmethod
-    def _signed_agg_exprs(
-        types: dict,
-        aggs: list,
-        arg_cols: dict,
-        star_counts: set,
-        sign,
-    ) -> list:
-        """Signed (+1 insert / -1 delete) partial-aggregate expressions
-        for CDC maintenance, shared by the single-table and join tiers:
-        COUNT(*) sums the sign, COUNT(x) the sign of non-null x,
-        integral SUM adds sign*x alongside a __mv_nn_ non-null counter
-        (an inverted sum losing its last non-null value must read NULL,
-        not 0), and __mv_rows sums the sign so groups reaching 0 rows
-        leave the view."""
-        exprs = []
-        for name, op in aggs:
-            if op == "count" and name in star_counts:
-                exprs.append(F.sum(sign).cast(types[name]).alias(name))
-            elif op == "count":
-                c = arg_cols[name]
-                exprs.append(
-                    F.sum(sign * c.isNotNull().cast("long"))
-                    .cast(types[name])
-                    .alias(name)
-                )
-            else:  # integral sum (creation-gated)
-                c = arg_cols[name]
-                exprs.append(
-                    F.sum(
-                        F.when(c.isNull(), F.lit(0)).otherwise(sign * c)
-                    )
-                    .cast(types[name])
-                    .alias(name)
-                )
-                exprs.append(
-                    F.sum(sign * c.isNotNull().cast("long"))
-                    .cast(types[f"__mv_nn_{name}"])
-                    .alias(f"__mv_nn_{name}")
-                )
-        exprs.append(
-            F.sum(sign).cast(types["__mv_rows"]).alias("__mv_rows")
-        )
-        return exprs
-
-    def _cdc_group_recompute(
-        self,
-        t: LakehouseTable,
-        props: dict,
-        bt: LakehouseTable,
-        from_v: int,
-        to_v: int,
-        pin_updates: dict | None = None,
-    ):
-        """MIN/MAX (and state-less COUNT/SUM) CDC tier (r10): recompute
-        ONLY the groups the changelog touched, from the pinned base
-        snapshot, and MERGE them - groups with no surviving rows leave
-        via a delete directive in the same commit.
-
-        MIN/MAX are not invertible (a retracted minimum says nothing
-        about the runner-up), but a per-group RECOMPUTE equals the full
-        refresh for touched groups BY CONSTRUCTION, and untouched
-        groups cannot have changed (the changelog is total over base
-        changes). Cost: O(changelog) + one semi-joined aggregation over
-        the touched groups' base rows - at 100 TB a correction hitting
-        K groups re-aggregates K groups' rows, not every group.
-        AVG is covered too (r10): the visible value AND its stored
-        ``__mv_sum_``/``__mv_cnt_`` partials recompute from the base
-        with the SAME expressions creation used - bit-identical to a
-        full refresh by construction, which is exactly what the
-        partial-merge arithmetic (reverted r8 for DECIMAL) could not
-        guarantee. HAVING MVs qualify too (r11): the table stores the
-        UNFILTERED aggregate at the user grain - exactly what the
-        per-group recompute rebuilds - and the predicate lives only in
-        the view projection, so a group dipping below the threshold
-        keeps its stored row and merely disappears from the view.
-        Declines (``NotImplemented``) on: the COUNT-DISTINCT grain
-        (stored grain differs), NULL group keys, an expired changelog,
-        unexpected stored columns, or more touched groups than the
-        recompute threshold (a mass rewrite is full-refresh-shaped
-        anyway)."""
-        group_cols = json.loads(props["mv.group_cols"])
-        aggs = json.loads(props["mv.aggs"])
-        agg_args = json.loads(props.get("mv.agg_args", "{}"))
-        if not group_cols or "mv.view_agg" in props:
-            return NotImplemented
-        if any(
-            op
-            not in (
-                "count",
-                "sum",
-                "min",
-                "max",
-                "avg",
-                "approx_count_distinct",
-                "approx_percentile",
-            )
-            for _n, op in aggs
-        ):
-            return NotImplemented
-        if any(name not in agg_args for name, _op in aggs):
-            return NotImplemented
-        types = {f.name: f.dataType for f in t.schema.fields}
-        hidden = {n for n in types if n.startswith("__mv_")}
-        avg_aliases = {n for n, op in aggs if op == "avg"}
-        hll_aliases = {
-            n for n, op in aggs if op == "approx_count_distinct"
-        }
-        kll_aliases = {
-            n for n, op in aggs if op == "approx_percentile"
-        }
-        expected = set(group_cols) | {n for n, _ in aggs} | hidden
-        if set(types) != expected or not all(
-            h == "__mv_rows"
-            or h.startswith("__mv_nn_")
-            or (
-                h.startswith("__mv_sum_")
-                and h[len("__mv_sum_"):] in avg_aliases
-            )
-            or (
-                h.startswith("__mv_cnt_")
-                and h[len("__mv_cnt_"):] in avg_aliases
-            )
-            or (
-                h.startswith("__mv_hll_")
-                and h[len("__mv_hll_"):] in hll_aliases
-            )
-            or (
-                h.startswith("__mv_kll_")
-                and h[len("__mv_kll_"):] in kll_aliases
-            )
-            for h in hidden
-        ):
-            return NotImplemented  # a tier this recompute doesn't model
-        try:
-            ch = bt.scan_changelog(from_v, to_v)
-        except ValueError:
-            return NotImplemented  # a snapshot in range was expired
-        where = props.get("mv.where")
-        key_exprs = json.loads(props.get("mv.key_exprs", "{}"))
-
-        def prep(df):
-            if where:
-                df = df.filter(F.expr(where))
-            for a, e in key_exprs.items():
-                df = df.withColumn(a, F.expr(e))
-            return df
-
-        touched = (
-            prep(ch)
-            .select(*group_cols)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if self._has_null_group_key(touched, group_cols):
-            return NotImplemented  # MERGE cannot address a NULL group
-        n_touched = touched.count()
-        if n_touched == 0:
-            return t.snapshot()  # the changelog nets outside the view
-        if n_touched > self._GROUP_RECOMPUTE_CAP:
-            return NotImplemented  # full-refresh-shaped anyway
-        base = prep(bt.scan(snapshot=bt.snapshot(to_v)))
-        agg_exprs = []
-        for name, op in aggs:
-            if op == "approx_count_distinct":
-                # creation's exact spelling (shared _HLL_*_FMT): the
-                # visible value is ALWAYS the DataSketches estimate,
-                # never Spark's HLL++ approx - one estimator on every
-                # path (r11)
-                agg_exprs.append(
-                    F.expr(self._HLL_EST_FMT.format(arg=agg_args[name]))
-                    .cast(types[name])
-                    .alias(name)
-                )
-                h = f"__mv_hll_{name}"
-                agg_exprs.append(
-                    F.expr(self._HLL_AGG_FMT.format(arg=agg_args[name]))
-                    .cast(types[h])
-                    .alias(h)
-                )
-                continue
-            if op == "approx_percentile":
-                # creation's exact spelling (shared _KLL_*_FMT): the
-                # visible quantile is ALWAYS the KLL estimate, with
-                # the empty-sketch GET_N guard (one estimator, r11)
-                fam, ct, expr, ps, is_arr = self._kll_spec(
-                    agg_args[name], types[name]
-                )
-                sk = self._KLL_AGG_FMT.format(f=fam, arg=expr, t=ct)
-                est = self._kll_est_sql(fam, sk, ps, is_arr)
-                agg_exprs.append(
-                    F.expr(est).cast(types[name]).alias(name)
-                )
-                k = f"__mv_kll_{name}"
-                agg_exprs.append(
-                    F.expr(sk).cast(types[k]).alias(k)
-                )
-                continue
-            agg_exprs.append(
-                F.expr(f"{op}({agg_args[name]})")
-                .cast(types[name])
-                .alias(name)
-            )
-        if "__mv_rows" in types:
-            agg_exprs.append(
-                F.expr("COUNT(*)")
-                .cast(types["__mv_rows"])
-                .alias("__mv_rows")
-            )
-        for name, op in aggs:
-            h = f"__mv_nn_{name}"
-            if op == "sum" and h in types:
-                agg_exprs.append(
-                    F.expr(f"COUNT({agg_args[name]})")
-                    .cast(types[h])
-                    .alias(h)
-                )
-            if op == "avg":
-                # the stored partials, recomputed with creation's exact
-                # expressions (incremental append merges keep combining
-                # them afterwards)
-                arg = agg_args[name]
-                agg_exprs.append(
-                    F.expr(f"SUM(CAST(({arg}) AS DOUBLE))")
-                    .cast(types[f"__mv_sum_{name}"])
-                    .alias(f"__mv_sum_{name}")
-                )
-                agg_exprs.append(
-                    F.expr(f"COUNT({arg})")
-                    .cast(types[f"__mv_cnt_{name}"])
-                    .alias(f"__mv_cnt_{name}")
-                )
-        recomputed = (
-            base.join(F.broadcast(touched), on=group_cols, how="left_semi")
-            .groupBy(*group_cols)
-            .agg(*agg_exprs)
-        )
-        return self._merge_recomputed_groups(
-            t, touched, recomputed, group_cols, pin_updates
-        )
-
-    def _cdc_agg_refresh(
-        self,
-        t: LakehouseTable,
-        props: dict,
-        bt: LakehouseTable,
-        from_v: int,
-        to_v: int,
-        pin_updates: dict | None = None,
-    ):
-        """Incremental MV maintenance UNDER BASE DML: aggregate the
-        base's changelog rows with a sign (+1 insert / -1 delete) per
-        group, then merge the signed partials into the materialization.
-        COUNT and integral SUM are exactly invertible; the MV's hidden
-        state decides the two cases plain subtraction cannot:
-        ``__mv_rows`` == 0 -> the group's last row was deleted and it
-        must LEAVE the view (a delete directive in the same MERGE
-        commit), ``__mv_nn_<alias>`` == 0 -> the sum lost its last
-        non-null value and must read NULL, not 0.
-
-        Returns the commit snapshot, the current snapshot when the
-        changelog nets to nothing, or ``NotImplemented`` whenever
-        exactness cannot be proven (MIN/MAX/AVG aggs, a pre-CDC MV
-        without the hidden state, expired changelog range, NULL group
-        keys, HAVING was fine) - the caller full-refreshes, which is
-        always correct."""
-        group_cols = json.loads(props["mv.group_cols"])
-        aggs = json.loads(props["mv.aggs"])
-        agg_args = json.loads(props.get("mv.agg_args", "{}"))
-        if not group_cols:
-            return NotImplemented  # global tier: full refresh is O(1)-ish
-        if any(op not in ("count", "sum") for _name, op in aggs):
-            return NotImplemented  # MIN/MAX/AVG are not invertible
-        names = {f.name for f in t.schema.fields}
-        if "__mv_rows" not in names or any(
-            op == "sum" and f"__mv_nn_{name}" not in names
-            for name, op in aggs
-        ) or any(name not in agg_args for name, _op in aggs):
-            return NotImplemented  # pre-CDC MV without the state
-        try:
-            ch = bt.scan_changelog(from_v, to_v)
-        except ValueError:
-            return NotImplemented  # a snapshot in range was expired
-        where = props.get("mv.where")
-        if where:
-            ch = ch.filter(F.expr(where))
-        # expression keys / the distinct-value grain column do not
-        # exist on changelog rows: re-derive them (aliases are
-        # creation-gated against shadowing base columns)
-        for a, e in json.loads(props.get("mv.key_exprs", "{}")).items():
-            ch = ch.withColumn(a, F.expr(e))
-        types = {f.name: f.dataType for f in t.schema.fields}
-        sign = F.when(
-            F.col("_change_type") == "delete", F.lit(-1)
-        ).otherwise(F.lit(1))
-        exprs = self._signed_agg_exprs(
-            types,
-            aggs,
-            {
-                name: F.expr(agg_args[name])
-                for name, op in aggs
-                if agg_args[name].strip() != "*"
-            },
-            {
-                name
-                for name, op in aggs
-                if op == "count" and agg_args[name].strip() == "*"
-            },
-            sign,
-        )
-        inc, n_rows, has_null = self._checkpoint_group_probe(
-            ch.groupBy(*group_cols).agg(*exprs), group_cols
-        )
-        return self._merge_grouped_delta(
-            t,
-            group_cols,
-            aggs,
-            inc,
-            probe=(n_rows, has_null),
-            # a group whose last row was deleted leaves the view in
-            # the SAME commit its siblings update in
-            source_delete_condition="__mv_rows = 0",
-            extra_summary={
-                "cdc_refresh": True,
-                **({"mv_pins": pin_updates} if pin_updates else {}),
-            },
-        )
-
-    def _checkpoint_group_probe(
-        self, df: DataFrame, group_cols: list
-    ) -> tuple[DataFrame, int, bool]:
-        """Eagerly checkpoint a refresh delta with the empty-delta /
-        NULL-group-key probe riding the materialization job as observed
-        metrics (r15, guide §2.4): the r14 fold already collapsed the
-        two gate jobs into one aggregate; this removes that remaining
-        job by computing both gates in the SAME job that materializes
-        the delta. Returns (checkpointed frame, row count, has NULL
-        group key). The metrics are computed over exactly the rows
-        being materialized, and the checkpointed frame's plan is a
-        fresh LogicalRDD, so no downstream action re-fires the
-        collector."""
-        from functools import reduce
-
-        from pyspark.sql import Observation
-
-        null_key = reduce(
-            lambda a, b: a | b, [F.col(k).isNull() for k in group_cols]
-        )
-        obs = Observation()
-        df = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("__n"),
-            F.max(F.when(null_key, 1).otherwise(0)).alias("__null_key"),
-        )
-        cp = df.localCheckpoint(eager=True)
-        m = obs.get
-        return cp, int(m["__n"] or 0), bool(m["__null_key"] or 0)
-
-    def _merge_grouped_delta(
-        self,
-        t: LakehouseTable,
-        group_cols: list,
-        aggs: list,
-        inc: DataFrame,
-        agg_args: dict | None = None,
-        probe: tuple[int, bool] | None = None,
-        **merge_kwargs,
-    ):
-        """Shared merge tail for keyed agg-MV refreshes (append partials
-        AND signed CDC partials): join the delta with the current
-        materialization on the group keys, combine every non-key column
-        via :meth:`_merged_agg_columns`, and MERGE touched groups in one
-        commit. Returns the commit snapshot, the current snapshot for an
-        empty delta, or ``NotImplemented`` on a NULL group key (an
-        equality-keyed MERGE cannot address the NULL group; the caller
-        full-refreshes - rare and always correct).
-
-        ``probe`` is the (row count, has-NULL-group-key) pair a caller
-        that checkpointed through :meth:`_checkpoint_group_probe`
-        already holds; callers without it pay the one probe aggregate
-        (r14's fold of the two separate gate jobs)."""
-        from .dml import merge_into
-
-        if probe is None:
-            from functools import reduce
-
-            null_key = reduce(
-                lambda a, b: a | b,
-                [F.col(k).isNull() for k in group_cols],
-            )
-            row = inc.agg(
-                F.count(F.lit(1)).alias("__n"),
-                F.max(F.when(null_key, 1).otherwise(0)).alias(
-                    "__null_key"
-                ),
-            ).collect()[0]
-            probe = (int(row["__n"] or 0), bool(row["__null_key"] or 0))
-        if not probe[0]:
-            return t.snapshot()
-        if probe[1]:
-            return NotImplemented
-        cur = t.to_df().alias("t")
-        joined = inc.alias("d").join(cur, on=group_cols, how="left")
-        by_name = self._merged_agg_columns(t, aggs, agg_args)
-        # select in the MV's schema order (keys resolve via the join's
-        # coalesced output; a key-first SELECT is not guaranteed)
-        merged_cols = [
-            F.col(f.name) if f.name in group_cols else by_name[f.name]
-            for f in t.schema.fields
-        ]
-        merged = joined.select(*merged_cols)
-        return merge_into(
-            t,
-            merged,
-            key=group_cols,
-            when_matched="update",
-            when_not_matched="insert",
-            **merge_kwargs,
-        )
-
-    def _recover_mv_pins(self, t: LakehouseTable, props: dict) -> dict:
-        """Complete a crashed refresh's pin write (r11 review finding):
-        every incremental MV commit carries its intended post-commit
-        pins in the snapshot summary (``mv_pins``); the property write
-        that mirrors them is a SEPARATE step, so a crash between the
-        two would re-apply the committed delta on the next refresh -
-        double-counted aggregates with no error. On refresh entry,
-        fast-forward any pin the CURRENT snapshot's intent holds ahead
-        of the recorded properties. Monotone by version comparison:
-        a pin a later content-preserving re-pin already advanced is
-        never regressed, and intent from a snapshot that is no longer
-        current (superseded by a full refresh, which records no
-        ``mv_pins``) is never consulted."""
-        intent = (t.snapshot().summary or {}).get("mv_pins")
-        if not intent:
-            return props
-        upd: dict[str, str] = {}
-        unset: list[str] = []
-        iv = intent.get("mv.base_version")
-        if iv is not None and int(iv) > int(
-            props.get("mv.base_version", -1)
-        ):
-            upd["mv.base_version"] = str(iv)
-            if "mv.base_snapshot" in intent:
-                upd["mv.base_snapshot"] = intent["mv.base_snapshot"]
-            elif "mv.base_snapshot" in props:
-                # the intent carries no uuid for the new version (its
-                # snapshot was expired at commit time): an advanced
-                # version must not keep the OLD uuid alongside it
-                # (review r11) - version-only pins skip lineage checks
-                unset.append("mv.base_snapshot")
-        raw_vs = intent.get("mv.join_dim_versions")
-        if raw_vs:
-            int_vs = json.loads(raw_vs) if isinstance(raw_vs, str) else raw_vs
-            raw_sids = intent.get("mv.join_dim_snapshots")
-            int_sids = (
-                json.loads(raw_sids)
-                if isinstance(raw_sids, str)
-                else (raw_sids or {})
-            )
-            cur_vs = json.loads(props.get("mv.join_dim_versions", "{}"))
-            cur_sids = json.loads(
-                props.get("mv.join_dim_snapshots", "{}")
-            )
-            changed = False
-            for d, v in int_vs.items():
-                if int(v) > int(cur_vs.get(d, -1)):
-                    cur_vs[d] = str(v)
-                    if d in int_sids:
-                        cur_sids[d] = int_sids[d]
-                    else:
-                        # no uuid in the intent: drop the stale one
-                        # rather than pair it with the new version
-                        cur_sids.pop(d, None)
-                    changed = True
-            if changed:
-                upd["mv.join_dim_versions"] = json.dumps(cur_vs)
-                if cur_sids:
-                    upd["mv.join_dim_snapshots"] = json.dumps(cur_sids)
-        if upd:
-            _log.warning(
-                "completing crashed MV pin write for %s: %s",
-                t.location,
-                sorted(upd),
-            )
-            t.replace_properties(remove=unset, add=upd)
-            props = t.properties()
-        return props
-
-    @staticmethod
-    def _join_dim_pins(props: dict) -> tuple[list[str], dict, dict]:
-        """The MV's dim pin state: ([dim idents], {ident: version},
-        {ident: snapshot-uuid}) from mv.join_dims/join_dim_versions/
-        join_dim_snapshots."""
-        dims = json.loads(props["mv.join_dims"])
-        vs = {
-            k: int(v)
-            for k, v in json.loads(props["mv.join_dim_versions"]).items()
-        }
-        sids = json.loads(props.get("mv.join_dim_snapshots", "{}"))
-        return dims, vs, sids
-
-    def _dim_pin_props(
-        self, dims: list[str], vs: dict, sids: dict
-    ) -> dict:
-        """Serialize dim pins back to properties."""
-        return {
-            "mv.join_dims": json.dumps(dims),
-            "mv.join_dim_versions": json.dumps(
-                {k: str(v) for k, v in vs.items()}
-            ),
-            "mv.join_dim_snapshots": json.dumps(sids),
-        }
-
-    def _join_store_query(
-        self, sql_text: str, aggs: list, agg_args: dict
-    ) -> str | None:
-        """The join-agg MV's materialization query with hidden state,
-        or None when the plain query needs none. Two tiers, mirroring
-        the single-table discipline:
-
-        - CDC-invertible set (COUNT/integral-SUM only): materialize
-          ``COUNT(*) AS __mv_rows`` plus ``COUNT(arg) AS
-          __mv_nn_<alias>`` per SUM, so base DML refreshes from the
-          signed changelog. Any MIN/MAX (not invertible) or a
-          non-integral SUM (float subtraction is inexact) declines.
-        - APPROX_COUNT_DISTINCT present (sketch tier, r11): store a
-          mergeable DataSketches HLL per group (``__mv_hll_<alias>``)
-          and rewrite the visible column to the SKETCH estimate - one
-          estimator on every path (creation, append union, full
-          refresh), never Spark's HLL++, so the value cannot jump
-          between algorithms. Fact appends union the delta sketch into
-          the stored one (O(delta + touched groups)); sketches are not
-          invertible, so no CDC state is stored and any DML / moved
-          dim takes the touched-group recompute tier (re-running THIS
-          query restricted to affected groups - still the sketch
-          estimator), falling to full refresh when unprovable."""
-        from pyspark.sql.types import IntegerType, LongType
-
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        if m is None:
-            return None
-        try:
-            vis = {
-                f.name: f.dataType
-                for f in self.spark.sql(sql_text).schema.fields
-            }
-        except Exception:
-            return None
-        has_sketch = any(
-            op in ("approx_count_distinct", "approx_percentile")
-            for _, op in aggs
-        )
-        cdc_ready = not has_sketch and all(
-            op == "count"
-            or (
-                op == "sum"
-                and isinstance(
-                    vis.get(alias), (IntegerType, LongType)
-                )
-            )
-            for alias, op in aggs
-        )
-        if not (cdc_ready or has_sketch):
-            return None
-        if has_sketch:
-            items = self._approx_rewrite_items(
-                [p.strip() for p in _split_top_level(m.group("items"))],
-                aggs,
-                agg_args,
-                vis,
-            )
-            if items is None:
-                return None  # ineligible sketch item (KLL spec)
-        else:
-            items = [m.group("items").strip(), "COUNT(*) AS __mv_rows"]
-            for alias, op in aggs:
-                if op == "sum":
-                    items.append(
-                        f"COUNT({agg_args[alias]}) AS __mv_nn_{alias}"
-                    )
-        q = (
-            f"SELECT {', '.join(items)} FROM {m.group('f')} "
-            f"{m.group('joins')}"
-        )
-        if m.group("where"):
-            q += f" WHERE {m.group('where')}"
-        q += f" GROUP BY {m.group('keys')}"
-        if has_sketch and not self._analyzes(q):
-            # HLL_SKETCH_AGG rejects this argument (a type outside
-            # INT/BIGINT/STRING/BINARY, or the rsd form
-            # APPROX_COUNT_DISTINCT(x, 0.05) whose parenthesized arg
-            # becomes a struct): no mergeable sketch state is
-            # possible (review r11: the unvalidated rewrite crashed
-            # MV creation). The caller declines join_agg mode.
-            return None
-        return q
-
-    def _join_cdc_refresh(
-        self,
-        t: LakehouseTable,
-        props: dict,
-        sql_text: str,
-        ch_view: str,
-        ch_df: DataFrame,
-        ch_ident: str,
-        binds: dict[str, int] | None = None,
-        pin_updates: dict | None = None,
-    ):
-        """Incremental join-MV maintenance under DML on ONE side: bind
-        ``ch_view`` (the fact's view, or a single moved dim's view) to
-        its signed changelog, run the star join's PRE-aggregation
-        projection over it, aggregate with +1/-1 signs, and MERGE the
-        partials into the materialization - O(changed rows x their
-        join matches), never the whole star.
-
-        Exactness argument: an inner equi-join is LINEAR in each input
-        (row multiplicities included), and COUNT/integral-SUM are
-        linear in the joined rows, so agg(fact x (dim_new - dim_old))
-        - the signed changelog joined to the other pinned sides - IS
-        the aggregate delta. The hidden ``__mv_rows``/``__mv_nn_``
-        state (materialized at creation exactly when every aggregate
-        is invertible) closes groups whose last row left and turns
-        zero-non-null sums into NULL. Returns the commit snapshot, or
-        ``NotImplemented`` when exactness cannot be proven (pre-CDC MV
-        without the state, NULL group keys in the delta) - the caller
-        full-refreshes, which is always correct.
-
-        ``binds`` pins OTHER sides' views to explicit versions for the
-        duration of the pre-aggregation (the multi-moved-dim telescoping
-        composition needs earlier terms' sides at their NEW snapshots
-        and later terms' at the PINNED ones); every bound view is
-        restored to its public head afterwards."""
-        group_cols = json.loads(props["mv.group_cols"])
-        aggs = json.loads(props["mv.aggs"])
-        agg_args = json.loads(props.get("mv.agg_args", "{}"))
-        names = {f.name for f in t.schema.fields}
-        if (
-            "__mv_rows" not in names
-            or any(
-                op == "sum" and f"__mv_nn_{name}" not in names
-                for name, op in aggs
-            )
-            or any(name not in agg_args for name, _op in aggs)
-        ):
-            return NotImplemented  # pre-CDC join MV without the state
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        if m is None:
-            return NotImplemented
-        parts = [p.strip() for p in _split_top_level(m.group("items"))]
-        sel: list[str] = []
-        for part in parts:
-            im = self._MV_AGG_ITEM.match(part)
-            if im is None:
-                sel.append(part)  # a group key, spelled as stored
-            else:
-                arg = im.group("arg").strip()
-                if arg != "*":
-                    sel.append(
-                        f"({arg}) AS __mv_arg_{im.group('alias')}"
-                    )
-        sel.append(f"{ch_view}._change_type AS __mv_ct")
-        pre = (
-            f"SELECT {', '.join(sel)} FROM {m.group('f')} "
-            f"{m.group('joins')}"
-        )
-        if m.group("where"):
-            pre += f" WHERE {m.group('where')}"
-        from pyspark.errors import AnalysisException
-
-        bound: list[str] = []
-        with self._changelog_bound(ch_ident, ch_df):
-            try:
-                for b_ident, b_version in (binds or {}).items():
-                    # create_view applies the MV view semantics
-                    # (stripped __mv_* state, HAVING filter) to the
-                    # pinned snapshot - a raw time-travel scan would
-                    # expose hidden columns
-                    self.create_view(
-                        b_ident,
-                        view_name=self.view_name(b_ident),
-                        version=b_version,
-                    )
-                    bound.append(b_ident)
-                try:
-                    rows = self.spark.sql(pre)
-                except AnalysisException as e:
-                    # the rebuilt pre-aggregation failed ANALYSIS (e.g.
-                    # the changelog's _change_type metadata column
-                    # collides with an unqualified reference elsewhere
-                    # in the query): like every other unprovable case
-                    # in this tier, decline - the caller
-                    # full-refreshes, which is always correct. Narrow
-                    # to AnalysisException and log: a bug in the
-                    # builder or a transient engine error must surface,
-                    # not silently degrade every refresh to O(star)
-                    _log.warning(
-                        "join-CDC pre-aggregation failed analysis "
-                        "(changelog side %s; declining to full "
-                        "refresh): %s",
-                        ch_ident,
-                        e,
-                    )
-                    return NotImplemented
-                types = {f.name: f.dataType for f in t.schema.fields}
-                sign = F.when(
-                    F.col("__mv_ct") == "delete", F.lit(-1)
-                ).otherwise(F.lit(1))
-                exprs = self._signed_agg_exprs(
-                    types,
-                    aggs,
-                    {
-                        name: F.col(f"__mv_arg_{name}")
-                        for name, op in aggs
-                        if agg_args[name].strip() != "*"
-                    },
-                    {
-                        name
-                        for name, op in aggs
-                        if op == "count" and agg_args[name].strip() == "*"
-                    },
-                    sign,
-                )
-                inc, n_rows, has_null = self._checkpoint_group_probe(
-                    rows.groupBy(*group_cols).agg(*exprs), group_cols
-                )
-            finally:
-                # restore the bound views through create_view so MV
-                # semantics survive (a dim that is itself an MV must
-                # come back as its STRIPPED/HAVING-filtered public
-                # view); the changelog side restores via the context
-                # manager - still O(swapped), never the O(catalog)
-                # register_views() sweep
-                for b_ident in bound:
-                    self.create_view(b_ident)
-        return self._merge_grouped_delta(
-            t,
-            group_cols,
-            aggs,
-            inc,
-            agg_args=agg_args,
-            probe=(n_rows, has_null),
-            source_delete_condition="__mv_rows = 0",
-            # the commit carries its intended post-commit pins so a
-            # crash between commit and property write is recoverable
-            # (_recover_mv_pins) instead of a double-apply
-            extra_summary={
-                "cdc_refresh": True,
-                **({"mv_pins": pin_updates} if pin_updates else {}),
-            },
-        )
-
-    def _join_group_recompute(
-        self,
-        t: LakehouseTable,
-        props: dict,
-        sql_text: str,
-        ch_df: DataFrame,
-        ch_ident: str,
-        pin_updates: dict | None = None,
-    ):
-        """Touched-group recompute for join-agg MVs under DML on ONE
-        side (fact, or a single moved dim) when signed CDC cannot
-        model the aggregates - MIN/MAX (not invertible), sketches
-        (not invertible), or a pre-CDC MV without hidden state. Mirrors
-        the single-table tier (r10): derive the TOUCHED groups by
-        pushing the moved side's changelog through the star (both the
-        delete and insert images join the other pinned sides, so a row
-        moving between groups touches BOTH), then re-run the STORE
-        query restricted to those groups - an IN-subquery the optimizer
-        plants as a semi-join inside the star - and MERGE. Groups with
-        no surviving rows leave via a delete directive in the same
-        commit. Correctness is by construction: a per-group recompute
-        over the post-DML snapshots equals the full refresh for
-        touched groups, and untouched groups cannot have changed (the
-        changelog is total over the moved side, the join is the only
-        coupling, and every other side is pinned). Write amplification
-        is O(touched groups), never the whole view - at 100 TB a
-        one-row fact correction merges a handful of groups instead of
-        overwriting the star MV. Declines (``NotImplemented``) on NULL
-        group keys, an unmatched shape, analysis failures, or more
-        touched groups than the recompute threshold."""
-        import uuid
-
-        from pyspark.errors import AnalysisException
-
-        group_cols = json.loads(props["mv.group_cols"])
-        store_sql = props.get("mv.store_query", sql_text)
-        if not group_cols:
-            return NotImplemented
-        m = self._MV_JOIN_AGG_SHAPE.match(sql_text)
-        sm = self._MV_JOIN_AGG_SHAPE.match(store_sql)
-        if m is None or sm is None:
-            return NotImplemented
-        key_src: dict[str, str] = {}
-        for part in _split_top_level(m.group("items")):
-            part = part.strip()
-            if self._MV_AGG_ITEM.match(part):
-                continue
-            km = self._MV_JOIN_KEY.match(part)
-            if km is None:
-                return NotImplemented
-            name = km.group("alias") or km.group("col")
-            key_src[name] = (
-                f"{km.group('qual')}.{km.group('col')}"
-                if km.group("qual")
-                else km.group("col")
-            )
-        if set(key_src) != set(group_cols):
-            return NotImplemented
-        sel = ", ".join(f"{key_src[g]} AS {g}" for g in group_cols)
-        probe = (
-            f"SELECT {sel} FROM {m.group('f')} {m.group('joins')}"
-        )
-        if m.group("where"):
-            probe += f" WHERE {m.group('where')}"
-        with self._changelog_bound(ch_ident, ch_df):
-            try:
-                touched = (
-                    self.spark.sql(probe)
-                    .distinct()
-                    .localCheckpoint(eager=True)
-                )
-            except AnalysisException as e:
-                _log.warning(
-                    "join group-recompute probe failed analysis "
-                    "(changelog side %s; declining to full refresh): %s",
-                    ch_ident,
-                    e,
-                )
-                return NotImplemented
-        if self._has_null_group_key(touched, group_cols):
-            return NotImplemented  # MERGE cannot address a NULL group
-        n_touched = touched.count()
-        if n_touched == 0:
-            return t.snapshot()  # the changelog nets outside the view
-        if n_touched > self._GROUP_RECOMPUTE_CAP:
-            return NotImplemented  # full-refresh-shaped anyway
-        tv = f"__mv_touched_{uuid.uuid4().hex[:12]}"
-        tup = ", ".join(key_src[g] for g in group_cols)
-        filt = (
-            f"({tup}) IN (SELECT {', '.join(group_cols)} FROM {tv})"
-        )
-        re_sql = (
-            f"SELECT {sm.group('items')} FROM {sm.group('f')} "
-            f"{sm.group('joins')} WHERE "
-            + (f"({sm.group('where')}) AND " if sm.group("where") else "")
-            + filt
-            + f" GROUP BY {sm.group('keys')}"
-        )
-        try:
-            touched.createOrReplaceTempView(tv)
-            try:
-                recomputed = self.spark.sql(re_sql).localCheckpoint(
-                    eager=True
-                )
-            except AnalysisException as e:
-                _log.warning(
-                    "join group-recompute failed analysis "
-                    "(declining to full refresh): %s",
-                    e,
-                )
-                return NotImplemented
-        finally:
-            self.spark.catalog.dropTempView(tv)
-        if set(recomputed.columns) != {
-            f.name for f in t.schema.fields
-        }:
-            return NotImplemented  # store query drifted from the table
-        return self._merge_recomputed_groups(
-            t, touched, recomputed, group_cols, pin_updates
-        )
-
-    # default per-term fixed overhead, in row-equivalents, for the MV
-    # refresh cost chooser: each incremental term costs a changelog
-    # extraction + a MERGE commit regardless of how few rows moved
-    # (BENCH r13 measured the CDC refresh at ~2.6x the full star
-    # materialize at sf0.1 on a tiny delta - pure fixed floor). 500k
-    # row-equivalents ~ the star size below which full refresh
-    # empirically wins on this floor; override per table with
-    # mv.refresh.cost.term-overhead-rows.
-    _MV_TERM_OVERHEAD_ROWS = 500_000
-
-    def _join_refresh_cost(
-        self,
-        ft: LakehouseTable,
-        base_v: int,
-        fact_v: int,
-        fact_lineage: bool,
-        dims: list[str],
-        moved: list[tuple],
-        props: dict,
-    ) -> dict:
-        """Manifest-only cost model for a join-agg MV refresh (r14,
-        VERDICT r13 #2): price the incremental path (per moved side,
-        ``changelog_estimate`` rows plus their estimated fact matches,
-        plus a fixed per-term overhead) against the full refresh (the
-        star's current total rows) WITHOUT reading any data or running
-        any Spark job. The asymptotics already favor incremental at
-        100 TB (O(delta x matches) vs O(star)); this chooser exists for
-        the opposite regime - a small star under a busy changelog,
-        where the per-term fixed floor makes full refresh the cheaper
-        plan. Returns ``choice`` of 'noop' | 'incremental' | 'full'
-        with the inputs that decided it."""
-        fact_rows = ft.snapshot().total_rows
-        full_rows = fact_rows + sum(
-            self.load_table(d).snapshot().total_rows for d in dims
-        )
-        raw = (
-            props.get("mv.refresh.cost.term-overhead-rows") or ""
-        ).strip()
-        overhead = self._MV_TERM_OVERHEAD_ROWS
-        if raw:
-            try:
-                overhead = int(raw)
-            except ValueError:
-                raise ValueError(
-                    "mv.refresh.cost.term-overhead-rows "
-                    f"{raw!r} is not an integer"
-                ) from None
-            if overhead < 0:
-                raise ValueError(
-                    "mv.refresh.cost.term-overhead-rows must be >= 0, "
-                    f"got {raw!r}"
-                )
-        out = {
-            "full_rows": int(full_rows),
-            "term_overhead_rows": overhead,
-            "terms": 0,
-            "changelog_rows": 0,
-            "incremental_rows": None,
-            "reason": None,
-        }
-        if not fact_lineage or any(not mv[3] for mv in moved):
-            # a dropped-and-recreated side cannot refresh incrementally
-            # no matter the sizes - same verdict the refresh arms reach
-            out["choice"] = "full"
-            out["reason"] = "lineage-broken"
-            return out
-        terms = 0
-        ch_rows = 0.0
-        for ident, pv, dv, _lineage in moved:
-            dt = self.load_table(ident)
-            est = dt.changelog_estimate(pv, dv)
-            if not est["available"]:
-                out["choice"] = "full"
-                out["reason"] = "changelog-expired"
-                return out
-            if est["rows"] == 0:
-                # content-preserving commits only (empty appends,
-                # compactions): the refresh re-pins or merges an empty
-                # delta - charging a full per-term floor here would
-                # force a pointless full rewrite (review r14)
-                continue
-            dim_rows = dt.snapshot().total_rows
-            # each changed dim row joins ~fact_rows/dim_keys fact rows
-            # (uniform-key estimate - the same assumption AQE starts
-            # from before runtime stats)
-            matches = est["rows"] * (fact_rows / max(dim_rows, 1))
-            ch_rows += est["rows"] + matches
-            terms += 1
-        if fact_v > base_v:
-            est = ft.changelog_estimate(base_v, fact_v)
-            if not est["available"]:
-                out["choice"] = "full"
-                out["reason"] = "changelog-expired"
-                return out
-            if est["rows"] > 0:  # empty fact advance: near-no-op merge
-                ch_rows += est["rows"]
-                terms += 1
-        inc_total = ch_rows + terms * overhead
-        out["terms"] = terms
-        out["changelog_rows"] = int(ch_rows)
-        out["incremental_rows"] = int(inc_total)
-        if terms == 0:
-            out["choice"] = "noop"
-        elif inc_total < full_rows:
-            out["choice"] = "incremental"
-        else:
-            out["choice"] = "full"
-            out["reason"] = "star-smaller-than-delta-cost"
-        return out
-
-    def mv_refresh_estimate(self, identifier: str) -> dict:
-        """Public face of the refresh cost chooser: what WOULD
-        ``refresh_materialized_view`` cost, decided from manifest stats
-        alone (zero data read, zero Spark jobs) - the number an
-        operator checks before arming ``mv.refresh.cost-based=true``.
-        Join-agg MVs only (the single-table tiers have no per-term
-        changelog floor worth modeling)."""
-        t = self.load_table(identifier)
-        props = t.properties()
-        if props.get("mv.refresh_mode") != "join_agg":
-            raise ValueError(
-                f"{identifier} is not a join-aggregate materialized "
-                "view (mv.refresh_mode != join_agg)"
-            )
-        fact_ident = props["mv.base_table"]
-        dims, dim_vs, dim_sids = self._join_dim_pins(props)
-        ft = self.load_table(fact_ident)
-        fact_v = ft.current_version()
-        base_v = int(props["mv.base_version"])
-        fact_sid = props.get("mv.base_snapshot")
-        fact_lineage = fact_sid is None or (
-            self._snap_id(ft, base_v) == fact_sid
-        )
-        moved = []
-        for dim_ident in dims:
-            dt = self.load_table(dim_ident)
-            dim_v = dt.current_version()
-            pinned_v = dim_vs[dim_ident]
-            sid = dim_sids.get(dim_ident)
-            lineage = sid is None or (
-                self._snap_id(dt, pinned_v) == sid
-            )
-            if not (lineage and dim_v == pinned_v):
-                moved.append((dim_ident, pinned_v, dim_v, lineage))
-        return self._join_refresh_cost(
-            ft, base_v, fact_v, fact_lineage, dims, moved, props
-        )
-
-    def _refresh_join_agg(
-        self, t: LakehouseTable, props: dict, sql_text: str
-    ):
-        """Refresh a fact-JOIN-dim(s) aggregate MV. Incremental when
-        EVERY dim is exactly at its pinned snapshot and the fact
-        advanced append-only: the stored query runs with the fact view
-        bound to the append-diff (dim sides small enough to broadcast
-        let AQE pick broadcast joins on its own) and the partials MERGE
-        on the group keys via the single-table machinery. Under DML the
-        CDC tier (r9) takes over when exactness is provable: fact DML
-        refreshes from the fact's SIGNED changelog, a SINGLE moved dim
-        from its signed changelog joined to the pinned fact
-        (:meth:`_join_cdc_refresh`), ANY NUMBER of moved dims (r10
-        capped at 3, generalized r13) compose the single-dim terms
-        telescopically (each term binds earlier dims to their new
-        snapshots, later dims to the pinned ones), and the FACT moving
-        together with moved dims (r11) appends one fact-changelog term
-        LAST (dim terms bind the fact at its PINNED version, the fact
-        term joins every dim at its NEW view). Everything else -
-        non-invertible aggregates (no stored __mv state), expired
-        changelog ranges, a width past ``mv.max-moved-dims`` when set -
-        full-refreshes and re-pins all sides.
-
-        ``mv.refresh.cost-based=true`` (r14) additionally consults
-        :meth:`_join_refresh_cost` - a manifest-stat estimate of the
-        changelog terms' rows + per-term fixed floors vs the star's
-        size - and takes the full-refresh tail directly when the star
-        is the cheaper read (the small-star/large-delta regime where
-        incremental's fixed overhead loses; at 100 TB star scale the
-        estimate always picks incremental)."""
-        from .dml import overwrite_partitions, truncate_table
-
-        store_sql = props.get("mv.store_query", sql_text)
-
-        # validate the width-cap policy knob UP FRONT, on every refresh
-        # (review r13): parsing it only inside the multi-dim arm would
-        # let a typo'd value lie dormant through months of fact-only
-        # refreshes and then abort the first wide window at runtime.
-        # unset/empty = unbounded; anything else must be a positive int
-        # (0 silently meaning "unbounded" would invert a zero cap).
-        raw_cap = (props.get("mv.max-moved-dims") or "").strip()
-        max_moved = 0  # unbounded
-        if raw_cap:
-            try:
-                max_moved = int(raw_cap)
-            except ValueError:
-                raise ValueError(
-                    f"mv.max-moved-dims {raw_cap!r} is not an integer"
-                ) from None
-            if max_moved < 1:
-                raise ValueError(
-                    "mv.max-moved-dims must be a positive integer "
-                    f"(unset = unbounded), got {raw_cap!r}"
-                )
-
-        fact_ident = props["mv.base_table"]
-        dims, dim_vs, dim_sids = self._join_dim_pins(props)
-        ft = self.load_table(fact_ident)
-        fact_v = ft.current_version()
-        base_v = int(props["mv.base_version"])
-        # pins verify SNAPSHOT IDENTITY, not version numbers - a
-        # dropped-and-recreated table counts back to the same number
-        # with different contents (r8 review finding, empirically a
-        # wrong-results bug on this tier)
-        fact_sid = props.get("mv.base_snapshot")
-        fact_lineage = fact_sid is None or (
-            self._snap_id(ft, base_v) == fact_sid
-        )
-        all_pinned = True
-        moved: list[tuple[str, int, int, bool]] = []
-        new_vs, new_sids = dict(dim_vs), dict(dim_sids)
-        for dim_ident in dims:
-            dt = self.load_table(dim_ident)
-            dim_v = dt.current_version()
-            pinned_v = dim_vs[dim_ident]
-            sid = dim_sids.get(dim_ident)
-            lineage = sid is None or (
-                self._snap_id(dt, pinned_v) == sid
-            )
-            pinned = lineage and dim_v == pinned_v
-            if lineage and not pinned and dim_v > pinned_v:
-                # content-preserving dim commits (empty appends,
-                # property sets) must not force an O(fact) recompute:
-                # an append-only range contributing ZERO rows proves
-                # the join input is unchanged - re-pin the markers and
-                # stay incremental. Real appends/DML change existing
-                # groups' join matches, which no fact delta can
-                # express: full refresh below.
-                try:
-                    if (
-                        dt.scan_incremental(pinned_v, dim_v)
-                        .limit(1)
-                        .count()
-                        == 0
-                    ):
-                        pinned = True
-                        new_vs[dim_ident] = dim_v
-                        s2 = self._snap_id(dt, dim_v)
-                        if s2 is not None:
-                            new_sids[dim_ident] = s2
-                except ValueError:
-                    pass
-            if not pinned:
-                all_pinned = False
-                moved.append((dim_ident, pinned_v, dim_v, lineage))
-        dim_repin: dict = {}
-        if (new_vs, new_sids) != (dim_vs, dim_sids):
-            dim_repin = self._dim_pin_props(dims, new_vs, new_sids)
-        if all_pinned and fact_lineage and fact_v == base_v:
-            if dim_repin:
-                t.set_properties(**dim_repin)
-            return None  # every side's contents unmoved: no commit
-        # cost-based chooser (r14, VERDICT r13 #2): opt-in via
-        # mv.refresh.cost-based=true. When the manifest-stat estimate
-        # says the star is cheaper to re-read than the changelog terms'
-        # rows + fixed floors, skip every incremental arm and take the
-        # full-refresh tail directly. Opt-in keeps judged queries that
-        # assert a cdc_refresh deterministic.
-        force_full = False
-        if (props.get("mv.refresh.cost-based") or "").strip().lower() in (
-            "true",
-            "1",
-            "yes",
-        ):
-            force_full = (
-                self._join_refresh_cost(
-                    ft, base_v, fact_v, fact_lineage, dims, moved, props
-                )["choice"]
-                == "full"
-            )
-        if not force_full and all_pinned and fact_lineage and fact_v > base_v:
-            try:
-                delta = ft.scan_incremental(base_v, fact_v)
-            except ValueError:
-                # fact DML in range: a CDC-ready join MV (COUNT /
-                # integral SUM with stored __mv_rows/__mv_nn state)
-                # refreshes from the fact's SIGNED changelog - the
-                # inner join is linear in the fact input, so the
-                # changelog joined to the pinned dims IS the exact
-                # aggregate delta. Not provable -> full refresh below.
-                try:
-                    ch = ft.scan_changelog(base_v, fact_v)
-                except ValueError:
-                    ch = None  # a snapshot in range was expired
-                if ch is not None:
-                    upd = self._base_pin_props_for(
-                        ft, fact_v, dim_repin
-                    )
-                    snap = self._join_cdc_refresh(
-                        t,
-                        props,
-                        sql_text,
-                        self.view_name(fact_ident),
-                        ch,
-                        fact_ident,
-                        pin_updates=upd,
-                    )
-                    if snap is NotImplemented:
-                        # MIN/MAX/sketch or pre-CDC join MV: the
-                        # touched-group recompute tier (r11) - still
-                        # O(changed groups), never the whole view
-                        snap = self._join_group_recompute(
-                            t,
-                            props,
-                            sql_text,
-                            ch,
-                            fact_ident,
-                            pin_updates=upd,
-                        )
-                    if snap is not NotImplemented:
-                        t.set_properties(**upd)
-                        return snap
-            else:
-                delta.createOrReplaceTempView(
-                    self.view_name(fact_ident)
-                )
-                inc = self.spark.sql(store_sql).localCheckpoint(
-                    eager=True
-                )
-                # restore the fact's public view immediately (the
-                # MV watcher / concurrent-reader discipline, r8
-                # finding)
-                ft.scan(
-                    snapshot=ft.snapshot(fact_v)
-                ).createOrReplaceTempView(
-                    self.view_name(fact_ident)
-                )
-                upd = self._base_pin_props_for(
-                    ft, fact_v, dim_repin
-                )
-                snap = self._merge_agg_delta(
-                    t, props, inc, pin_updates=upd
-                )
-                if snap is not NotImplemented:
-                    t.set_properties(**upd)
-                    return snap
-                # NULL group key in delta: fall through to full
-        if (
-            not force_full
-            and not all_pinned
-            and len(moved) == 1
-            and moved[0][3]  # the moved dim's lineage is intact
-            and fact_lineage
-            and fact_v == base_v
-        ):
-            # EXACTLY one dim moved, fact unmoved: the join is linear
-            # in that dim too - agg(fact x signed dim changelog x
-            # other pinned dims) is the exact aggregate delta, and the
-            # changelog side is small, so Spark broadcast-joins it and
-            # only fact rows MATCHING changed dim keys are touched
-            # (O(matches), not O(fact) - the win over full refresh at
-            # 100 TB fact scale)
-            mv_ident, pinned_v, dim_v, _ = moved[0]
-            mdt = self.load_table(mv_ident)
-            try:
-                ch = mdt.scan_changelog(pinned_v, dim_v)
-            except ValueError:
-                ch = None  # expired range: full refresh below
-            if ch is not None:
-                pin_vs = {**new_vs, mv_ident: dim_v}
-                pin_sids = dict(new_sids)
-                s2 = self._snap_id(mdt, dim_v)
-                if s2 is not None:
-                    pin_sids[mv_ident] = s2
-                upd = self._dim_pin_props(dims, pin_vs, pin_sids)
-                snap = self._join_cdc_refresh(
-                    t, props, sql_text, self.view_name(mv_ident), ch,
-                    mv_ident,
-                    pin_updates=upd,
-                )
-                if snap is NotImplemented:
-                    # MIN/MAX/sketch or pre-CDC join MV under a moved
-                    # dim: recompute only the groups the dim change
-                    # touches (r11) - the changelog's delete AND
-                    # insert images both join the pinned fact, so a
-                    # dim row moving between groups touches both
-                    snap = self._join_group_recompute(
-                        t,
-                        props,
-                        sql_text,
-                        ch,
-                        mv_ident,
-                        pin_updates=upd,
-                    )
-                if snap is not NotImplemented:
-                    new_vs, new_sids = pin_vs, pin_sids
-                    t.set_properties(**upd)
-                    return snap
-        fact_moved = fact_lineage and fact_v > base_v
-        # K moved dims compose as K telescoping terms - LINEAR in K,
-        # each O(its changelog x matches), so the tier scales to any
-        # star width (r13; r10-r12 capped K at 3 out of caution, but
-        # the loop below never depended on the cap). max_moved is the
-        # operator's optional width cap, validated up top.
-        if (
-            not force_full
-            and not all_pinned
-            and all(mv[3] for mv in moved)  # every lineage intact
-            and fact_lineage
-            and (
-                (fact_v == base_v and len(moved) >= 2)
-                or (fact_moved and len(moved) >= 1)
-            )
-            and (max_moved <= 0 or len(moved) <= max_moved)
-        ):
-            # K >= 2 dims moved (r10; any K since r13), or the FACT
-            # moved together with moved dims (r11): the inner join is
-            # multilinear, so the delta TELESCOPES into per-side terms -
-            #   Q(f', d1', d2') - Q(f, d1, d2)
-            #     = Q(f, d1'-d1, d2) + Q(f, d1', d2'-d2)
-            #       + Q(f'-f, d1', d2')
-            # (for K moved dims, K dim terms plus - when the fact moved
-            # - ONE fact term LAST: term i binds every EARLIER moved
-            # side to its NEW snapshot and every LATER one to its
-            # PINNED snapshot, with the fact ordered last, so every dim
-            # term binds the fact at its PINNED version and the fact
-            # term sees every dim at its NEW public view. Any fixed
-            # order works; this one makes a crash between terms resume
-            # EXACTLY as an existing narrower window: dim pins advance
-            # per term, so a crash before the fact term leaves
-            # all-dims-pinned + fact-moved - the plain fact-CDC
-            # refresh.) A term DECLINING (NotImplemented) falls through
-            # to the full refresh below, which overwrites the
-            # half-merged state (always correct). The term count is
-            # LINEAR in the number of moved dims - K terms, each
-            # O(its changelog x matches) - so width alone never makes
-            # this rewrite-shaped; mv.max-moved-dims exists for
-            # operators who still want a forced full refresh past a
-            # chosen width.
-            moved_by = {mv[0]: mv for mv in moved}
-            ordered = [d for d in dims if d in moved_by]
-            chs: dict[str, DataFrame] = {}
-            fact_ch = None
-            ok = True
-            for ident in ordered:
-                _, pv, dv, _ = moved_by[ident]
-                try:
-                    chs[ident] = self.load_table(ident).scan_changelog(
-                        pv, dv
-                    )
-                except ValueError:
-                    ok = False  # expired range: full refresh below
-                    break
-            if ok and fact_moved:
-                try:
-                    fact_ch = ft.scan_changelog(base_v, fact_v)
-                except ValueError:
-                    ok = False  # expired range: full refresh below
-            snap = None
-            if ok:
-                for i, ident in enumerate(ordered):
-                    binds = {
-                        other: (
-                            moved_by[other][2]  # new version (earlier)
-                            if j < i
-                            else moved_by[other][1]  # pinned (later)
-                        )
-                        for j, other in enumerate(ordered)
-                        if other != ident
-                    }
-                    if fact_moved:
-                        # the fact orders LAST: every dim term joins
-                        # the PINNED fact, not the moved public view
-                        binds[fact_ident] = base_v
-                    # compute THIS term's post-commit pins up front:
-                    # the commit carries them (mv_pins) so a crash
-                    # between the MERGE and the property write is
-                    # completed by _recover_mv_pins, never re-applied
-                    _, pv, dv, _ = moved_by[ident]
-                    pin_vs = {**new_vs, ident: dv}
-                    pin_sids = dict(new_sids)
-                    s2 = self._snap_id(self.load_table(ident), dv)
-                    if s2 is not None:
-                        pin_sids[ident] = s2
-                    upd = self._dim_pin_props(dims, pin_vs, pin_sids)
-                    snap = self._join_cdc_refresh(
-                        t,
-                        props,
-                        sql_text,
-                        self.view_name(ident),
-                        chs[ident],
-                        ident,
-                        binds=binds,
-                        pin_updates=upd,
-                    )
-                    if snap is NotImplemented:
-                        ok = False
-                        break
-                    # pin THIS dim now: the committed term must never
-                    # be re-applied by a later (crash-resumed) refresh
-                    new_vs, new_sids = pin_vs, pin_sids
-                    t.set_properties(**upd)
-            if ok and fact_moved:
-                # the fact term: its signed changelog against every dim
-                # at its NEW snapshot - the dims' public views already
-                # show those (no binds needed)
-                # CUMULATIVE intent: include the dim pins the earlier
-                # terms advanced, so recovery works even if several
-                # property writes were lost, not just the last one
-                upd = self._base_pin_props_for(
-                    ft,
-                    fact_v,
-                    self._dim_pin_props(dims, new_vs, new_sids),
-                )
-                snap = self._join_cdc_refresh(
-                    t,
-                    props,
-                    sql_text,
-                    self.view_name(fact_ident),
-                    fact_ch,
-                    fact_ident,
-                    pin_updates=upd,
-                )
-                if snap is NotImplemented:
-                    ok = False
-                else:
-                    t.set_properties(**upd)
-            if ok:
-                return snap
-        new_pin = self._pin_props(
-            fact_ident, "mv.base_version", "mv.base_snapshot"
-        )
-        full_vs: dict = {}
-        full_sids: dict = {}
-        for dim_ident in dims:
-            pin = self._pin_props(dim_ident, "v", "s")
-            full_vs[dim_ident] = int(pin["v"])
-            if "s" in pin:
-                full_sids[dim_ident] = pin["s"]
-        new_pin.update(self._dim_pin_props(dims, full_vs, full_sids))
-        src = self.spark.sql(store_sql)
-        snap = overwrite_partitions(t, src)
-        if snap is None:
-            snap = truncate_table(t)
-        t.set_properties(**new_pin)
-        return snap
-
-    def _merge_agg_delta(
-        self,
-        t: LakehouseTable,
-        props: dict,
-        inc: DataFrame,
-        pin_updates: dict | None = None,
-        probe: tuple[int, bool] | None = None,
-    ):
-        """Merge an aggregated append-diff into an 'agg'-mode MV: the
-        delta's partial aggregates combine with the materialized groups
-        (COUNT/SUM add, MIN least, MAX greatest, AVG via its stored
-        sum/count partials - NULL partials defer to the other side),
-        then one MERGE on the group keys updates touched groups and
-        inserts new ones. O(delta + touched groups), never the base
-        table. Returns the commit snapshot, the current snapshot for an
-        empty diff, or ``NotImplemented`` when the delta contains a
-        NULL group key (equality-keyed MERGE cannot address the NULL
-        group; the caller full-refreshes - rare and always correct)."""
-        group_cols = json.loads(props["mv.group_cols"])
-        aggs = json.loads(props["mv.aggs"])
-        agg_args = json.loads(props.get("mv.agg_args", "{}"))
-        if not group_cols:
-            # global-aggregate tier: the MV is ONE row; the diff's
-            # single partial row combines with it and the result
-            # replaces the contents atomically - O(1) either way
-            from .dml import overwrite_partitions
-
-            joined = inc.alias("d").crossJoin(t.to_df().alias("t"))
-            by_name = self._merged_agg_columns(t, aggs, agg_args)
-            merged_cols = [by_name[f.name] for f in t.schema.fields]
-            return overwrite_partitions(
-                t,
-                joined.select(*merged_cols),
-                extra_summary=(
-                    {"mv_pins": pin_updates} if pin_updates else None
-                ),
-            )
-        return self._merge_grouped_delta(
-            t,
-            group_cols,
-            aggs,
-            inc,
-            agg_args=agg_args,
-            probe=probe,
-            extra_summary=(
-                {"mv_pins": pin_updates} if pin_updates else None
-            ),
         )
 
     def transaction(self) -> "MultiTableTransaction":

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dsir import _grams
+from .dsir import _check_ngrams, _grams
 from .embedding import _token_u32
 
 
@@ -90,6 +90,7 @@ def quality_classifier_fit(
     is a broadcastable plan literal."""
     import numpy as np
 
+    _check_ngrams(ngrams)
     feats = _doc_buckets(df, text_col, sep, ngrams, n_buckets)
     rows = (
         feats.select(
@@ -240,6 +241,7 @@ def quality_classifier_score(
     bucket array and fold run lengths into a sum of squares. Either
     way a pure projection: no shuffle, absorbed by the scan at
     100 TB."""
+    _check_ngrams(model["ngrams"])
     if model["sep"] == " ":
         return df.withColumn(
             out_col, _score_arrow(model)(F.col(text_col))

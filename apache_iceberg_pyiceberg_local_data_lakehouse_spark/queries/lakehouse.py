@@ -3701,7 +3701,7 @@ def q8a_mv_join_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     defer=True,
     # new in r10; promoted to the judged window in r11 (VERDICT r10
     # #1 rotation). Certifies the two-moved-dims CDC composition
-    # (catalog._refresh_join_agg r10 tier): BOTH dims of an
+    # (mv._terms r10 tier): BOTH dims of an
     # orders-customer-nation star change in ONE refresh window and the
     # refresh composes the per-dim signed-changelog terms (dim1's
     # changelog against the pinned dim2, dim2's against the NEW dim1)
@@ -3993,7 +3993,7 @@ def q8j_merge_multi_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q8k_mv_minmax_group_recompute",
     # new in r10; promoted to the judged window in r11 (VERDICT r10
     # #1 rotation). Certifies the MIN/MAX CDC tier
-    # (catalog._cdc_group_recompute): base DML that retracts current
+    # (mv._recompute_term): base DML that retracts current
     # minima/maxima refreshes the MV by recomputing ONLY the touched
     # groups (merge stamped group_recompute - the flag trips on a full
     # refresh), and the view equals the plain GROUP BY.
@@ -4452,7 +4452,7 @@ def q8f_partition_ddl_lifecycle(
     "q8n_mv_fact_dim_cdc",
     # new in r11, registered behind the judged window (r12 rotation
     # fodder); certifies the fact+dims-moved-together CDC composition
-    # (catalog._refresh_join_agg r11 tier): the FACT takes DML
+    # (mv._terms r11 tier): the FACT takes DML
     # (deletes) AND BOTH dims move in ONE refresh window (r12
     # extension - customer re-keys nations, nation renames group
     # keys); the refresh composes per-dim changelog terms (each bound
@@ -4501,7 +4501,7 @@ def q8n_mv_fact_dim_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     this replaces is O(star). Pins advance per term (dim first, fact
     after its own commit) with the intent carried in each commit's
     summary, so a crash anywhere resumes as a narrower window instead
-    of double-applying (catalog._recover_mv_pins)."""
+    of double-applying (mv._recover_mv_pins)."""
     from ..catalog import LakehouseCatalog
 
     wh = tempfile.mkdtemp(prefix="lakehouse_q8n_")
@@ -4569,14 +4569,14 @@ def q8n_mv_fact_dim_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q8w_mv_three_dim_cdc",
     # new in r12, registered behind the judged window (r13 rotation
     # fodder); certifies the THREE-moved-dims telescoping CDC
-    # composition on a 4-table star (catalog._refresh_join_agg;
+    # composition on a 4-table star (mv._terms;
     # pytest-only since r10 - test_mv_three_dim_cdc_composition): all
     # three dims of orders><customer><nation><region move in ONE
     # refresh window and the refresh composes three per-dim
     # changelog-merge terms (each binding already-refreshed dims NEW,
     # later dims OLD) - never a full recompute - equaling the plain
     # GROUP BY. Since r13 the composition is K-dim general (q93 judges
-    # the four-dim form); mv.max-moved-dims caps it when set.
+    # the four-dim form).
     # promoted to the judged window in r13 (VERDICT r12 #2 rotation)
     oracle="""
     WITH c2 AS (
@@ -4620,7 +4620,7 @@ def q8w_mv_three_dim_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     signed changelog (5-30 rows here; O(changed dim rows) always) to
     the PINNED fact and touches O(matching fact rows); the full
     recompute this replaces is O(star). A crash between terms resumes
-    as a narrower window (catalog._recover_mv_pins)."""
+    as a narrower window (mv._recover_mv_pins)."""
     from ..catalog import LakehouseCatalog
 
     wh = tempfile.mkdtemp(prefix="lakehouse_q8w_")
@@ -5208,7 +5208,7 @@ def q8r_streaming_near_dedup(
     "q8u_mv_quantile_kll_sketch",
     # new in r11 (late), registered behind the judged window (r12
     # rotation fodder); certifies the APPROX_PERCENTILE KLL MV tier
-    # (catalog._approx_rewrite_items / _merged_agg_columns): the MV
+    # (mv._approx_rewrite_items / _merged_agg_columns): the MV
     # stores a mergeable KLL sketch per group, an append refreshes by
     # sketch MERGE (commit operation 'merge' - O(delta), never a base
     # re-scan), and the merged quantile is judged by its EXACT RANK
@@ -5321,7 +5321,7 @@ def q8u_mv_quantile_kll_sketch(
     "q8t_mv_join_approx_sketch",
     # new in r11 (late), registered behind the judged window (r12
     # rotation fodder); certifies the JOIN-MV sketch tier
-    # (catalog._join_store_query): an APPROX_COUNT_DISTINCT over a
+    # (mv._join_store_query): an APPROX_COUNT_DISTINCT over a
     # two-dim star (orders x customer x nation) materializes a
     # mergeable HLL per group alongside the SKETCH estimate, and a
     # fact append refreshes by sketch UNION (commit operation 'merge',
@@ -5424,7 +5424,7 @@ def q8t_mv_join_approx_sketch(
     "q8s_mv_approx_distinct_sketch",
     # new in r11, registered behind the judged window (r12 rotation
     # fodder); certifies the APPROX_COUNT_DISTINCT MV sketch tier
-    # (catalog._mv_agg_spec / _merged_agg_columns): the MV stores a
+    # (mv._mv_agg_spec / _merged_agg_columns): the MV stores a
     # mergeable DataSketches HLL per group, an append refreshes by
     # UNIONING the delta sketch into the stored one (commit operation
     # 'merge' - O(delta), never a base re-scan), and the estimate
@@ -5913,7 +5913,7 @@ def q92_streaming_retention_ttl(
     "q93_mv_four_dim_cdc",
     # new in r13, registered behind the judged window (r14 rotation
     # fodder); certifies the K-dim-general telescoping CDC composition
-    # (catalog._refresh_join_agg, r13: the r10 three-dim cap removed -
+    # (mv._terms, r13: the r10 three-dim cap removed -
     # the term count is LINEAR in moved dims): FOUR chained dims of a
     # 5-table snowflake (lineitem><orders><customer><nation><region)
     # move in ONE refresh window, the refresh composes four per-dim
@@ -5971,7 +5971,7 @@ def q93_mv_four_dim_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog to the PINNED fact and touches O(matching fact rows);
     K moved dims cost K such terms, while the full recompute this
     replaces is O(star) regardless of K. A crash between terms
-    resumes as a narrower window (catalog._recover_mv_pins)."""
+    resumes as a narrower window (mv._recover_mv_pins)."""
     from ..catalog import LakehouseCatalog
 
     wh = tempfile.mkdtemp(prefix="lakehouse_q93_")

@@ -2742,6 +2742,30 @@ def test_dsir_rejects_gram_orders_other_than_1_and_2(spark):
             dsir_select(docs, lr, k=1, sep=sep, ngrams=(3,))
 
 
+def test_quality_classifier_rejects_gram_orders_other_than_1_and_2(spark):
+    """The classifier shares dsir's gram function, which models unigrams
+    and bigrams only: (1, 3) must raise in fit and in both scoring
+    paths (Arrow on a single-space sep, Catalyst otherwise) instead of
+    counting bigrams twice."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.operators.quality_classifier import (
+        quality_classifier_fit,
+        quality_classifier_score,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c", 1), (2, "b c d", 0)], "doc_id long, text string, label int"
+    )
+    with pytest.raises(ValueError, match="ngrams"):
+        quality_classifier_fit(docs, "label", ngrams=(1, 3), n_buckets=16)
+    model = quality_classifier_fit(
+        docs, "label", ngrams=(1, 2), n_buckets=16, iters=5
+    )
+    for sep in (" ", "[ ]"):
+        bad = {**model, "sep": sep, "ngrams": (1, 3)}
+        with pytest.raises(ValueError, match="ngrams"):
+            quality_classifier_score(docs, bad)
+
+
 def test_quality_classifier_filtering(spark):
     """r10 quality-classifier curation (GPT-3 Appendix A / LLaMA
     pattern): a hashed-feature logistic regression fit driver-side on

@@ -1262,3 +1262,85 @@ def test_four_dim_join_mv_cdc_always_equals_recompute(
     got = {tuple(r) for r in spark.sql("SELECT * FROM g_w4mv").collect()}
     want = {tuple(r) for r in spark.sql(q).collect()}
     assert got == want, (ops, seed)
+
+
+# -- one fixed, cheap case of each MV family in the default lane ---------
+#
+# Each family above runs its Hypothesis sweep only under ``-m slow``;
+# these call the same test body with one fixed op list, chosen so the
+# interesting refresh routes (append merge, signed CDC terms, touched-
+# group recompute, NULL-key full-refresh fallback) all run by default.
+
+
+def test_mv_agg_refresh_fixed_case(spark, tmp_path_factory):
+    test_mv_agg_refresh_equals_full_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        batches=[[("a", 3), ("b", -1)], [(None, 5), ("a", 2)], []],
+    )
+
+
+def test_join_mv_fixed_case(spark, tmp_path_factory):
+    test_join_mv_always_equals_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=["fact_append", "refresh", "dim_update", "refresh",
+             "fact_delete", "empty_dim_append"],
+        seed=1,
+    )
+
+
+def test_multidim_join_mv_fixed_case(spark, tmp_path_factory):
+    test_multidim_join_mv_always_equals_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=["fact_append", "refresh", "dim2_update", "empty_dim2_append",
+             "fact_delete"],
+        seed=2,
+    )
+
+
+def test_multidim_join_mv_cdc_fixed_case(spark, tmp_path_factory):
+    test_multidim_join_mv_cdc_always_equals_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=["dim1_update", "refresh", "fact_delete", "dim2_update",
+             "dim1_delete"],
+        seed=3,
+    )
+
+
+def test_mv_minmax_cdc_fixed_case(spark, tmp_path_factory):
+    test_mv_minmax_cdc_always_equals_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=["append", "delete", "refresh", "update"],
+        seed=4,
+    )
+
+
+def test_mv_having_recompute_fixed_case(spark, tmp_path_factory):
+    test_mv_having_recompute_always_equals_view.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=["update", "refresh", "delete", "append"],
+        seed=5,
+    )
+
+
+def test_fact_and_dim_moved_cdc_fixed_case(spark, tmp_path_factory):
+    test_fact_and_dim_moved_cdc_always_equals_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        fact_op="fact_both",
+        dim_op="both_dims",
+        seed=6,
+    )
+
+
+def test_mv_array_percentile_fixed_case(spark, tmp_path_factory):
+    test_mv_array_percentile_always_equals_recompute.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=[[("a", 4), ("c", -7)], "del_even", [], "del_neg"],
+    )

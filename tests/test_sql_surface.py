@@ -933,11 +933,10 @@ def test_mv_nondeterminism_regex_forms():
     spellings (current_date/current_timestamp/current_user) and the
     random() alias of rand() - and not false-positive on ordinary
     columns whose names merely embed those words."""
-    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.catalog import (
-        LakehouseCatalog,
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.mv import (
+        _MV_NONDETERMINISTIC as rx,
     )
 
-    rx = LakehouseCatalog._MV_NONDETERMINISTIC
     for s in (
         "rand()", "random()", "rand( )", "uuid()", "now()",
         "current_date", "CURRENT_DATE", "current_date()",
@@ -2133,7 +2132,7 @@ def test_mv_join_agg_null_delta_key_falls_back(catalog, spark):
     )
     f.append(spark.createDataFrame([(7, 70)], "fk long, v long"))
     snap = catalog.refresh_materialized_view("gold.jmv4")
-    assert snap is not None  # merged or full - but always exact
+    assert snap.operation == "overwrite"  # the full-refresh fallback
     catalog.register_views()
     got = {
         tuple(r) for r in spark.sql("SELECT * FROM gold_jmv4").collect()
@@ -2919,10 +2918,12 @@ def test_sql_alter_partition_field(catalog, spark):
 
 
 def test_join_cdc_analysis_failure_declines_and_restores(catalog, spark):
-    """r9 review: when the rebuilt pre-aggregation fails ANALYSIS the
-    CDC refresh returns NotImplemented (caller full-refreshes) and the
+    """r9 review: when a signed term's projection fails ANALYSIS the
+    term returns NotImplemented (caller full-refreshes) and the
     swapped temp view is restored to the table's public view either
     way - no changelog leak to subsequent readers."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import mv as mvmod
+
     f = catalog.create_table(
         "gold.cdcaf",
         spark.createDataFrame([], "fk long, v long").schema,
@@ -2941,16 +2942,14 @@ def test_join_cdc_analysis_failure_declines_and_restores(catalog, spark):
     catalog.sql("DELETE FROM gold.cdcaf WHERE v = 99")  # no-op delete
     f2 = catalog.load_table("gold.cdcaf")
     ch = f2.scan_changelog(1, f2.current_version())
-    # a doctored sql_text that cannot analyze: decline, not crash
-    bad = (
-        "SELECT seg, COUNT(nosuch_col) AS n FROM gold_cdcaf "
-        "JOIN gold_cdcad ON gold_cdcaf.fk = gold_cdcad.k GROUP BY seg"
+    # a doctored aggregate argument that cannot analyze: decline, not
+    # crash
+    ctx = mvmod._Ctx.of(mv, dict(mv.properties()))
+    ctx.agg_args = {"n": "nosuch_col"}
+    term = mvmod._Term(
+        "gold.cdcaf", f2.current_version(), ch, False, {}, {}
     )
-    props = dict(mv.properties())
-    got = catalog._join_cdc_refresh(
-        mv, props, bad, catalog.view_name("gold.cdcaf"), ch, "gold.cdcaf"
-    )
-    assert got is NotImplemented
+    assert mvmod._signed_term(catalog, ctx, term) is NotImplemented
     # the fact's public view is restored (not the changelog binding)
     cols = spark.sql("SELECT * FROM gold_cdcaf").columns
     assert "_change_type" not in cols and cols == ["fk", "v"]
@@ -3386,23 +3385,25 @@ def test_mv_two_dim_cdc_resumes_after_partial_failure(catalog, spark):
     catalog.create_materialized_view("gold.smvpf", _STAR_Q.format(s="pf"))
     catalog.sql("UPDATE gold.sdim1pf SET seg = 'C' WHERE k = 2")
     catalog.sql("UPDATE gold.sdim2pf SET reg = 'EU2' WHERE r = 10")
-    real = type(catalog)._join_cdc_refresh
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import mv as mvmod
+
+    real = mvmod._signed_term
     calls = {"n": 0}
 
-    def failing(self, *a, **kw):
+    def failing(*a, **kw):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("injected crash between terms")
-        return real(self, *a, **kw)
+        return real(*a, **kw)
 
-    type(catalog)._join_cdc_refresh = failing
+    mvmod._signed_term = failing
     try:
         import pytest as _pytest
 
         with _pytest.raises(RuntimeError, match="injected"):
             catalog.refresh_materialized_view("gold.smvpf")
     finally:
-        type(catalog)._join_cdc_refresh = real
+        mvmod._signed_term = real
     # term 1 (dim1) committed AND pinned; dim2 still at its old pin
     vs = _json.loads(
         catalog.load_table("gold.smvpf").properties()[
@@ -3592,6 +3593,64 @@ def test_mv_minmax_cdc_group_recompute(catalog, spark):
     assert snap is not None and snap.operation == "merge"
     assert snap.summary.get("group_recompute") is True
     assert rows() == {("a", 2, 5, 9), ("c", 2, 1, 2), ("d", 1, 8, 8)}
+
+
+def test_mv_cdc_null_group_key_falls_back_to_full(
+    catalog, spark, monkeypatch
+):
+    """An UPDATE that sets a group key to NULL sends the NULL group
+    down both changelog routes: the signed route (COUNT/SUM with the
+    invertible state) and the touched-group recompute (MIN/MAX). Each
+    sees the NULL key in the checkpoint probe's observed metrics and
+    falls back to the full refresh, which stays exact."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import mv as mvmod
+
+    b = catalog.create_table(
+        "gold.nkbase", spark.createDataFrame([], "cat string, v long").schema
+    )
+    b.append(
+        spark.createDataFrame(
+            [("a", 1), ("a", 2), ("b", 3)], "cat string, v long"
+        )
+    )
+    qs = {
+        "gold.nksigned": "SELECT cat, COUNT(*) AS n, SUM(v) AS s "
+        "FROM gold_nkbase GROUP BY cat",
+        "gold.nkrecompute": "SELECT cat, MIN(v) AS lo, MAX(v) AS hi "
+        "FROM gold_nkbase GROUP BY cat",
+    }
+    for ident, q in qs.items():
+        catalog.create_materialized_view(ident, q)
+    names = {
+        ident: {f.name for f in catalog.load_table(ident).schema.fields}
+        for ident in qs
+    }
+    assert "__mv_rows" in names["gold.nksigned"]
+    assert "__mv_rows" not in names["gold.nkrecompute"]
+    catalog.sql("UPDATE gold.nkbase SET cat = NULL WHERE v = 2")
+    real = mvmod._checkpoint_group_probe
+    for ident, q in qs.items():
+        seen = []
+
+        def spy(df, group_cols):
+            out = real(df, group_cols)
+            seen.append(out[2])
+            return out
+
+        with monkeypatch.context() as m:
+            m.setattr(mvmod, "_checkpoint_group_probe", spy)
+            snap = catalog.refresh_materialized_view(ident)
+        assert seen and all(seen), (ident, seen)  # the probe saw NULL
+        assert snap.operation == "overwrite", ident
+        assert not snap.summary.get("cdc_refresh"), ident
+        catalog.register_views()
+        got = {
+            tuple(r)
+            for r in spark.sql(
+                f"SELECT * FROM {catalog.view_name(ident)}"
+            ).collect()
+        }
+        assert got == {tuple(r) for r in spark.sql(q).collect()}, ident
 
 
 def test_mv_avg_cdc_group_recompute(catalog, spark):
@@ -5682,9 +5741,7 @@ def test_mv_four_dim_cdc_composition(catalog, spark):
     """r13: the telescoping tier is LINEAR in the number of moved dims
     (K terms, one per dim), so the r10 three-dim cap is gone - FOUR
     dims of a 5-table star move in one refresh window and the refresh
-    composes four changelog-merge terms, equaling the recompute. An
-    operator can still force full refresh past a chosen width with
-    mv.max-moved-dims."""
+    composes four changelog-merge terms, equaling the recompute."""
     import json as _json
 
     f = catalog.create_table(
@@ -5752,56 +5809,6 @@ def test_mv_four_dim_cdc_composition(catalog, spark):
     )
     for i, dt in enumerate(dims):
         assert vs[f"gold.t4d{i + 1}"] == str(dt.current_version())
-    # the operator cap: width past mv.max-moved-dims full-refreshes
-    catalog.load_table("gold.t4mv").set_properties(
-        **{"mv.max-moved-dims": "3"}
-    )
-    catalog.sql("UPDATE gold.t4d1 SET s1 = 'A3' WHERE k = 2")
-    catalog.sql("UPDATE gold.t4d2 SET s2 = 'B3' WHERE r = 11")
-    catalog.sql("UPDATE gold.t4d3 SET s3 = 'A3' WHERE q = 21")
-    catalog.sql("UPDATE gold.t4d4 SET s4 = 'A3' WHERE p = 31")
-    snap2 = catalog.refresh_materialized_view("gold.t4mv")
-    assert snap2 is not None and not snap2.summary.get("cdc_refresh")
-    catalog.register_views()
-    got2 = {tuple(r) for r in spark.sql("SELECT * FROM gold_t4mv").collect()}
-    want2 = {tuple(r) for r in spark.sql(q).collect()}
-    assert got2 == want2
-
-
-def test_mv_max_moved_dims_validated(catalog, spark):
-    """review r13: a typo'd mv.max-moved-dims must raise naming the
-    property, and 0/negative must be refused - 0 silently meaning
-    'unbounded' would invert the natural reading of a zero cap."""
-    f = catalog.create_table(
-        "gold.vgf", spark.createDataFrame([], "a long, v long").schema
-    )
-    d = catalog.create_table(
-        "gold.vgd", spark.createDataFrame([], "k long, s string").schema
-    )
-    d.append(spark.createDataFrame([(1, "A"), (2, "B")], "k long, s string"))
-    f.append(spark.createDataFrame([(1, 10), (2, 20)], "a long, v long"))
-    q = (
-        "SELECT s, COUNT(*) AS n FROM gold_vgf "
-        "JOIN gold_vgd ON gold_vgf.a = gold_vgd.k GROUP BY s"
-    )
-    catalog.create_materialized_view("gold.vgmv", q)
-    mvt = catalog.load_table("gold.vgmv")
-    # two dims... well, one dim: move it twice so the multi-dim gate
-    # parses the cap (the single-dim path does not need it, so move
-    # the dim AND the fact to reach the composed arm)
-    catalog.sql("UPDATE gold.vgd SET s = 'Z' WHERE k = 1")
-    f.append(spark.createDataFrame([(2, 30)], "a long, v long"))
-    for bad in ("three", "3.5", "0", "-2"):
-        mvt.set_properties(**{"mv.max-moved-dims": bad})
-        with pytest.raises(ValueError, match="mv.max-moved-dims"):
-            catalog.refresh_materialized_view("gold.vgmv")
-    # unset/empty = unbounded: the refresh proceeds and equals recompute
-    mvt.set_properties(**{"mv.max-moved-dims": ""})
-    assert catalog.refresh_materialized_view("gold.vgmv") is not None
-    catalog.register_views()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM gold_vgmv").collect()}
-    want = {tuple(r) for r in spark.sql(q).collect()}
-    assert got == want
 
 
 def test_sql_show_transactions(catalog, spark):
@@ -5841,6 +5848,7 @@ def test_mv_refresh_estimate_manifest_only(catalog, spark, monkeypatch):
     """r14 (VERDICT r13 #2): the refresh cost chooser prices full vs
     incremental from MANIFEST stats alone - prove it by making every
     data-reading path explode for the duration of the estimate."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import mv as mvmod
     from apache_iceberg_pyiceberg_local_data_lakehouse_spark.table import (
         LakehouseTable,
     )
@@ -5876,7 +5884,7 @@ def test_mv_refresh_estimate_manifest_only(catalog, spark, monkeypatch):
         assert est["changelog_rows"] == 2  # priced off the manifest
         # with the fixed floor zeroed, the 2-row delta beats
         # re-reading the 9-row star
-        mv.set_properties(**{"mv.refresh.cost.term-overhead-rows": "0"})
+        m.setattr(mvmod, "_MV_TERM_OVERHEAD_ROWS", 0)
         est = catalog.mv_refresh_estimate("gold.cemv")
         assert est["choice"] == "incremental"
         assert est["incremental_rows"] == 2 < est["full_rows"] == 9
@@ -5887,19 +5895,19 @@ def test_mv_refresh_estimate_manifest_only(catalog, spark, monkeypatch):
     )
 
     update_where(f, F.col("v") >= 0, {"v": F.col("v") + 1})
-    est = catalog.mv_refresh_estimate("gold.cemv")
+    with monkeypatch.context() as m:
+        m.setattr(mvmod, "_MV_TERM_OVERHEAD_ROWS", 0)
+        est = catalog.mv_refresh_estimate("gold.cemv")
     assert est["choice"] == "full"
     assert est["changelog_rows"] > est["full_rows"]
-    # bad knob values refuse loudly, not silently misprice
-    mv.set_properties(**{"mv.refresh.cost.term-overhead-rows": "-3"})
-    with pytest.raises(ValueError, match="term-overhead-rows"):
-        catalog.mv_refresh_estimate("gold.cemv")
     # not a join MV -> loud refusal
     with pytest.raises(ValueError, match="join-aggregate"):
         catalog.mv_refresh_estimate("gold.factce")
 
 
-def test_mv_refresh_cost_based_picks_the_cheaper_plan(catalog, spark):
+def test_mv_refresh_cost_based_picks_the_cheaper_plan(
+    catalog, spark, monkeypatch
+):
     """With mv.refresh.cost-based=true the refresh itself honors the
     estimate: a small star under the default per-term floor takes the
     FULL overwrite path; zeroing the floor flips the same shape back
@@ -5940,7 +5948,9 @@ def test_mv_refresh_cost_based_picks_the_cheaper_plan(catalog, spark):
     # an up-to-date MV stays a no-op under the chooser
     assert catalog.refresh_materialized_view("gold.cbmv") is None
     # floor zeroed: the same delta shape now refreshes incrementally
-    mv.set_properties(**{"mv.refresh.cost.term-overhead-rows": "0"})
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import mv as mvmod
+
+    monkeypatch.setattr(mvmod, "_MV_TERM_OVERHEAD_ROWS", 0)
     f.append(spark.createDataFrame([(2, 50)], "fk long, v long"))
     snap = catalog.refresh_materialized_view("gold.cbmv")
     assert snap.operation == "merge"  # incremental wins on the stats
