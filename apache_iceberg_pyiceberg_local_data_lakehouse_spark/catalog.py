@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .table import LakehouseTable, PartitionField, Snapshot
+from .table import LakehouseTable, PartitionField, Snapshot, atomic_write
 
 # SQL DML statements handled by catalog.sql (Spark temp views are
 # read-only, so DELETE/UPDATE compile to the table-format DML engines)
@@ -772,10 +772,7 @@ class LakehouseCatalog:
             raise ValueError(f"a table already holds the name {identifier}")
         views[name] = sql_text
         os.makedirs(os.path.join(self.warehouse, namespace), exist_ok=True)
-        tmp = self._views_path(namespace) + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f)
-        os.replace(tmp, self._views_path(namespace))
+        atomic_write(self._views_path(namespace), json.dumps(views))
 
     def drop_stored_view(self, identifier: str, if_exists: bool = False) -> bool:
         namespace, _, name = identifier.rpartition(".")
@@ -785,10 +782,7 @@ class LakehouseCatalog:
                 return False
             raise ValueError(f"no such view: {identifier}")
         del views[name]
-        tmp = self._views_path(namespace) + f".{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(views, f)
-        os.replace(tmp, self._views_path(namespace))
+        atomic_write(self._views_path(namespace), json.dumps(views))
         self.spark.catalog.dropTempView(self.view_name(identifier))
         return True
 

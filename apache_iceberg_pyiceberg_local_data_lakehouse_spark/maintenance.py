@@ -191,7 +191,7 @@ def expire_snapshots(
             table.delete_metadata_version(s.version)
 
     deleted_files = 0
-    deleted_manifests = 0
+    deleted_manifests = deleted_temp_files = 0
     if delete_orphan_files:
         expired_vs = {s.version for s in expired}
         retained = [s for s in snaps if s.version not in expired_vs]
@@ -230,6 +230,25 @@ def expire_snapshots(
                 deleted_files += 1
             except FileNotFoundError:
                 pass  # another process GC'd it first
+
+        def reap(p: str) -> bool:
+            """Remove ``p`` once it is past the grace period."""
+            try:
+                if now - os.path.getmtime(p) < orphan_grace_secs:
+                    return False
+                if not dry_run:
+                    os.remove(p)
+                return True
+            except FileNotFoundError:
+                return False
+
+        # atomic_write temp files a crash left before their claim
+        deleted_temp_files = sum(
+            reap(os.path.join(d, name))
+            for d, _, names in os.walk(table.metadata_dir)
+            for name in names
+            if name.startswith(".tmp.")
+        )
         # manifest files referenced only by expired (or crashed) commits
         # are garbage too; same grace discipline - a writer stages its
         # delta manifest before the snapshot that references it commits
@@ -237,21 +256,11 @@ def expire_snapshots(
             mf for s in retained for mf in s.manifest_files
         } | branch_mfs
         mdir = os.path.join(table.metadata_dir, "manifests")
-        if os.path.isdir(mdir):
-            for name in os.listdir(mdir):
-                rel = os.path.join("manifests", name)
-                if rel in referenced_mfs:
-                    continue
-                p = os.path.join(mdir, name)
-                try:
-                    if now - os.path.getmtime(p) < orphan_grace_secs:
-                        continue
-                    if not dry_run:
-                        os.remove(p)
-                        table._manifest_cache.pop(rel, None)
-                    deleted_manifests += 1
-                except FileNotFoundError:
-                    pass
+        for name in os.listdir(mdir) if os.path.isdir(mdir) else []:
+            rel = os.path.join("manifests", name)
+            if rel not in referenced_mfs and reap(os.path.join(mdir, name)):
+                table._manifest_cache.pop(rel, None)
+                deleted_manifests += 1
     # Streaming identity-epoch reservation records (table.
     # _reserve_identity_epoch) age out under the SAME policy as
     # snapshots: records older than the horizon prune, but the newest
@@ -300,6 +309,7 @@ def expire_snapshots(
         "expired_snapshots": len(expired),
         "deleted_files": deleted_files,
         "deleted_manifests": deleted_manifests,
+        "deleted_temp_files": deleted_temp_files,
         "retained_snapshots": len(snaps) - len(expired),
         "expired_refs": expired_refs,
         "identity_epoch_records_pruned": epoch_records_pruned,

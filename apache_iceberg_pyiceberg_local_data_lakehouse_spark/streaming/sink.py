@@ -32,12 +32,11 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
-from ..table import LakehouseTable
+from ..table import LakehouseTable, atomic_write
 
 _QUERY_KEY = "streaming-query-id"
 _EPOCH_KEY = "streaming-epoch-id"
@@ -83,10 +82,8 @@ def _advance_watermark(
         return  # monotonic: epochs only grow under a stable checkpoint
     path = _watermark_path(table, query_id)
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as f:
-        json.dump({"query_id": query_id, "epoch": int(epoch_id)}, f)
-    os.replace(tmp, path)
+    doc = {"query_id": query_id, "epoch": int(epoch_id)}
+    atomic_write(path, json.dumps(doc))
 
 
 def reset_watermark(table: LakehouseTable, query_id: str) -> None:

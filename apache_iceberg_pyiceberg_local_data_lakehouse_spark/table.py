@@ -10,10 +10,13 @@ Spark-native* table format with the same semantics:
 - **Metadata**: versioned JSON snapshots under ``<table>/metadata/``;
   each snapshot carries the schema, the partition spec, and a manifest of
   data files with per-file stats (row count, per-column min/max).
-- **Commit protocol**: write ``v<N>.json`` with ``O_CREAT|O_EXCL`` -
-  creation either succeeds or the version is taken (optimistic
-  concurrency, like Iceberg's); a ``version-hint.text`` is updated via
-  atomic rename for fast current-version lookup.
+- **Commit protocol**: every metadata file is published through
+  ``atomic_write``: the whole file is written to a ``.tmp.<hex>``
+  sibling and fsynced before its name is claimed. ``v<N>.json`` is
+  claimed with an exclusive ``os.link`` - the link either succeeds or
+  the version is taken (optimistic concurrency, like Iceberg's), and a
+  reader never sees a half-written snapshot; ``version-hint.text`` is
+  then replaced for fast current-version lookup.
 - **Data**: zstd Parquet written by Spark executors; file-level pruning
   uses manifest stats (partition values + min/max) before Spark ever
   lists a file - the engine-side analogue of Iceberg's hidden
@@ -213,6 +216,41 @@ class StagedReplaceConflict(ValueError):
     write-write conflict forever would be worse than reporting it."""
 
 
+def atomic_write(path: str, data: str, *, exclusive: bool = False) -> None:
+    """Publish ``data`` as the file ``path``, whole or not at all - the
+    one commit primitive every metadata file goes through.
+
+    The bytes land in ``<dir>/.tmp.<hex>`` and are fsynced; only then is
+    the name claimed: with ``os.link`` when ``exclusive`` (raises
+    ``FileExistsError`` if the name is taken, so exactly one writer wins
+    it), else with ``os.replace``. The temp file is removed either way
+    (also when anything fails) and the directory is fsynced, so a
+    reader never sees a partial file and a claimed name survives a
+    crash. A ``.tmp.*`` left by a crash before the claim is reclaimed
+    by orphan GC (``maintenance.expire_snapshots``)."""
+    d = os.path.dirname(path)
+    tmp = os.path.join(d, f".tmp.{uuid.uuid4().hex}")
+    try:
+        with open(tmp, "w") as f:
+            f.write(data)
+            f.flush()
+            os.fsync(f.fileno())
+        if exclusive:
+            os.link(tmp, path)
+        else:
+            os.replace(tmp, path)
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass  # replaced into place
+    fd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 # ---------------------------------------------------------------------------
 # Table
 # ---------------------------------------------------------------------------
@@ -275,18 +313,19 @@ class LakehouseTable:
             self._manifest_cache[rel] = cached
         return cached
 
-    def _write_manifest_file(self, entries: list[dict[str, Any]]) -> str:
-        """Persist one immutable manifest file; returns its
-        metadata-relative path. Written tmp+rename so a reader never sees
-        a partial file; unreferenced leftovers (crashed commits) are
-        orphan-GC'd by snapshot expiry."""
-        mdir = os.path.join(self.metadata_dir, "manifests")
-        os.makedirs(mdir, exist_ok=True)
-        rel = os.path.join("manifests", f"m-{uuid.uuid4().hex}.json")
-        tmp = os.path.join(mdir, f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(entries, f)
-        os.replace(tmp, self._manifest_path(rel))
+    def _write_manifest_file(
+        self, entries: list[dict[str, Any]], rel: str | None = None
+    ) -> str:
+        """Persist one immutable manifest file under ``rel`` (default: a
+        fresh ``manifests/m-<uuid>.json``; publish replicating a branch
+        manifest main-side keeps the branch's name so the snapshot's
+        manifest_files list stays valid); returns its metadata-relative
+        path. Unreferenced leftovers (crashed commits) are orphan-GC'd
+        by snapshot expiry."""
+        rel = rel or os.path.join("manifests", f"m-{uuid.uuid4().hex}.json")
+        path = self._manifest_path(rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        atomic_write(path, json.dumps(entries))
         self._manifest_cache[rel] = list(entries)
         return rel
 
@@ -366,19 +405,17 @@ class LakehouseTable:
         return eligible[-1]
 
     def _commit(self, snap: Snapshot) -> None:
-        """O_CREAT|O_EXCL commit: exactly one writer wins each version."""
+        """Exclusive-link publish of the whole ``v<N>.json``: exactly one
+        writer wins each version, and no reader sees it half-written."""
         os.makedirs(self.metadata_dir, exist_ok=True)
-        path = self._version_path(snap.version)
+        data = json.dumps(snap.to_json())
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            atomic_write(self._version_path(snap.version), data, exclusive=True)
         except FileExistsError as e:
             raise CommitConflict(f"version {snap.version} already committed") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap.to_json(), f)
-        tmp = os.path.join(self.metadata_dir, f".hint.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            f.write(str(snap.version))
-        os.replace(tmp, os.path.join(self.metadata_dir, "version-hint.text"))
+        atomic_write(
+            os.path.join(self.metadata_dir, "version-hint.text"), str(snap.version)
+        )
 
     # -- schema -------------------------------------------------------------
 
@@ -1994,10 +2031,7 @@ class LakehouseTable:
             "created_ms": int(time.time() * 1000),
             "entries": entries,
         }
-        tmp = os.path.join(self._staged_dir(), f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._staged_marker(staged_id))
+        atomic_write(self._staged_marker(staged_id), json.dumps(doc))
         return staged_id
 
     def stage_replace(
@@ -2045,10 +2079,7 @@ class LakehouseTable:
             "summary": summary or {},
             "base_version": base_version,
         }
-        tmp = os.path.join(self._staged_dir(), f".tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, self._staged_marker(staged_id))
+        atomic_write(self._staged_marker(staged_id), json.dumps(doc))
         return staged_id
 
     def list_staged(self) -> list[str]:
@@ -2229,12 +2260,7 @@ class LakehouseTable:
             return {}
 
     def set_properties(self, **props: Any) -> dict[str, str]:
-        merged = {**self.properties(), **{k: str(v) for k, v in props.items()}}
-        tmp = os.path.join(self.metadata_dir, f".props.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(merged, f)
-        os.replace(tmp, self._properties_path())
-        return merged
+        return self.replace_properties(add=props)
 
     def add_constraint(self, name: str, expr: str) -> dict[str, str]:
         """Delta-style CHECK constraint: a SQL predicate every INCOMING
@@ -2473,18 +2499,11 @@ class LakehouseTable:
                 n: int(chain.get(n, s["high"])) for n, s in props.items()
             }
             new = {n: int(v) for n, v in advance(dict(cur)).items()}
-            tmp = os.path.join(
-                self._identity_rsv_dir(), f".tmp.{uuid.uuid4().hex}"
-            )
-            with open(tmp, "w") as f:
-                json.dump(new, f)
             dst = os.path.join(self._identity_rsv_dir(), f"r{seq + 1}.json")
             try:
-                os.link(tmp, dst)  # atomic claim, file appears complete
+                atomic_write(dst, json.dumps(new), exclusive=True)
             except FileExistsError:
-                os.unlink(tmp)
                 continue  # lost the link race - re-read, recompute
-            os.unlink(tmp)
             # mirror into props for inspect/readers (best-effort: the
             # chain stays authoritative, a stale mirror is cosmetic)
             try:
@@ -2546,9 +2565,6 @@ class LakehouseTable:
         except FileNotFoundError:
             pass
         base = self._reserve_identity(n_rows)
-        tmp = os.path.join(
-            self._identity_rsv_dir(), f".tmp.{uuid.uuid4().hex}"
-        )
         # __query fingerprints the stream so maintenance GC can keep a
         # per-QUERY floor of newest records (review r11: a global floor
         # let a busy sibling stream age out an idle stream's replay
@@ -2557,16 +2573,13 @@ class LakehouseTable:
         qhash = hashlib.sha256(
             tag.rsplit(":", 1)[0].encode()
         ).hexdigest()[:16]
-        with open(tmp, "w") as f:
-            json.dump(
-                {**base, "__n_rows": int(n_rows), "__query": qhash}, f
-            )
+        rec = {**base, "__n_rows": int(n_rows), "__query": qhash}
         try:
-            os.link(tmp, path)  # exactly one attempt records the epoch
+            # exactly one attempt records the epoch
+            atomic_write(path, json.dumps(rec), exclusive=True)
         except FileExistsError:
             # a concurrent twin of this epoch recorded first: use ITS
             # range (ours is burned) so both attempts assign identically
-            os.unlink(tmp)
             with open(path) as f:
                 rec = json.load(f)
             if int(rec.get("__n_rows", -1)) == int(n_rows):
@@ -2576,7 +2589,6 @@ class LakehouseTable:
                     if not k.startswith("__")
                 }
             return base  # size-mismatched record: keep our fresh range
-        os.unlink(tmp)
         # bound the record directory: Spark only ever replays the LAST
         # epoch, so records far behind are dead weight - without this a
         # long-running stream would grow one file per micro-batch
@@ -2623,7 +2635,8 @@ class LakehouseTable:
         contract). The reservation itself is a compare-and-swap commit
         on the table's identity chain (:meth:`_identity_chain_commit`),
         so concurrent identity appends get DISJOINT ranges - the same
-        exactly-one-winner discipline as the O_EXCL snapshot commit."""
+        exactly-one-winner discipline as the exclusive-link snapshot
+        commit."""
         ids = ids if ids is not None else self.identity_columns()
         if not ids:
             return df
@@ -2801,8 +2814,8 @@ class LakehouseTable:
     def replace_properties(
         self, remove=(), add: dict | None = None
     ) -> dict[str, str]:
-        """One atomic read-modify-write of the properties file (single
-        os.replace): removals and additions land TOGETHER, so a
+        """One atomic read-modify-write of the properties file (one
+        ``atomic_write``): removals and additions land TOGETHER, so a
         key migration (rename_column moving a ``generated.*`` entry)
         has no half-state window where only the unset or only the set
         survived a crash."""
@@ -2812,10 +2825,7 @@ class LakehouseTable:
             if k not in set(remove)
         }
         kept.update({str(k): str(v) for k, v in (add or {}).items()})
-        tmp = os.path.join(self.metadata_dir, f".props.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(kept, f)
-        os.replace(tmp, self._properties_path())
+        atomic_write(self._properties_path(), json.dumps(kept))
         return kept
 
     # -- named refs (tags + branches) ----------------------------------------
@@ -2841,10 +2851,7 @@ class LakehouseTable:
         return {k: v["version"] for k, v in self._load_refs().items()}
 
     def _write_refs(self, refs: dict[str, dict[str, Any]]) -> None:
-        tmp = os.path.join(self.metadata_dir, f".refs.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(refs, f)
-        os.replace(tmp, self._refs_path())
+        atomic_write(self._refs_path(), json.dumps(refs))
 
     def _create_ref(self, name: str, version: int | None, kind: str) -> int:
         v = self.current_version() if version is None else version
@@ -2893,8 +2900,8 @@ class LakehouseTable:
 
     def fast_forward(self, name: str, to_version: int | None = None) -> int:
         """Advance a branch ref to a DESCENDANT snapshot (default: the
-        current head). The commit log is linear (one O_EXCL version chain
-        per table), so descendant == a later retained version; moving a
+        current head). The commit log is linear (one exclusive-link version
+        chain per table), so descendant == a later retained version; moving a
         branch backwards or onto a missing snapshot raises - a branch
         never silently loses published state. Tags never move."""
         refs = self._load_refs()
@@ -2948,7 +2955,7 @@ class LakehouseTable:
         O(1) metadata commit regardless of table size); every table
         operation - append, DML, compaction, time travel, incremental
         scan - works on the handle because it IS a table with its own
-        linear O_EXCL version chain. The full Iceberg
+        linear exclusive-link version chain. The full Iceberg
         write-audit-publish-with-retries flow: ``create_branch`` ->
         ``branch(name)`` -> stage commits -> audit the branch ->
         ``publish_branch``.
@@ -3053,7 +3060,7 @@ class LakehouseTable:
                         # re-serialize (not copy): the branch may hold
                         # it only in cache, and a partial copy must
                         # never be visible
-                        self._write_manifest_file_at(
+                        self._write_manifest_file(
                             bt._read_manifest_file(rel), rel
                         )
                 snap = Snapshot(
@@ -3156,24 +3163,6 @@ class LakehouseTable:
         if os.path.isdir(d):
             shutil.rmtree(d)
 
-    def _write_manifest_file_at(
-        self, entries: list[dict[str, Any]], rel: str
-    ) -> str:
-        """Persist a manifest under a CALLER-CHOSEN relative path
-        (publish replicating a branch manifest main-side keeps the rel
-        name so the snapshot's manifest_files list stays valid).
-        tmp+rename like ``_write_manifest_file``."""
-        path = self._manifest_path(rel)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = os.path.join(
-            os.path.dirname(path), f".tmp.{uuid.uuid4().hex}"
-        )
-        with open(tmp, "w") as f:
-            json.dump(entries, f)
-        os.replace(tmp, path)
-        self._manifest_cache[rel] = list(entries)
-        return rel
-
     # -- restore / rollback --------------------------------------------------
 
     def restore_to(
@@ -3183,8 +3172,8 @@ class LakehouseTable:
         """Roll the table back to an earlier snapshot's state.
 
         Iceberg's ``rollback_to_snapshot`` moves the current-snapshot
-        pointer backwards; this format's commit log is a linear O_EXCL
-        version chain, so the same user-visible result is expressed the
+        pointer backwards; this format's commit log is a linear
+        exclusive-link version chain, so the same user-visible result is expressed the
         way Delta's RESTORE does it: commit a NEW snapshot that
         replicates the target's schema, partition spec, and manifest.
         Metadata-only (no data files move), the bad versions stay

@@ -12,7 +12,7 @@ Protocol (two-phase, coordinator record in ``<warehouse>/_transactions``):
 
 1. **Intent, then stage**: every ``txn.append(table, df)`` first
    records the PRE-ALLOCATED staged id in the transaction's PENDING
-   record (atomic ``os.replace``), THEN runs the distributed write
+   record (one ``atomic_write``), THEN runs the distributed write
    through the table's write-audit-publish path
    (``LakehouseTable.stage_append``) - full parallel write, zero
    visibility, files GC-protected by their staged marker. Intent-first
@@ -106,7 +106,7 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-from .table import LakehouseTable
+from .table import LakehouseTable, atomic_write
 
 _TXN_DIR = "_transactions"
 # pending records younger than this are LIVE transactions; claims
@@ -129,19 +129,11 @@ def _txn_path(catalog, txn_id: str) -> str:
     return os.path.join(_txn_dir(catalog), f"{txn_id}.json")
 
 
-def _write_doc(path: str, doc: dict) -> None:
-    """Atomic doc swap (tmp + rename); the COMMITTED swap of the record
-    path is the transaction's commit point."""
-    d = os.path.dirname(path)
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".tmp.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(doc, f)
-    os.replace(tmp, path)
-
-
 def _write_record(catalog, doc: dict) -> None:
-    _write_doc(_txn_path(catalog, doc["id"]), doc)
+    """Atomic record swap; the COMMITTED swap is the transaction's
+    commit point."""
+    os.makedirs(_txn_dir(catalog), exist_ok=True)
+    atomic_write(_txn_path(catalog, doc["id"]), json.dumps(doc))
 
 
 def list_records(catalog) -> list[dict]:
@@ -231,7 +223,7 @@ def backdate_for_recovery(catalog, txn_id: str, ms: int = 1) -> None:
         with open(claimed) as f:
             doc = json.load(f)
         doc["updated_ms"] = int(doc.get("updated_ms", _now_ms())) - ms
-        _write_doc(claimed, doc)
+        atomic_write(claimed, json.dumps(doc))
     finally:
         _release(claimed, path)
 
@@ -564,7 +556,7 @@ class MultiTableTransaction:
                 if snap is not None:
                     out.setdefault(p["table"], []).append(snap)
                 p["published"] = True
-                _write_doc(claimed, doc)  # progress survives a crash
+                atomic_write(claimed, json.dumps(doc))  # progress survives a crash
         except BaseException:
             # release the claim for recovery to finish the rest (the
             # published flags written so far ride along)
@@ -738,7 +730,7 @@ def recover_transactions(
     ]:
         path = os.path.join(d, name)
         if name.startswith(".tmp."):
-            try:  # crashed _write_doc swap: sweep once stale
+            try:  # crashed atomic_write swap: sweep once stale
                 if now - os.path.getmtime(path) * 1000 > grace_ms:
                     os.remove(path)
             except OSError:
@@ -827,7 +819,7 @@ def _process_claimed(
             if _table_exists(catalog, p["table"])
         ):
             doc["state"] = "committed"
-            _write_doc(claimed, doc)  # survive a crash mid-forward
+            atomic_write(claimed, json.dumps(doc))  # survive a crash mid-forward
             report[doc["id"]] = _roll_forward(catalog, doc, claimed, path)
             return
         for p in doc.get("participants", []):
@@ -892,7 +884,7 @@ def _roll_forward(catalog, doc: dict, claimed: str, path: str) -> str:
             )
             continue
         p["published"] = True
-        _write_doc(claimed, doc)
+        atomic_write(claimed, json.dumps(doc))
     if incomplete:
         _release(claimed, path)  # keep for audit / a later fix
         return "incomplete"

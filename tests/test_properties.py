@@ -1344,3 +1344,34 @@ def test_mv_array_percentile_fixed_case(spark, tmp_path_factory):
         tmp_path_factory,
         ops=[[("a", 4), ("c", -7)], "del_even", [], "del_neg"],
     )
+
+
+# -- one fixed case of each write-path family in the default lane --------
+#
+# MERGE against the set model and CDC replication convergence run their
+# Hypothesis sweeps only under ``-m slow``; these call the same bodies
+# with one fixed input each.
+
+
+def test_merge_matrix_fixed_case(spark, tmp_path_factory):
+    # matched rows under a condition, new keys inserted, table-only keys
+    # deleted by source
+    test_merge_matrix_matches_set_model.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        tbl_keys=[0, 1, 2, 3, 4, 6],
+        src_keys=[2, 3, 4, 5, 7],
+        when_matched="update",
+        when_not_matched="insert",
+        sync=True,
+        cond_mod=2,
+    )
+
+
+def test_cdc_replication_fixed_case(spark, tmp_path_factory):
+    test_cdc_replication_converges.hypothesis.inner_test(
+        spark,
+        tmp_path_factory,
+        ops=[("append", 0), ("mor_update", 3), ("cow_delete", 5),
+             ("mor_update", 10), ("append", 1)],
+    )
