@@ -10,7 +10,9 @@ The reference runs five checks over each incoming batch:
 
 Here all value-level checks collapse into ONE aggregation pass (A1 + A2 +
 A4 + A5 as a single job - at 100 TB you never scan a batch five times),
-and the schema check never touches data at all.
+and the schema check never touches data at all. The same pass reports the
+batch's ``datetime_col`` range, which ingest hands to the dedup anti-join
+as its key bounds instead of scanning the batch again.
 """
 
 from __future__ import annotations
@@ -53,8 +55,11 @@ def check_quality(
             metrics={},
         )
 
-    # single-pass aggregate: count, null counts, mins
+    # single-pass aggregate: count, null counts, mins, datetime range
+    has_dt = datetime_col in df.columns
     aggs = [F.count(F.lit(1)).alias("__rows")]
+    if has_dt:
+        aggs += [F.min(datetime_col).alias("__lo"), F.max(datetime_col).alias("__hi")]
     for c in df.columns:
         aggs.append((F.count(F.lit(1)) - F.count(F.col(c))).alias(f"__nulls_{c}"))
     for c in positive_cols:
@@ -64,6 +69,9 @@ def check_quality(
 
     n = row["__rows"]
     metrics = {"rows": n}
+    if has_dt:
+        metrics[f"min_{datetime_col}"] = row["__lo"]
+        metrics[f"max_{datetime_col}"] = row["__hi"]
     if n < min_rows:
         issues.append(f"too few rows: {n} < {min_rows}")
 
@@ -73,7 +81,7 @@ def check_quality(
             metrics[f"null_pct_{c}"] = null_pct
             if null_pct > max_null_pct:
                 issues.append(f"null ratio {null_pct:.3f} > {max_null_pct} in {c}")
-        if datetime_col in df.columns and row[f"__nulls_{datetime_col}"] == n:
+        if has_dt and row[f"__nulls_{datetime_col}"] == n:
             issues.append(f"{datetime_col} entirely null")
         for c in positive_cols:
             mn = row.get(f"__min_{c}")

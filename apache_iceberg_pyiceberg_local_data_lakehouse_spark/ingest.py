@@ -15,11 +15,18 @@ mapped step-by-step in SURVEY.md §3):
   persist ledger; append audit entry                     (:411-417)
 
 Engine changes for scale (SURVEY.md §7):
+- change detection is ONE query per run, not a check per folder: every
+  symbol folder's binaryFile md5 frame is unioned, left-joined once
+  against the latest ledger entries, and grouped by folder, so one
+  collect returns each folder's skip count and its new (path, checksum)
+  pairs. An idle poll costs the same few Spark jobs for 1 folder or 100.
 - the per-file loop becomes a per-symbol *batch*: all new files of a
   symbol are read as ONE DataFrame (Spark's multi-file parquet reader),
   so normalize/QC/dedup/append are one distributed job each, not O(files)
-  driver roundtrips. Per-file QC parity mode (``per_file=True``) keeps
-  the reference's file-granular accept/reject semantics for tests.
+  driver roundtrips. One aggregate pass over the batch feeds both the
+  quality gate and the dedup key bounds. Per-file QC parity mode
+  (``per_file=True``) keeps the reference's file-granular accept/reject
+  semantics for tests.
 - ledger + audit log live in lakehouse tables (``ops`` namespace), not
   JSON read-modify-write files (S10/S11 - a JSON array rewrite per run
   is not 100 TB-safe and cannot be written concurrently).
@@ -32,9 +39,10 @@ import os
 import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.sql.types import (
@@ -48,7 +56,7 @@ from pyspark.sql.types import (
 
 from .catalog import LakehouseCatalog
 from .functions.normalize import normalize
-from .functions.quality import QualityReport, check_quality
+from .functions.quality import MIN_ROWS_THRESHOLD, check_quality
 from .operators.dedup import dedup_against_table
 from .maintenance import expire_snapshots
 from .table import PartitionField
@@ -131,7 +139,7 @@ class IngestPipeline:
 
     def ledger_latest(self):
         """Current (path, checksum) ledger state as a DataFrame: latest
-        entry per path wins. Stays distributed - the scale path anti-joins
+        entry per path wins. Stays distributed - the scale path joins
         against this instead of collecting it."""
         df = self._ledger.to_df()
         w = Window.partitionBy("path").orderBy(F.desc("ingested_at"))
@@ -170,18 +178,18 @@ class IngestPipeline:
         ``lakehouse_scheduler.py --now``).
 
         ``per_file=False`` (default): batch all new files per symbol into
-        one DataFrame - the scale path. Change detection is one
-        distributed job per symbol (binaryFile + md5 anti-joined against
-        the ledger table); only the NEW files' (path, checksum) pairs
-        reach the driver, and their checksums are reused for the ledger
-        write - no per-file driver hashing anywhere.
+        one DataFrame - the scale path. Change detection is one query per
+        run over every symbol folder (``_detect_changes``: binaryFile + md5
+        left-joined once against the ledger table); only the NEW files'
+        (path, checksum) pairs reach the driver, and their checksums are
+        reused for the ledger write - no per-file driver hashing anywhere.
         ``per_file=True``: reference-parity mode - QC accepts/rejects each
         file independently (a bad file doesn't poison its siblings) and
         the md5 runs file-by-file on the driver exactly like the
         reference (``lakehouse_pipeline.py:350-357``).
         ``write_audit_publish=True``: stage each batch invisibly, audit
         the staged bytes, publish metadata-only or abort (see
-        ``_ingest_files``).
+        ``ingest_batch``).
         """
         t0 = time.time()
         summary = RunSummary(run_id=time.strftime("%Y%m%d_%H%M%S"))
@@ -190,11 +198,11 @@ class IngestPipeline:
             summary.duration_secs = time.time() - t0
             return summary
 
+        symbols = sorted(p for p in root.iterdir() if p.is_dir())
         ledger = self.ingested() if per_file else None
-        ledger_df = None if per_file else self.ledger_latest()
+        changes = {} if per_file or not symbols else self._detect_changes(symbols)
         ledger_updates: list[tuple[str, str]] = []
 
-        symbols = sorted(p for p in root.iterdir() if p.is_dir())
         for symbol_dir in symbols:
             table_id = f"{self.namespace}.{symbol_dir.name.lower()}"  # :330-331
             if per_file:
@@ -208,44 +216,15 @@ class IngestPipeline:
                         continue
                     new_entries.append((path, checksum))
             else:
-                from .sources.files import file_checksums
-
-                checks = file_checksums(self.spark, str(symbol_dir))
-                seen = ledger_df.withColumn("__seen", F.lit(1))
-                # Driver memory is bounded by the NEW-file count, never the
-                # discovered-file count: skips are counted with an agg and
-                # only the anti-join survivors are collected (those rows
-                # must reach the driver anyway for the ledger write).
-                joined = (
-                    checks.join(seen, on=["path", "checksum"], how="left")
-                    .select("path", "checksum", "__seen")
-                    .cache()
-                )
-                summary.files_skipped += (
-                    joined.agg(F.count("__seen")).collect()[0][0] or 0
-                )
-                new_entries = sorted(
-                    (r["path"], r["checksum"])
-                    for r in joined.filter(F.col("__seen").isNull())
-                    .select("path", "checksum")
-                    .collect()
-                )
-                joined.unpersist()
+                skipped, new_entries = changes.get(symbol_dir.name, (0, []))
+                summary.files_skipped += skipped
             if not new_entries:
                 continue
             summary.tables_processed += 1
 
-            groups = (
-                [[e] for e in new_entries] if per_file else [new_entries]
-            )
-            for group in groups:
-                appended = self._ingest_files(
-                    table_id,
-                    [p for p, _ in group],
-                    summary,
-                    write_audit_publish=write_audit_publish,
-                )
-                if appended is not None:
+            for group in [[e] for e in new_entries] if per_file else [new_entries]:
+                paths = [p for p, _ in group]
+                if self._ingest_files(table_id, paths, summary, write_audit_publish):
                     ledger_updates.extend(group)
 
             # M2 snapshot expiry per table (:401-405)
@@ -266,84 +245,122 @@ class IngestPipeline:
         self._append_audit(summary)
         return summary
 
-    def _ingest_files(
-        self,
-        table_id: str,
-        paths: list[str],
-        summary: RunSummary,
-        write_audit_publish: bool = False,
-    ) -> int | None:
-        """normalize -> QC -> ensure table -> dedup -> append for one batch.
-        Returns rows appended, or None if the batch was rejected.
+    def _detect_changes(
+        self, symbols: list[Path]
+    ) -> dict[str, tuple[int, list[tuple[str, str]]]]:
+        """Change detection for every symbol folder as ONE query: each
+        folder's md5 frame (listed exactly as a single-folder scan lists
+        it) is tagged with its folder name, the frames are unioned, and
+        the union is left-joined once against the latest ledger entries.
+        One grouped collect returns ``{folder: (skipped, new entries)}``
+        with the new (path, checksum) pairs sorted; a folder with no
+        files is absent (read it as ``(0, [])``). Driver memory is
+        bounded by the NEW-file count: skips are counted in the
+        aggregate, and only unseen pairs are collected (they must reach
+        the driver anyway for the ledger write)."""
+        from .sources.files import file_checksums
 
-        ``write_audit_publish=True`` inverts the QC/write order (Iceberg's
-        WAP pattern): the deduped batch is STAGED first (written once,
-        invisible), the quality audit runs over exactly the bytes that
-        would become visible, and the batch is then published with a
-        metadata-only commit - or aborted, leaving no snapshot and no
-        files. The default path audits the in-flight DataFrame and only
+        checks = reduce(
+            DataFrame.unionByName,
+            (
+                file_checksums(self.spark, str(d)).select(
+                    F.lit(d.name).alias("folder"), "path", "checksum"
+                )
+                for d in symbols
+            ),
+        )
+        seen = self.ledger_latest().withColumn("__seen", F.lit(1))
+        unseen = F.when(F.col("__seen").isNull(), F.struct("path", "checksum"))
+        rows = (
+            checks.join(seen, on=["path", "checksum"], how="left")
+            .groupBy("folder")
+            .agg(
+                F.count("__seen").alias("skipped"),
+                F.collect_list(unseen).alias("new"),  # drops the seen NULLs
+            )
+            .collect()
+        )
+        return {r["folder"]: (r["skipped"], sorted(map(tuple, r["new"]))) for r in rows}
+
+    def ingest_batch(
+        self, table_id: str, raw: DataFrame, write_audit_publish: bool = False
+    ) -> tuple[int | None, list[str]]:
+        """normalize -> QC -> ensure table -> dedup -> append for one batch
+        DataFrame; ``_ingest_files`` and the streaming micro-batches both
+        run it. Returns ``(rows appended, [])``, or ``(None, issues)`` if
+        the batch was rejected, in which case nothing is committed.
+
+        One aggregate pass over the batch serves both the gate and the
+        dedup key bounds, so ``dedup_against_table`` runs no probe of its
+        own. ``write_audit_publish=True`` inverts the QC/write order
+        (Iceberg's WAP pattern): the deduped batch is STAGED first
+        (written once, invisible), the quality audit runs over exactly the
+        bytes that would become visible, and the batch is then published
+        with a metadata-only commit - or aborted, leaving no snapshot and
+        no files. The default path audits the in-flight DataFrame and only
         then writes; both end with one data write, but WAP's audit can't
         be bypassed by a nondeterministic transform between QC and write."""
-        df = normalize(self.spark.read.parquet(*paths))  # S1 + F1/F2
-
+        df = normalize(raw)  # S1 + F1/F2
+        has_key = "DateTime" in df.columns
         spec = (
             [PartitionField(source="DateTime", transform="years", name="DateTime_year")]
-            if "DateTime" in df.columns
+            if has_key
             else []
         )  # M3 (:373-382)
 
         if write_audit_publish:
-            from .functions.quality import MIN_ROWS_THRESHOLD
-
             # min-rows gates the INCOMING batch (reference semantics,
             # lakehouse_pipeline.py:137) - dedup may legitimately shrink
-            # a re-ingested batch to zero. Parquet count() is
-            # metadata-only, so this rejects before any write.
-            if df.count() < MIN_ROWS_THRESHOLD:
-                summary.files_rejected += len(paths)
-                summary.quality_issues.append(
-                    f"{table_id}:{os.path.basename(paths[0])}: too few rows"
-                )
-                return None
+            # a re-ingested batch to zero - so this rejects before any write
+            key_range = [F.min("DateTime"), F.max("DateTime")] if has_key else []
+            n, *bounds = df.agg(F.count(F.lit(1)), *key_range).collect()[0]
+            if n < MIN_ROWS_THRESHOLD:
+                return None, ["too few rows"]
             table = self.catalog.ensure_table(table_id, df.schema, spec)
-            clean = dedup_against_table(df, table, key="DateTime")  # J1
+            clean = dedup_against_table(
+                df, table, key="DateTime", bounds=tuple(bounds) if has_key else None
+            )  # J1
             staged = table.stage_append(clean)
-            audit_df = table.staged_scan(staged)
-            report = check_quality(audit_df, min_rows=0)
+            report = check_quality(table.staged_scan(staged), min_rows=0)
             if not report.ok:
                 table.abort_staged(staged)
-                summary.files_rejected += len(paths)
-                summary.quality_issues.extend(
-                    f"{table_id}:{os.path.basename(paths[0])}: {i}"
-                    for i in report.issues
-                )
-                return None
+                return None, report.issues
             n = sum(e["rows"] for e in table.staged_entries(staged))
             if n > 0:
                 table.publish_staged(staged)
             else:
                 table.abort_staged(staged)  # empty-append short-circuit
-            summary.files_processed += len(paths)
-            summary.rows_appended += n
-            return n
+            return n, []
 
-        report: QualityReport = check_quality(df)  # P6/P7, A1/A2/A4/A5
+        report = check_quality(df)  # P6/P7, A1/A2/A4/A5
         if not report.ok:
-            summary.files_rejected += len(paths)
-            summary.quality_issues.extend(
-                f"{table_id}:{os.path.basename(paths[0])}: {i}" for i in report.issues
-            )
-            return None
-
+            return None, report.issues
         table = self.catalog.ensure_table(table_id, df.schema, spec)  # S8
-        clean = dedup_against_table(df, table, key="DateTime")  # J1
+        m = report.metrics
+        clean = dedup_against_table(
+            df, table, key="DateTime", bounds=(m["min_DateTime"], m["max_DateTime"])
+        )  # J1
         n = clean.count()
         if n > 0:  # empty-append short-circuit (:388-392)
             # hash-distributed write: O(partitions) files per append
             table.append(clean, optimize_write=True)  # S5
+        return n, []
+
+    def _ingest_files(
+        self, table_id: str, paths: list[str], summary: RunSummary, wap: bool
+    ) -> bool:
+        """``ingest_batch`` over ``paths`` read as one DataFrame, counted
+        into ``summary``. Returns whether the batch was accepted."""
+        n, issues = self.ingest_batch(table_id, self.spark.read.parquet(*paths), wap)
+        if n is None:
+            summary.files_rejected += len(paths)
+            summary.quality_issues.extend(
+                f"{table_id}:{os.path.basename(paths[0])}: {i}" for i in issues
+            )
+            return False
         summary.files_processed += len(paths)
         summary.rows_appended += n
-        return n
+        return True
 
     def _append_audit(self, s: RunSummary) -> None:
         """S10 audit entry - a table append, not a JSON rewrite."""

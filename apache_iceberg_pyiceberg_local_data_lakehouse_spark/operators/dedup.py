@@ -31,7 +31,7 @@ from ..table import LakehouseTable
 
 
 def dedup_against_table(
-    new_df: DataFrame, table: LakehouseTable, key: str = "DateTime"
+    new_df: DataFrame, table: LakehouseTable, key: str = "DateTime", bounds=None
 ) -> DataFrame:
     """The reference's ingest dedup, Spark-first.
 
@@ -40,10 +40,12 @@ def dedup_against_table(
     anti`` pipeline (``lakehouse_pipeline.py:206-217``), but distributed
     and range-pruned:
 
-    - the incoming batch's [min, max] key range (one tiny agg) prunes the
-      committed-key scan to overlapping files via manifest stats - for
-      append-mostly time-series, a new tick batch only touches the most
-      recent files, so the scan cost stays O(recent), not O(history);
+    - the incoming batch's [min, max] key range prunes the committed-key
+      scan to overlapping files via manifest stats - for append-mostly
+      time-series, a new tick batch only touches the most recent files,
+      so the scan cost stays O(recent), not O(history). ``bounds`` passes
+      that ``(min, max)`` in when the caller already aggregated the batch
+      (the ingest quality pass does); without it one tiny agg computes it;
     - column pruning reaches the parquet footers (key column only);
     - the anti-join broadcasts the key set when small, shuffles when not.
     """
@@ -53,8 +55,9 @@ def dedup_against_table(
             return new_df
         from ..table import _range_keep
 
-        bounds = new_df.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
-        lo, hi = bounds["lo"], bounds["hi"]
+        if bounds is None:
+            bounds = new_df.agg(F.min(key), F.max(key)).collect()[0]
+        lo, hi = bounds
         if lo is None:  # all-null keys: nothing can match committed keys
             return new_df
         # transform-aware pruning (partition values + min/max stats): on a

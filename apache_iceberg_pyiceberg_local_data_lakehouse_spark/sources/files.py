@@ -4,9 +4,9 @@
   handles multi-file/recursive layouts; at scale, file listing happens on
   the driver against the FS/object store, reads on executors.
 - S3: directory-per-table layout - one DataFrame per first-level folder.
-- S12: content checksums via the binaryFile source + ``md5`` (used when
-  ledger parity with the reference's md5-of-bytes is needed at scale;
-  local runs use the streaming-hash in ingest.py).
+- S12: content checksums via the binaryFile source + ``md5``: the batch
+  ingest's change detection, matching the reference's md5-of-bytes
+  ledger exactly.
 - X5: binaryFile ingestion for multimodal blobs (images/audio) into
   binary columns.
 """

@@ -55,8 +55,9 @@ def stream_symbol(
     """Streaming ingest of one symbol folder into its gold table.
 
     ``readStream`` + checkpoint = ST1 trigger + ST2 per-path exactly-once,
-    natively. Each micro-batch reuses the batch pipeline operators, so
-    batch and streaming share one code path (and one set of tests).
+    natively. Each micro-batch runs ``IngestPipeline.ingest_batch``, so
+    batch and streaming share one code path (and one set of tests); a
+    rejected or empty batch fails its quality gate and never commits.
     Returns the StreamingQuery handle."""
     spark = pipeline.spark
     symbol = Path(symbol_dir).name.lower()
@@ -69,30 +70,10 @@ def stream_symbol(
         .parquet(symbol_dir)
     )
 
-    def ingest_batch(batch_df, batch_id: int):
-        from ..functions.normalize import normalize
-        from ..functions.quality import check_quality
-        from ..operators.dedup import dedup_against_table
-        from ..table import PartitionField
-
-        if batch_df.isEmpty():
-            return
-        df = normalize(batch_df)
-        report = check_quality(df)
-        if not report.ok:
-            return  # rejected batches never commit (QC gate)
-        spec = (
-            [PartitionField("DateTime", "years", "DateTime_year")]
-            if "DateTime" in df.columns
-            else []
-        )
-        table = pipeline.catalog.ensure_table(table_id, df.schema, spec)
-        clean = dedup_against_table(df, table, key="DateTime")
-        if clean.count() > 0:
-            table.append(clean, optimize_write=True)
-
     writer = (
-        stream.writeStream.foreachBatch(ingest_batch)
+        stream.writeStream.foreachBatch(
+            lambda batch_df, _batch_id: pipeline.ingest_batch(table_id, batch_df)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
     )

@@ -3,7 +3,8 @@ commit-time stats must not degenerate into per-file driver loops.
 
 - The batch ingest mode must never call the driver-side md5
   (``ingest.file_checksum``) - checksums come from a distributed
-  binaryFile job anti-joined against the ledger table.
+  binaryFile job left-joined against the ledger table, and only the
+  unseen files' (path, checksum) pairs reach the driver.
 - Appends with hundreds of output files must still produce a complete
   manifest (rows, bytes, per-column min/max for every file) - the footer
   reads run as a Spark job past ``_STATS_JOB_THRESHOLD``.
@@ -116,12 +117,38 @@ def test_large_append_manifest_complete(spark, tmp_path):
     assert pruned.filter(F.col("k") == 5).count() == 1
 
 
+def _file_pairs(schema, rows) -> int | None:
+    """(path, checksum) pairs a collect brought to the driver: one per row
+    when the first columns are ``path, checksum``, plus one per element of
+    any collected list of ``(path, checksum, ...)`` structs. None when the
+    collect carries no such pairs at all."""
+    from pyspark.sql.types import ArrayType, StructType
+
+    def is_pair(fields):
+        return [f.name for f in fields[:2]] == ["path", "checksum"]
+
+    lists = [
+        f.name
+        for f in schema.fields
+        if isinstance(f.dataType, ArrayType)
+        and isinstance(f.dataType.elementType, StructType)
+        and is_pair(f.dataType.elementType.fields)
+    ]
+    top = is_pair(schema.fields)
+    if not (top or lists):
+        return None
+    return (len(rows) if top else 0) + sum(
+        len(r[name] or []) for r in rows for name in lists
+    )
+
+
 def test_rerun_collect_bounded_by_new_file_count(spark, tmp_path, monkeypatch):
     """A re-run over a large already-ingested tree must NOT pull one row
     per discovered file to the driver: skip counting is an aggregate, and
-    the only (path, checksum)-shaped collect is the anti-join survivors -
+    the only (path, checksum) pairs collected are the unseen files -
     bounded by the NEW-file count (0 on a no-op re-run, 3 after 3 late
-    files), not the 1000 discovered files."""
+    files), not the 1000 discovered files. Pairs are counted whether they
+    arrive as rows or inside a collected list."""
     # patch the CONCRETE class (pyspark.sql.DataFrame is the abstract
     # base in Spark 4; instances override collect)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -138,15 +165,16 @@ def test_rerun_collect_bounded_by_new_file_count(spark, tmp_path, monkeypatch):
 
     def spy(self):
         rows = orig_collect(self)
-        names = [f.name for f in self.schema.fields]
-        if names[:2] == ["path", "checksum"]:
-            collected_file_rows.append(len(rows))
+        pairs = _file_pairs(self.schema, rows)
+        if pairs is not None:
+            collected_file_rows.append(pairs)
         return rows
 
     monkeypatch.setattr(DataFrame, "collect", spy)
 
     s2 = pipeline.run(str(tmp_path / "src"))
     assert s2.files_skipped == n_files and s2.files_processed == 0
+    assert collected_file_rows, "no (path, checksum) collect was seen"
     assert all(n == 0 for n in collected_file_rows), collected_file_rows
 
     collected_file_rows.clear()
