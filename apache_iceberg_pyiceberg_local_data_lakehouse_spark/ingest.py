@@ -24,12 +24,16 @@ Engine changes for scale (SURVEY.md §7):
   symbol are read as ONE DataFrame (Spark's multi-file parquet reader),
   so normalize/QC/dedup/append are one distributed job each, not O(files)
   driver roundtrips. One aggregate pass over the batch feeds both the
-  quality gate and the dedup key bounds. Per-file QC parity mode
-  (``per_file=True``) keeps the reference's file-granular accept/reject
-  semantics for tests.
+  quality gate and the dedup key bounds, and the deduped batch is staged
+  once and published metadata-only in both modes (default and
+  write-audit-publish), so its anti-join runs once. Per-file QC parity
+  mode (``per_file=True``) keeps the reference's file-granular
+  accept/reject semantics for tests.
 - ledger + audit log live in lakehouse tables (``ops`` namespace), not
   JSON read-modify-write files (S10/S11 - a JSON array rewrite per run
-  is not 100 TB-safe and cannot be written concurrently).
+  is not 100 TB-safe and cannot be written concurrently). Their rows
+  are already on the driver, so the driver writes them
+  (``LakehouseTable.append_rows``): no Spark job per bookkeeping row.
 """
 
 from __future__ import annotations
@@ -161,10 +165,7 @@ class IngestPipeline:
         if not entries:
             return
         now = datetime.now(tz=timezone.utc).replace(tzinfo=None)
-        df = self.spark.createDataFrame(
-            [(p, c, now) for p, c in entries], LEDGER_SCHEMA
-        )
-        self._ledger.append(df)
+        self._ledger.append_rows([(p, c, now) for p, c in entries])
 
     # -- pipeline ------------------------------------------------------------
 
@@ -285,21 +286,25 @@ class IngestPipeline:
     def ingest_batch(
         self, table_id: str, raw: DataFrame, write_audit_publish: bool = False
     ) -> tuple[int | None, list[str]]:
-        """normalize -> QC -> ensure table -> dedup -> append for one batch
-        DataFrame; ``_ingest_files`` and the streaming micro-batches both
-        run it. Returns ``(rows appended, [])``, or ``(None, issues)`` if
-        the batch was rejected, in which case nothing is committed.
+        """normalize -> QC -> ensure table -> dedup -> stage -> publish
+        for one batch DataFrame; ``_ingest_files`` and the streaming
+        micro-batches both run it. Returns ``(rows appended, [])``, or
+        ``(None, issues)`` if the batch was rejected, in which case
+        nothing is committed.
 
-        One aggregate pass over the batch serves both the gate and the
-        dedup key bounds, so ``dedup_against_table`` runs no probe of its
-        own. ``write_audit_publish=True`` inverts the QC/write order
-        (Iceberg's WAP pattern): the deduped batch is STAGED first
-        (written once, invisible), the quality audit runs over exactly the
-        bytes that would become visible, and the batch is then published
-        with a metadata-only commit - or aborted, leaving no snapshot and
-        no files. The default path audits the in-flight DataFrame and only
-        then writes; both end with one data write, but WAP's audit can't
-        be bypassed by a nondeterministic transform between QC and write."""
+        Both modes dedup and write the batch ONCE: the deduped batch is
+        staged (hash-distributed by partition, so O(partitions) files),
+        its row count is read from the staged files' footers, and it is
+        published with a metadata-only commit - or aborted when it holds
+        no rows (the reference's empty-append short-circuit, :388-392),
+        leaving no snapshot and no files. The default path gates the
+        in-flight DataFrame before the write, and that one aggregate
+        pass also gives the dedup key bounds, so ``dedup_against_table``
+        runs no probe of its own. ``write_audit_publish=True`` (Iceberg's
+        WAP pattern) gates only the incoming row count before the write
+        and audits exactly the staged bytes that would become visible,
+        so a nondeterministic transform between QC and write cannot
+        bypass it."""
         df = normalize(raw)  # S1 + F1/F2
         has_key = "DateTime" in df.columns
         spec = (
@@ -316,34 +321,27 @@ class IngestPipeline:
             n, *bounds = df.agg(F.count(F.lit(1)), *key_range).collect()[0]
             if n < MIN_ROWS_THRESHOLD:
                 return None, ["too few rows"]
-            table = self.catalog.ensure_table(table_id, df.schema, spec)
-            clean = dedup_against_table(
-                df, table, key="DateTime", bounds=tuple(bounds) if has_key else None
-            )  # J1
-            staged = table.stage_append(clean)
+        else:
+            report = check_quality(df)  # P6/P7, A1/A2/A4/A5
+            if not report.ok:
+                return None, report.issues
+            m = report.metrics
+            bounds = (m["min_DateTime"], m["max_DateTime"])
+        table = self.catalog.ensure_table(table_id, df.schema, spec)  # S8
+        clean = dedup_against_table(
+            df, table, key="DateTime", bounds=tuple(bounds) if has_key else None
+        )  # J1
+        staged = table.stage_append(clean, optimize_write=True)  # S5
+        if write_audit_publish:
             report = check_quality(table.staged_scan(staged), min_rows=0)
             if not report.ok:
                 table.abort_staged(staged)
                 return None, report.issues
-            n = sum(e["rows"] for e in table.staged_entries(staged))
-            if n > 0:
-                table.publish_staged(staged)
-            else:
-                table.abort_staged(staged)  # empty-append short-circuit
-            return n, []
-
-        report = check_quality(df)  # P6/P7, A1/A2/A4/A5
-        if not report.ok:
-            return None, report.issues
-        table = self.catalog.ensure_table(table_id, df.schema, spec)  # S8
-        m = report.metrics
-        clean = dedup_against_table(
-            df, table, key="DateTime", bounds=(m["min_DateTime"], m["max_DateTime"])
-        )  # J1
-        n = clean.count()
-        if n > 0:  # empty-append short-circuit (:388-392)
-            # hash-distributed write: O(partitions) files per append
-            table.append(clean, optimize_write=True)  # S5
+        n = sum(e["rows"] for e in table.staged_entries(staged))
+        if n > 0:
+            table.publish_staged(staged)
+        else:
+            table.abort_staged(staged)
         return n, []
 
     def _ingest_files(
@@ -365,7 +363,7 @@ class IngestPipeline:
     def _append_audit(self, s: RunSummary) -> None:
         """S10 audit entry - a table append, not a JSON rewrite."""
         now = datetime.now(tz=timezone.utc).replace(tzinfo=None)
-        df = self.spark.createDataFrame(
+        self._audit.append_rows(
             [
                 (
                     s.run_id,
@@ -378,7 +376,5 @@ class IngestPipeline:
                     s.rows_appended,
                     "; ".join(s.quality_issues) or None,
                 )
-            ],
-            AUDIT_SCHEMA,
+            ]
         )
-        self._audit.append(df)

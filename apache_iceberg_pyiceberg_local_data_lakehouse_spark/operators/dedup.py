@@ -3,9 +3,10 @@
 J1 - the reference's only join: remove incoming rows whose key already
 exists in the committed table (``/root/reference/lakehouse_pipeline.py:
 204-227``: project existing keys -> unique -> is_in -> invert -> filter).
-Spark form: a left anti-join. Catalyst picks broadcast-hash-anti when the
-key set is small and shuffled-hash/SMJ at scale; either way the key
-projection is pushed into the table scan.
+Spark form: a left anti-join, with no unique step (an anti-join's output
+does not depend on how often a key repeats). Catalyst picks
+broadcast-hash-anti when the key set is small and shuffled-hash/SMJ at
+scale; either way the key projection is pushed into the table scan.
 
 Reference semantics preserved exactly (SURVEY.md §2.3 note + §7.4):
 - dedup is only *against committed data* - intra-batch duplicates all
@@ -35,10 +36,13 @@ def dedup_against_table(
 ) -> DataFrame:
     """The reference's ingest dedup, Spark-first.
 
-    Anti-join against the *projected, distinct* key column of the table -
-    exactly the reference's ``scan(selected_fields=(key,)) -> unique ->
-    anti`` pipeline (``lakehouse_pipeline.py:206-217``), but distributed
-    and range-pruned:
+    Anti-join against the *projected* key column of the table - the
+    reference's ``scan(selected_fields=(key,)) -> unique -> anti``
+    pipeline (``lakehouse_pipeline.py:206-217``), distributed and
+    range-pruned, without the unique step: a left anti join keeps a row
+    iff its key matches NO build-side key, so how often a key repeats
+    on the build side cannot change the result (and NULL keys match
+    nothing either way); a ``distinct`` would only add a shuffle job:
 
     - the incoming batch's [min, max] key range prunes the committed-key
       scan to overlapping files via manifest stats - for append-mostly
@@ -65,9 +69,7 @@ def dedup_against_table(
         # it touches even for files with no usable stats
         part = next((p for p in snap.partition_spec if p.source == key), None)
         keep = _range_keep(key, lo, hi, part, None)
-        existing_keys = (
-            table.scan(selected_fields=[key], file_filter=keep).distinct()
-        )
+        existing_keys = table.scan(selected_fields=[key], file_filter=keep)
         return new_df.join(existing_keys, on=key, how="left_anti")
     except Exception:
         # graceful degradation: dedup skipped, all rows pass (:225-227)

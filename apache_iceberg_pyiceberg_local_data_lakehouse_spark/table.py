@@ -17,12 +17,13 @@ Spark-native* table format with the same semantics:
   the version is taken (optimistic concurrency, like Iceberg's), and a
   reader never sees a half-written snapshot; ``version-hint.text`` is
   then replaced for fast current-version lookup.
-- **Data**: zstd Parquet written by Spark executors; file-level pruning
-  uses manifest stats (partition values + min/max) before Spark ever
-  lists a file - the engine-side analogue of Iceberg's hidden
-  partitioning + file skipping.
+- **Data**: zstd Parquet written by Spark executors (rows already on
+  the driver, such as ingest bookkeeping, are written by the driver:
+  ``append_rows``); file-level pruning uses manifest stats (partition
+  values + min/max) before Spark ever lists a file - the engine-side
+  analogue of Iceberg's hidden partitioning + file skipping.
 - **Scale**: manifests store only per-file metadata (KBs per thousand
-  files); data moves exclusively through Spark jobs. On a 1000-executor
+  files); batch data moves through Spark jobs. On a 1000-executor
   cluster the driver handles metadata exactly as PyIceberg's client does,
   while reads/writes stay distributed.
 """
@@ -32,6 +33,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import threading
 import time
 import uuid
@@ -244,6 +246,11 @@ def atomic_write(path: str, data: str, *, exclusive: bool = False) -> None:
             os.unlink(tmp)
         except FileNotFoundError:
             pass  # replaced into place
+    _fsync_dir(d)
+
+
+def _fsync_dir(d: str) -> None:
+    """Make the names created in directory ``d`` survive a crash."""
     fd = os.open(d, os.O_RDONLY)
     try:
         os.fsync(fd)
@@ -493,6 +500,20 @@ class LakehouseTable:
                 _footer_entry(f, p, stat_cols, location, bloom_cols)
                 for f, p in tasks
             ]
+        # Spark writes a zero-row file when a write's first task is
+        # empty; the schema lives in the snapshot, so it is dropped here
+        # rather than committed (and an all-empty write leaves no dir)
+        for e in entries:
+            if not e["rows"]:
+                d, name = os.path.split(os.path.join(location, e["path"]))
+                for fn in (name, f".{name}.crc"):  # and its checksum file
+                    try:
+                        os.remove(os.path.join(d, fn))
+                    except FileNotFoundError:
+                        pass
+        entries = [e for e in entries if e["rows"]]
+        if not entries:
+            shutil.rmtree(batch_dir, ignore_errors=True)
         return entries
 
     def append(
@@ -530,6 +551,86 @@ class LakehouseTable:
         files whose filter excludes the key - the point-lookup analogue
         of min/max skipping, for columns whose values scatter (ids,
         hashes) so range stats never prune."""
+        df, spec = self._prepare_append(
+            df,
+            optimize_write=optimize_write,
+            cluster_by=cluster_by,
+            merge_schema=merge_schema,
+            identity_epoch=identity_epoch,
+        )
+        new_files = self._write_files(
+            df, spec, bloom_cols=tuple(bloom_cols or ())
+        )
+        return self._commit_append(
+            new_files, max_retries=max_retries, extra_summary=extra_summary
+        )
+
+    def append_rows(self, rows: list, max_retries: int = 5) -> Snapshot:
+        """Append rows that are already on the driver (an ingest ledger
+        entry, an audit record) without a Spark job: the driver writes
+        them as one zstd parquet file and commits it like ``append``.
+
+        Each row is a tuple in table-schema order (or a dict/Row). Values
+        go through their Spark type's ``toInternal``, so the stored
+        instants equal what ``createDataFrame`` stores whatever the
+        process time zone. The file and its new directory are fsynced
+        before the commit. A table that declares a partition spec, a
+        CHECK constraint, or a generated or identity column takes
+        ``append(createDataFrame(rows, schema))`` instead, so every
+        write-time rule still holds."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        snap = self.snapshot()
+        schema = StructType.fromJson(snap.schema_json)
+        if snap.partition_spec or any(
+            k.startswith(("constraint.", "generated.", "identity."))
+            for k in self.properties()
+        ):
+            return self.append(
+                self.spark.createDataFrame(rows, schema), max_retries=max_retries
+            )
+        entries = []
+        if rows:
+            internal = [schema.toInternal(r) for r in rows]
+            batch = pa.table(
+                {
+                    f.name: pa.array(
+                        [r[i] for r in internal], type=to_arrow_type(f.dataType)
+                    )
+                    for i, f in enumerate(schema.fields)
+                }
+            )
+            batch_dir = os.path.join(self.data_dir, uuid.uuid4().hex[:12])
+            os.makedirs(batch_dir)
+            path = os.path.join(
+                batch_dir, f"part-00000-{uuid.uuid4()}.zstd.parquet"
+            )
+            with open(path, "wb") as f:
+                pq.write_table(batch, f, compression="zstd")
+                f.flush()
+                os.fsync(f.fileno())
+            _fsync_dir(batch_dir)
+            _fsync_dir(self.data_dir)
+            entries.append(
+                _footer_entry(path, {}, set(schema.fieldNames()), self.location)
+            )
+        return self._commit_append(entries, max_retries=max_retries)
+
+    def _prepare_append(
+        self,
+        df: DataFrame,
+        optimize_write: bool = False,
+        cluster_by: list[str] | None = None,
+        merge_schema: bool = False,
+        identity_epoch: str | None = None,
+    ) -> tuple[DataFrame, list[PartitionField]]:
+        """Every write-time rule an appended batch passes, for ``append``
+        and ``stage_append`` alike: schema merge, generated and identity
+        fill, writer-schema and CHECK validation, then the write
+        distribution. Returns the batch to write and the partition spec
+        to write it under."""
         if merge_schema:
             # Delta's mergeSchema write option: reconcile the table
             # schema to the batch (new columns add, legal widenings
@@ -593,12 +694,7 @@ class LakehouseTable:
             df = df.repartitionByRange(
                 max(1, df.rdd.getNumPartitions()), *cols
             ).sortWithinPartitions(*cols)
-        new_files = self._write_files(
-            df, spec, bloom_cols=tuple(bloom_cols or ())
-        )
-        return self._commit_append(
-            new_files, max_retries=max_retries, extra_summary=extra_summary
-        )
+        return df, spec
 
     def _validate_append_schema(
         self, df: DataFrame, snap: Snapshot | None = None
@@ -1994,6 +2090,7 @@ class LakehouseTable:
         df: DataFrame,
         bloom_cols: list[str] | None = None,
         staged_id: str | None = None,
+        optimize_write: bool = False,
     ) -> str:
         """Write an append's data files WITHOUT committing a snapshot
         (Iceberg's write-audit-publish pattern). The staged rows are
@@ -2003,7 +2100,11 @@ class LakehouseTable:
         is how a pipeline gates a multi-TB batch behind quality checks
         without either double-writing it or letting consumers see it
         early. Staged files are protected from orphan GC by their marker
-        until published or aborted.
+        until published or aborted. The batch passes the same write-time
+        rules as ``append`` (``_prepare_append``: generated and identity
+        fill, writer schema, CHECK constraints, ``optimize_write``
+        distribution), so a staged batch can publish nothing that
+        ``append`` would refuse.
 
         ``staged_id`` lets a coordinator PRE-ALLOCATE the id and record
         its intent durably BEFORE the write (multi-table transactions,
@@ -2020,9 +2121,8 @@ class LakehouseTable:
                 raise ValueError(
                     f"staged id {staged_id!r} already exists"
                 )
-        entries = self._write_files(
-            df, self.partition_spec, bloom_cols=tuple(bloom_cols or ())
-        )
+        df, spec = self._prepare_append(df, optimize_write=optimize_write)
+        entries = self._write_files(df, spec, bloom_cols=tuple(bloom_cols or ()))
         staged_id = staged_id or uuid.uuid4().hex[:16]
         os.makedirs(self._staged_dir(), exist_ok=True)
         doc = {

@@ -99,6 +99,14 @@ def test_dedup_append_union_semantics(spark, tmp_path_factory, a, b):
     assert again.count() == 0
 
 
+def test_dedup_append_union_fixed_case(spark, tmp_path_factory):
+    # A's intra-batch duplicate lands twice, so the anti-join's build side
+    # repeats key 1; B repeats keys both committed (3) and new (5)
+    test_dedup_append_union_semantics.hypothesis.inner_test(
+        spark, tmp_path_factory, a=[1, 1, 2, 3], b=[2, 3, 3, 4, 5, 5]
+    )
+
+
 @settings(
     max_examples=8,
     deadline=None,

@@ -5621,6 +5621,23 @@ def test_sql_transaction_two_table_atomic_ingest(catalog, spark):
     assert rb["operation"] == "rollback transaction"
 
 
+def test_sql_transaction_insert_enforces_check_constraint(catalog, spark):
+    """An INSERT staged inside BEGIN .. COMMIT is checked like an
+    autocommit INSERT: a CHECK violation raises at the statement and
+    the COMMIT publishes nothing."""
+    t = catalog.create_table(
+        "gold.txk", spark.createDataFrame([], "k long, v long").schema
+    )
+    t.add_constraint("v_pos", "v > 0")
+    v0 = t.current_version()
+    catalog.sql("BEGIN")
+    with pytest.raises(ValueError, match="CHECK constraint"):
+        catalog.sql("INSERT INTO gold.txk SELECT 1, -1")
+    catalog.sql("COMMIT")
+    assert t.current_version() == v0
+    assert t.to_df().count() == 0 and t.list_staged() == []
+
+
 def test_sql_transaction_rollback_and_dml_guard(catalog, spark):
     """ROLLBACK discards every staged INSERT; row-mutating verbs with
     no staged form refuse to run inside an open transaction (they

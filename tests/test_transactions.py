@@ -326,6 +326,24 @@ def test_dropped_participant_table_does_not_brick_recovery(cat, spark):
     assert audit.to_df().count() == 1
 
 
+def test_txn_append_enforces_check_constraint(cat, spark):
+    """A transaction's staged append passes the same write-time rules as
+    ``append``: a row violating a CHECK raises at staging, the block
+    aborts, and neither table publishes anything."""
+    data, audit = _tables(cat, spark)
+    data.add_constraint("v_pos", "v > 0")
+    versions = (data.current_version(), audit.current_version())
+    with pytest.raises(ValueError, match="CHECK constraint"):
+        with cat.transaction() as txn:
+            txn.append("gold.ops", spark.createDataFrame(
+                [("r1", 1)], "run string, n long"))
+            txn.append("gold.trades", spark.createDataFrame(
+                [(1, -10)], "k long, v long"))
+    assert (data.current_version(), audit.current_version()) == versions
+    assert data.to_df().count() == 0 and audit.to_df().count() == 0
+    assert data.list_staged() == [] and audit.list_staged() == []
+
+
 def test_stage_append_rejects_duplicate_staged_id(cat, spark):
     """review r12: a reused pre-allocated staged id must raise, not
     silently orphan the first batch and publish the wrong one."""

@@ -74,6 +74,25 @@ def test_abort_leaves_no_trace(table):
         table.staged_scan(sid)
 
 
+def test_stage_append_validates_writer_schema(spark, tmp_path):
+    """Staging checks the writer schema as ``append`` does: a double
+    column into a float table raises the same error, and stages
+    nothing."""
+    cat = LakehouseCatalog(spark, str(tmp_path / "wh"))
+    cat.create_namespace("gold")
+    t = cat.create_table(
+        "gold.f", spark.createDataFrame([], "k long, v float").schema
+    )
+    batch = spark.createDataFrame([(1, 1.5)], "k long, v double")
+    with pytest.raises(ValueError) as by_append:
+        t.append(batch)
+    with pytest.raises(ValueError) as by_stage:
+        t.stage_append(batch)
+    assert str(by_stage.value) == str(by_append.value)
+    assert "cannot be read under the table's float" in str(by_stage.value)
+    assert t.list_staged() == [] and t.to_df().count() == 0
+
+
 def test_publish_rebases_over_concurrent_append(table):
     spark = table.spark
     batch = spark.range(100, 150).select(
