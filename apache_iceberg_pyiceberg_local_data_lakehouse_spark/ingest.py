@@ -29,6 +29,14 @@ Engine changes for scale (SURVEY.md §7):
   write-audit-publish), so its anti-join runs once. Per-file QC parity
   mode (``per_file=True``) keeps the reference's file-granular
   accept/reject semantics for tests.
+- the per-table batches of one run overlap: each table's folders go to
+  one worker of a thread pool, at most ``defaultParallelism`` at a
+  time. A batch spends most of its time waiting on JVM planning and job
+  launch, not on executor work, so two tables no longer queue behind
+  each other. Folders that name the same table (``EURUSD/`` and
+  ``eurusd/``) stay serial inside one worker, or both batches would
+  dedup against the same committed keys. Results merge on the calling
+  thread in folder order, so the summary reads as a serial run's.
 - ledger + audit log live in lakehouse tables (``ops`` namespace), not
   JSON read-modify-write files (S10/S11 - a JSON array rewrite per run
   is not 100 TB-safe and cannot be written concurrently). Their rows
@@ -41,6 +49,7 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from functools import reduce
@@ -57,6 +66,7 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.util import inheritable_thread_target
 
 from .catalog import LakehouseCatalog
 from .functions.normalize import normalize
@@ -191,6 +201,17 @@ class IngestPipeline:
         ``write_audit_publish=True``: stage each batch invisibly, audit
         the staged bytes, publish metadata-only or abort (see
         ``ingest_batch``).
+
+        New files are found on the calling thread. Then each table's
+        folders run on a thread pool of width ``min(tables with work,
+        defaultParallelism)``, one worker per table, with the caller's
+        job group, job tags and session tags. The counters and
+        ``quality_issues`` merge in sorted folder order, as a serial run
+        orders them, and the ledger and audit rows are written once
+        after the pool. If a table fails, every worker still finishes;
+        then the first failing table in folder order re-raises and no
+        ledger or audit row is written. Tables that did commit dedup
+        their batch to 0 rows on the re-run.
         """
         t0 = time.time()
         summary = RunSummary(run_id=time.strftime("%Y%m%d_%H%M%S"))
@@ -202,10 +223,10 @@ class IngestPipeline:
         symbols = sorted(p for p in root.iterdir() if p.is_dir())
         ledger = self.ingested() if per_file else None
         changes = {} if per_file or not symbols else self._detect_changes(symbols)
-        ledger_updates: list[tuple[str, str]] = []
-
-        for symbol_dir in symbols:
-            table_id = f"{self.namespace}.{symbol_dir.name.lower()}"  # :330-331
+        # folders with new files, grouped by the table they feed:
+        # EURUSD/ and eurusd/ both map to gold.eurusd and must not race
+        work: dict[str, list[tuple[int, list[tuple[str, str]]]]] = {}
+        for i, symbol_dir in enumerate(symbols):
             if per_file:
                 files = sorted(symbol_dir.rglob("*.parquet"))  # :343 (S2)
                 new_entries: list[tuple[str, str]] = []
@@ -219,27 +240,35 @@ class IngestPipeline:
             else:
                 skipped, new_entries = changes.get(symbol_dir.name, (0, []))
                 summary.files_skipped += skipped
-            if not new_entries:
-                continue
-            summary.tables_processed += 1
+            if new_entries:
+                summary.tables_processed += 1
+                table_id = f"{self.namespace}.{symbol_dir.name.lower()}"  # :330-331
+                work.setdefault(table_id, []).append((i, new_entries))
 
-            for group in [[e] for e in new_entries] if per_file else [new_entries]:
-                paths = [p for p, _ in group]
-                if self._ingest_files(table_id, paths, summary, write_audit_publish):
-                    ledger_updates.extend(group)
-
-            # M2 snapshot expiry per table (:401-405)
-            try:
-                table = self.catalog.load_table(table_id)
-                expire_snapshots(
-                    table,
-                    older_than_ms=int(
-                        (time.time() - self.expire_older_than_days * 86400) * 1000
-                    ),
-                    retain_last=self.retain_last,
+        # one worker per table; each task gets its own clone of the
+        # caller's job group, job tags and session tags
+        width = min(len(work), self.spark.sparkContext.defaultParallelism) or 1
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(self.spark)(self._ingest_table),
+                    table_id,
+                    folders,
+                    per_file,
+                    write_audit_publish,
                 )
-            except Exception:
-                pass
+                for table_id, folders in work.items()
+            ]
+        # every worker has finished; merge in folder order, so the first
+        # failing table in that order raises before any ledger row lands
+        ledger_updates: list[tuple[str, str]] = []
+        results = [r for f in futures for r in f.result()]
+        for _, part, done in sorted(results, key=lambda r: r[0]):
+            summary.files_processed += part.files_processed
+            summary.files_rejected += part.files_rejected
+            summary.rows_appended += part.rows_appended
+            summary.quality_issues.extend(part.quality_issues)
+            ledger_updates.extend(done)
 
         self._record_ledger(ledger_updates)
         summary.duration_secs = time.time() - t0
@@ -343,6 +372,39 @@ class IngestPipeline:
         else:
             table.abort_staged(staged)
         return n, []
+
+    def _ingest_table(
+        self,
+        table_id: str,
+        folders: list[tuple[int, list[tuple[str, str]]]],
+        per_file: bool,
+        wap: bool,
+    ) -> list[tuple[int, RunSummary, list[tuple[str, str]]]]:
+        """One table's share of a run: each ``(folder index, new
+        entries)`` in order, as one batch or (``per_file``) one batch per
+        file, then snapshot expiry. Returns ``(folder index, its counts,
+        its accepted ledger entries)`` per folder."""
+        out = []
+        for i, entries in folders:
+            part = RunSummary(run_id="")
+            done: list[tuple[str, str]] = []
+            for group in [[e] for e in entries] if per_file else [entries]:
+                if self._ingest_files(table_id, [p for p, _ in group], part, wap):
+                    done.extend(group)
+            out.append((i, part, done))
+
+        # M2 snapshot expiry per table (:401-405)
+        try:
+            expire_snapshots(
+                self.catalog.load_table(table_id),
+                older_than_ms=int(
+                    (time.time() - self.expire_older_than_days * 86400) * 1000
+                ),
+                retain_last=self.retain_last,
+            )
+        except Exception:
+            pass
+        return out
 
     def _ingest_files(
         self, table_id: str, paths: list[str], summary: RunSummary, wap: bool

@@ -2328,16 +2328,30 @@ class LakehouseTable:
         return snap
 
     def abort_staged(self, staged_id: str) -> int:
-        """Discard a staged append: delete its data files and marker.
-        Returns the number of files removed."""
+        """Discard a staged append: delete its data files and marker,
+        and each batch directory they lived in once nothing but Spark's
+        ``_SUCCESS`` and ``.crc`` side files is left in it (orphan GC
+        never collects those). Returns the number of files removed."""
         entries = self.staged_entries(staged_id)
         n = 0
+        batch_dirs = set()
         for e in entries:
+            path = os.path.join(self.location, e["path"])
+            rel = os.path.relpath(path, self.data_dir)
+            if os.sep in rel and not rel.startswith(os.pardir):
+                batch_dirs.add(os.path.join(self.data_dir, rel.split(os.sep)[0]))
             try:
-                os.remove(os.path.join(self.location, e["path"]))
+                os.remove(path)
                 n += 1
             except FileNotFoundError:
                 pass
+        for d in batch_dirs:
+            if all(
+                fn == "_SUCCESS" or fn.endswith(".crc")
+                for _root, _dirs, files in os.walk(d)
+                for fn in files
+            ):
+                shutil.rmtree(d, ignore_errors=True)
         try:
             os.remove(self._staged_marker(staged_id))
         except FileNotFoundError:

@@ -169,6 +169,14 @@ def test_mor_delete_equivalent_to_cow(spark, tmp_path_factory, lo, width, n_batc
     assert rows(t_eq) == expected
 
 
+def test_mor_delete_fixed_case(spark, tmp_path_factory):
+    # keys 30..74 cross the boundary between the first two of three
+    # batches (0..32, 33..65, 66..99), so the delete spans three files
+    test_mor_delete_equivalent_to_cow.hypothesis.inner_test(
+        spark, tmp_path_factory, lo=30, width=45, n_batches=3
+    )
+
+
 @settings(
     max_examples=10,
     deadline=None,
@@ -505,6 +513,14 @@ def test_metadata_agg_matches_scan(spark, tmp_path_factory, batches, del_mod):
     assert t.metadata_agg({"n": ("count", "*")}) is None  # must refuse
     materialize_deletes(t)
     check()
+
+
+def test_metadata_agg_fixed_case(spark, tmp_path_factory):
+    # two files; k % 3 == 0 deletes rows from both, and the second
+    # file's min and max are its extreme values
+    test_metadata_agg_matches_scan.hypothesis.inner_test(
+        spark, tmp_path_factory, batches=[[-5, 3, 0], [7, -1000, 1000]], del_mod=3
+    )
 
 
 # --- incremental aggregate-MV refresh == full recompute ---------------------

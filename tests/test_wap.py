@@ -189,3 +189,28 @@ def test_ingest_wap_mode(spark, tmp_path):
     assert bad_t.to_df().count() == 0
     assert bad_t.list_staged() == []
     assert t.current_version() == v_after_good
+
+
+def test_wap_abort_leaves_no_batch_dir(spark, tmp_path):
+    """A write-audit-publish batch that fails its audit leaves no
+    directory under ``data/``: ``abort_staged`` takes Spark's
+    ``_SUCCESS`` and ``.crc`` side files with the batch, and the
+    published table reads the same."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.ingest import (
+        IngestPipeline,
+    )
+
+    src = tmp_path / "src" / "EURUSD"
+    src.mkdir(parents=True)
+    _tick_file(str(src / "good.parquet"), 150)
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    pipeline.run(str(tmp_path / "src"), write_audit_publish=True)
+    t = pipeline.catalog.load_table("gold.eurusd")
+    dirs = sorted(os.listdir(t.data_dir))
+    rows = sorted(tuple(r) for r in t.to_df().collect())
+
+    _tick_file(str(src / "bad.parquet"), 150, start_s=150, bad_bid=True)
+    s = pipeline.run(str(tmp_path / "src"), write_audit_publish=True)
+    assert s.files_rejected == 1
+    assert sorted(os.listdir(t.data_dir)) == dirs
+    assert sorted(tuple(r) for r in t.to_df().collect()) == rows
