@@ -6,28 +6,34 @@ Reference behavior, re-expressed as DataFrame casts (all JVM-side):
   (Spark's TimestampType IS µs, so this is a no-op cast that also
   swallows ns inputs, ``:181-182``)
 - float32 -> float64 (``:183-184``)
+
+Each pass is one ``selectExpr`` of SQL text built from one read of the
+schema: a tree of ``F`` calls costs several py4j round trips per column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import FloatType, NumericType, TimestampType
+
+from . import quote_ident
+
+
+def _cast_columns(df: DataFrame, casts: tuple[tuple[type, str], ...]) -> DataFrame:
+    """``df`` with each column cast to the SQL type of the first
+    ``(type class, SQL type)`` pair its type matches; other columns pass
+    through unchanged."""
+    exprs = []
+    for f in df.schema.fields:
+        q = quote_ident(f.name)
+        to = next((sql for cls, sql in casts if isinstance(f.dataType, cls)), None)
+        exprs.append(f"CAST({q} AS {to}) AS {q}" if to else q)
+    return df.selectExpr(*exprs)
 
 
 def normalize(df: DataFrame) -> DataFrame:
     """Widen floats, coerce timestamps - the reference's normalize pass."""
-    cols = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, FloatType):
-            c = c.cast("double").alias(f.name)
-        elif isinstance(f.dataType, TimestampType):
-            c = c.cast("timestamp").alias(f.name)
-        else:
-            c = c.alias(f.name)
-        cols.append(c)
-    return df.select(*cols)
+    return _cast_columns(df, ((FloatType, "DOUBLE"), (TimestampType, "TIMESTAMP")))
 
 
 def normalize_reference_schema(df: DataFrame) -> DataFrame:
@@ -37,14 +43,4 @@ def normalize_reference_schema(df: DataFrame) -> DataFrame:
     ints included. Use only on the tick-ingest path (SURVEY.md §7.4 warns
     against applying it to the star-schema fixtures, which carry real
     int/string columns)."""
-    cols = []
-    for f in df.schema.fields:
-        c = F.col(f.name)
-        if isinstance(f.dataType, TimestampType):
-            c = c.cast("timestamp").alias(f.name)
-        elif isinstance(f.dataType, NumericType):
-            c = c.cast("double").alias(f.name)
-        else:
-            c = c.alias(f.name)
-        cols.append(c)
-    return df.select(*cols)
+    return _cast_columns(df, ((TimestampType, "TIMESTAMP"), (NumericType, "DOUBLE")))

@@ -10,7 +10,8 @@ The reference runs five checks over each incoming batch:
 
 Here all value-level checks collapse into ONE aggregation pass (A1 + A2 +
 A4 + A5 as a single job - at 100 TB you never scan a batch five times),
-and the schema check never touches data at all. The same pass reports the
+built as one ``selectExpr`` of SQL text from one read of the schema, and
+the schema check never touches data at all. The same pass reports the
 batch's ``datetime_col`` range, which ingest hands to the dedup anti-join
 as its key bounds instead of scanning the batch again.
 """
@@ -20,8 +21,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
+
+from . import quote_ident
 
 MIN_ROWS_THRESHOLD = 100  # lakehouse_pipeline.py:73
 MAX_NULL_PCT = 0.05  # lakehouse_pipeline.py:74
@@ -45,9 +47,10 @@ def check_quality(
     max_null_pct: float = MAX_NULL_PCT,
 ) -> QualityReport:
     issues: list[str] = []
+    types = {f.name: f.dataType for f in df.schema.fields}
 
     # schema-level check first: no data scan needed (P7)
-    missing = set(required_cols) - set(df.columns)
+    missing = set(required_cols) - set(types)
     if missing:
         return QualityReport(
             ok=False,
@@ -55,17 +58,20 @@ def check_quality(
             metrics={},
         )
 
-    # single-pass aggregate: count, null counts, mins, datetime range
-    has_dt = datetime_col in df.columns
-    aggs = [F.count(F.lit(1)).alias("__rows")]
+    # single-pass aggregate: count, null counts, mins, datetime range,
+    # as SQL text read back by position
+    cols = list(types)
+    has_dt = datetime_col in types
+    aggs = {"__rows": "count(1)"}
     if has_dt:
-        aggs += [F.min(datetime_col).alias("__lo"), F.max(datetime_col).alias("__hi")]
-    for c in df.columns:
-        aggs.append((F.count(F.lit(1)) - F.count(F.col(c))).alias(f"__nulls_{c}"))
+        q = quote_ident(datetime_col)
+        aggs["__lo"], aggs["__hi"] = f"min({q})", f"max({q})"
+    for c in cols:
+        aggs[f"__nulls_{c}"] = f"count(1) - count({quote_ident(c)})"
     for c in positive_cols:
-        if isinstance(df.schema[c].dataType, NumericType):
-            aggs.append(F.min(F.col(c)).alias(f"__min_{c}"))
-    row = df.agg(*aggs).collect()[0].asDict()
+        if isinstance(types[c], NumericType):
+            aggs[f"__min_{c}"] = f"min({quote_ident(c)})"
+    row = dict(zip(aggs, df.selectExpr(*aggs.values()).collect()[0]))
 
     n = row["__rows"]
     metrics = {"rows": n}
@@ -76,7 +82,7 @@ def check_quality(
         issues.append(f"too few rows: {n} < {min_rows}")
 
     if n > 0:
-        for c in df.columns:
+        for c in cols:
             null_pct = row[f"__nulls_{c}"] / n
             metrics[f"null_pct_{c}"] = null_pct
             if null_pct > max_null_pct:

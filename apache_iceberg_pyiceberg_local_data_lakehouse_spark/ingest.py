@@ -15,11 +15,18 @@ mapped step-by-step in SURVEY.md §3):
   persist ledger; append audit entry                     (:411-417)
 
 Engine changes for scale (SURVEY.md §7):
-- change detection is ONE query per run, not a check per folder: every
-  symbol folder's binaryFile md5 frame is unioned, left-joined once
-  against the latest ledger entries, and grouped by folder, so one
-  collect returns each folder's skip count and its new (path, checksum)
-  pairs. An idle poll costs the same few Spark jobs for 1 folder or 100.
+- change detection is ONE query with ONE shuffle per run, not a check
+  per folder: every symbol folder's binaryFile md5 frame is unioned with
+  the raw ledger rows and grouped by path, which puts each listed file
+  next to its latest ledger checksum. One collect returns only the new
+  (path, checksum) pairs; the skip count rides the same job as an
+  observed metric. An idle poll costs 2 Spark jobs (the shuffle's map
+  stage and the result stage) for 1 folder or 100.
+- the projections and aggregates on the driver's hot path (checksums,
+  change detection, normalize, the quality gate, the write-audit-publish
+  row gate) are SQL text with backticked identifiers, not trees of ``F``
+  calls: each ``F`` call is a py4j round trip or several, and an idle
+  poll is mostly such round trips.
 - the per-file loop becomes a per-symbol *batch*: all new files of a
   symbol are read as ONE DataFrame (Spark's multi-file parquet reader),
   so normalize/QC/dedup/append are one distributed job each, not O(files)
@@ -47,6 +54,7 @@ Engine changes for scale (SURVEY.md §7):
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -55,9 +63,8 @@ from datetime import datetime, timezone
 from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -69,11 +76,14 @@ from pyspark.sql.types import (
 from pyspark.util import inheritable_thread_target
 
 from .catalog import LakehouseCatalog
+from .functions import quote_ident
 from .functions.normalize import normalize
 from .functions.quality import MIN_ROWS_THRESHOLD, check_quality
 from .operators.dedup import dedup_against_table
 from .maintenance import expire_snapshots
 from .table import PartitionField
+
+_log = logging.getLogger(__name__)
 
 NAMESPACE = "gold"  # lakehouse_pipeline.py:69
 OPS_NAMESPACE = "ops"
@@ -153,20 +163,18 @@ class IngestPipeline:
 
     def ledger_latest(self):
         """Current (path, checksum) ledger state as a DataFrame: latest
-        entry per path wins. Stays distributed - the scale path joins
-        against this instead of collecting it."""
-        df = self._ledger.to_df()
-        w = Window.partitionBy("path").orderBy(F.desc("ingested_at"))
+        entry per path wins."""
         return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("path", "checksum")
+            self._ledger.to_df()
+            .groupBy("path")
+            .agg(F.expr("max_by(checksum, ingested_at) AS checksum"))
         )
 
     def ingested(self) -> dict[str, str]:
         """Ledger as a driver dict - reference-parity helper for the
         ``per_file`` mode and tests; the batch path never materializes
-        this (millions of files would not fit a driver dict)."""
+        this (millions of files would not fit a driver dict), it groups
+        the raw ledger rows with the listed files (``_detect_changes``)."""
         return {
             r["path"]: r["checksum"] for r in self.ledger_latest().collect()
         }
@@ -189,11 +197,13 @@ class IngestPipeline:
         ``lakehouse_scheduler.py --now``).
 
         ``per_file=False`` (default): batch all new files per symbol into
-        one DataFrame - the scale path. Change detection is one query per
-        run over every symbol folder (``_detect_changes``: binaryFile + md5
-        left-joined once against the ledger table); only the NEW files'
-        (path, checksum) pairs reach the driver, and their checksums are
-        reused for the ledger write - no per-file driver hashing anywhere.
+        one DataFrame - the scale path. Change detection is one query
+        with one shuffle per run over every symbol folder
+        (``_detect_changes``: binaryFile + md5 grouped by path with the
+        raw ledger rows); only the NEW files' (path, checksum) pairs reach
+        the driver, and their checksums are reused for the ledger write -
+        no per-file driver hashing anywhere. An idle poll runs that query
+        (2 Spark jobs) and writes its audit row on the driver.
         ``per_file=True``: reference-parity mode - QC accepts/rejects each
         file independently (a bad file doesn't poison its siblings) and
         the md5 runs file-by-file on the driver exactly like the
@@ -222,7 +232,9 @@ class IngestPipeline:
 
         symbols = sorted(p for p in root.iterdir() if p.is_dir())
         ledger = self.ingested() if per_file else None
-        changes = {} if per_file or not symbols else self._detect_changes(symbols)
+        changes: dict[int, list[tuple[str, str]]] = {}
+        if not per_file and symbols:
+            summary.files_skipped, changes = self._detect_changes(symbols)
         # folders with new files, grouped by the table they feed:
         # EURUSD/ and eurusd/ both map to gold.eurusd and must not race
         work: dict[str, list[tuple[int, list[tuple[str, str]]]]] = {}
@@ -238,8 +250,7 @@ class IngestPipeline:
                         continue
                     new_entries.append((path, checksum))
             else:
-                skipped, new_entries = changes.get(symbol_dir.name, (0, []))
-                summary.files_skipped += skipped
+                new_entries = changes.get(i, [])
             if new_entries:
                 summary.tables_processed += 1
                 table_id = f"{self.namespace}.{symbol_dir.name.lower()}"  # :330-331
@@ -277,40 +288,64 @@ class IngestPipeline:
 
     def _detect_changes(
         self, symbols: list[Path]
-    ) -> dict[str, tuple[int, list[tuple[str, str]]]]:
-        """Change detection for every symbol folder as ONE query: each
-        folder's md5 frame (listed exactly as a single-folder scan lists
-        it) is tagged with its folder name, the frames are unioned, and
-        the union is left-joined once against the latest ledger entries.
-        One grouped collect returns ``{folder: (skipped, new entries)}``
-        with the new (path, checksum) pairs sorted; a folder with no
-        files is absent (read it as ``(0, [])``). Driver memory is
-        bounded by the NEW-file count: skips are counted in the
-        aggregate, and only unseen pairs are collected (they must reach
-        the driver anyway for the ledger write)."""
+    ) -> tuple[int, dict[int, list[tuple[str, str]]]]:
+        """Change detection for every symbol folder as ONE query with ONE
+        shuffle. Each folder's md5 frame (listed exactly as a
+        single-folder scan lists it) is tagged with the folder's index in
+        ``symbols`` and a NULL ``ingested_at``, and unioned with the raw
+        ledger rows, which carry a NULL folder. Grouped by path, each
+        listed file meets its latest ledger checksum
+        (``max_by(checksum, ingested_at)``: the files' NULL timestamps
+        take no part), and it is skipped when the two are equal. A tag
+        is an integer, so no folder name is ever spliced into SQL text.
+
+        Returns ``(files skipped, {folder index: new (path, checksum)
+        pairs, sorted})``; a folder with nothing new is absent. Driver
+        memory is bounded by the NEW-file count: only unseen pairs are
+        collected (they must reach the driver anyway for the ledger
+        write).
+
+        The skip count is an ``Observation`` over the listed paths, and
+        it is exact. The observed aggregate sits above the grouping, so
+        it runs in the result stage, the stage whose tasks feed the
+        collect. Spark merges a result task's accumulator updates once
+        per partition (only while that partition's output is still
+        missing), so a retried or speculative task cannot count twice;
+        the map stage before the shuffle may re-run, but it carries no
+        metric. Each row the aggregate sees is one distinct listed path,
+        so it counts every skipped file exactly once."""
         from .sources.files import file_checksums
 
-        checks = reduce(
-            DataFrame.unionByName,
-            (
-                file_checksums(self.spark, str(d)).select(
-                    F.lit(d.name).alias("folder"), "path", "checksum"
-                )
-                for d in symbols
-            ),
-        )
-        seen = self.ledger_latest().withColumn("__seen", F.lit(1))
-        unseen = F.when(F.col("__seen").isNull(), F.struct("path", "checksum"))
-        rows = (
-            checks.join(seen, on=["path", "checksum"], how="left")
-            .groupBy("folder")
-            .agg(
-                F.count("__seen").alias("skipped"),
-                F.collect_list(unseen).alias("new"),  # drops the seen NULLs
+        listed = [
+            file_checksums(self.spark, str(d)).selectExpr(
+                f"{i} AS folder",
+                "path",
+                "checksum",
+                "CAST(NULL AS TIMESTAMP) AS ingested_at",
             )
+            for i, d in enumerate(symbols)
+        ]
+        ledger = self._ledger.to_df().selectExpr(
+            "CAST(NULL AS INT) AS folder", "path", "checksum", "ingested_at"
+        )
+        obs = Observation()
+        rows = (
+            reduce(DataFrame.union, listed, ledger)
+            .groupBy("path")
+            .agg(
+                F.expr("max(checksum) FILTER (WHERE folder IS NOT NULL) AS checksum"),
+                F.expr("max(folder) AS folder"),
+                F.expr("max_by(checksum, ingested_at) AS seen"),
+            )
+            .where("folder IS NOT NULL")
+            .observe(obs, F.expr("count_if(seen <=> checksum) AS skipped"))
+            .where("NOT (seen <=> checksum)")
             .collect()
         )
-        return {r["folder"]: (r["skipped"], sorted(map(tuple, r["new"]))) for r in rows}
+        changes: dict[int, list[tuple[str, str]]] = {}
+        for path, checksum, folder, _ in sorted(rows):  # one row per path
+            changes.setdefault(folder, []).append((path, checksum))
+        return obs.get["skipped"] or 0, changes
 
     def ingest_batch(
         self, table_id: str, raw: DataFrame, write_audit_publish: bool = False
@@ -346,8 +381,9 @@ class IngestPipeline:
             # min-rows gates the INCOMING batch (reference semantics,
             # lakehouse_pipeline.py:137) - dedup may legitimately shrink
             # a re-ingested batch to zero - so this rejects before any write
-            key_range = [F.min("DateTime"), F.max("DateTime")] if has_key else []
-            n, *bounds = df.agg(F.count(F.lit(1)), *key_range).collect()[0]
+            key = quote_ident("DateTime")
+            key_range = [f"min({key})", f"max({key})"] if has_key else []
+            n, *bounds = df.selectExpr("count(1)", *key_range).collect()[0]
             if n < MIN_ROWS_THRESHOLD:
                 return None, ["too few rows"]
         else:
@@ -393,7 +429,8 @@ class IngestPipeline:
                     done.extend(group)
             out.append((i, part, done))
 
-        # M2 snapshot expiry per table (:401-405)
+        # M2 snapshot expiry per table (:401-405); the batches are
+        # committed, so a failed expiry is reported, not raised
         try:
             expire_snapshots(
                 self.catalog.load_table(table_id),
@@ -403,7 +440,7 @@ class IngestPipeline:
                 retain_last=self.retain_last,
             )
         except Exception:
-            pass
+            _log.warning("snapshot expiry of %s failed", table_id, exc_info=True)
         return out
 
     def _ingest_files(

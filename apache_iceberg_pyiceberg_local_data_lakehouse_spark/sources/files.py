@@ -51,17 +51,19 @@ def file_checksums(
     ingest change-detection anti-join consumes this instead of a
     sequential driver hash loop. ``path`` is normalized from Spark's
     ``file:`` URI back to a plain filesystem path so it joins against
-    ledger entries recorded by any mode."""
+    ledger entries recorded by any mode. The projection is one
+    ``selectExpr`` of SQL text: change detection calls this once per
+    symbol folder on every poll."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", str(recursive).lower())
         .load(path)
-        .select(
-            F.regexp_replace(F.col("path"), "^file:/+", "/").alias("path"),
+        .selectExpr(
+            "regexp_replace(path, '^file:/+', '/') AS path",
             "length",
             "modificationTime",
-            F.md5(F.col("content")).alias("checksum"),
+            "md5(content) AS checksum",
         )
     )
 

@@ -10,6 +10,11 @@ costs in Spark jobs.
 - Dedup bounds: the quality pass's ``DateTime`` range is the one
   ``dedup_against_table`` would compute itself, and passing it in skips
   that probe without changing the deduped rows.
+- Driver round trips: an idle two-symbol poll sends few py4j commands.
+- Quoting: column names holding a space, a dot or a backtick pass
+  through ``normalize`` and ``check_quality`` as the ``F``-tree forms
+  would compute them, and a folder name holding a space and a quote
+  ingests like any other.
 """
 
 from __future__ import annotations
@@ -21,7 +26,16 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    FloatType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from apache_iceberg_pyiceberg_local_data_lakehouse_spark.functions.normalize import (
     normalize,
@@ -144,8 +158,8 @@ def test_change_detection_content_history(spark, tmp_path):
 def test_idle_rerun_jobs_do_not_grow_with_folders(spark, tmp_path):
     """Change detection is one query per run: an idle re-run over 4
     symbol folders launches as many Spark jobs as one over 1 folder, and
-    few of them: change detection only, the audit row is written by
-    the driver."""
+    only 2 of them: the map and result stages of change detection's one
+    shuffle. The audit row is written by the driver."""
     idle_jobs = {}
     for n_folders in (1, 4):
         src = tmp_path / f"src{n_folders}"
@@ -156,7 +170,7 @@ def test_idle_rerun_jobs_do_not_grow_with_folders(spark, tmp_path):
         s, idle_jobs[n_folders] = _jobs(spark, lambda: pipeline.run(str(src)))
         assert _counts(s) == (0, 0, n_folders, 0, 0)
     assert idle_jobs[1] == idle_jobs[4], idle_jobs
-    assert idle_jobs[4] <= 4, idle_jobs
+    assert idle_jobs[4] == 2, idle_jobs
 
 
 def test_quality_bounds_feed_dedup(spark, tmp_path):
@@ -185,3 +199,141 @@ def test_quality_bounds_feed_dedup(spark, tmp_path):
     rows = sorted(probed.collect())
     assert len(rows) == 100
     assert sorted(given.collect()) == rows
+
+
+def test_idle_poll_round_trips(spark, tmp_path, monkeypatch):
+    """An idle two-symbol poll launches exactly 2 Spark jobs and sends at
+    most 200 py4j commands, GC detaches excluded (the ``F``-tree form
+    of the same poll sent about 410)."""
+    src = tmp_path / "src"
+    for i, sym in enumerate(("EURUSD", "USDJPY")):
+        _ticks(src / sym / "tick_0000.parquet", start=1000 * i)
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    pipeline.run(str(src))
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):  # a GC detach
+            sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    s, jobs = _jobs(spark, lambda: pipeline.run(str(src)))
+    monkeypatch.undo()
+    assert _counts(s) == (0, 0, 2, 0, 0)
+    assert jobs == 2
+    assert len(sent) <= 200, len(sent)
+
+
+def _f_form_normalize(df):
+    """``normalize`` as a tree of ``F`` calls over plain names."""
+    cols = []
+    for f in df.schema.fields:
+        c = F.col(f.name)
+        if isinstance(f.dataType, FloatType):
+            c = c.cast("double")
+        elif isinstance(f.dataType, TimestampType):
+            c = c.cast("timestamp")
+        cols.append(c.alias(f.name))
+    return df.select(*cols)
+
+
+def _f_form_quality(df, positive, dt_col):
+    """``check_quality``'s issues and metrics from its aggregate built as
+    a tree of ``F`` calls. ``F.col`` cannot name a column holding a
+    backtick, so the aggregate runs over positional stand-in names and
+    its values are read back under the real ones."""
+    names = df.columns
+    plain = df.toDF(*[f"c{i}" for i in range(len(names))])
+    alias = dict(zip(names, plain.columns))
+    aggs = [F.count(F.lit(1)), F.min(alias[dt_col]), F.max(alias[dt_col])]
+    aggs += [F.count(F.lit(1)) - F.count(F.col(alias[c])) for c in names]
+    aggs += [F.min(F.col(alias[c])) for c in positive]
+    n, lo, hi, *rest = plain.agg(*aggs).collect()[0]
+    nulls, mins = rest[: len(names)], rest[len(names) :]
+    issues = []
+    metrics = {"rows": n, f"min_{dt_col}": lo, f"max_{dt_col}": hi}
+    if n < 100:
+        issues.append(f"too few rows: {n} < 100")
+    if n > 0:
+        for c, k in zip(names, nulls):
+            metrics[f"null_pct_{c}"] = k / n
+            if k / n > 0.05:
+                issues.append(f"null ratio {k / n:.3f} > 0.05 in {c}")
+        if nulls[names.index(dt_col)] == n:
+            issues.append(f"{dt_col} entirely null")
+        for c, mn in zip(positive, mins):
+            metrics[f"min_{c}"] = mn
+            if mn is not None and mn <= 0:
+                issues.append(f"non-positive values in {c}: min={mn}")
+    return issues, metrics
+
+
+def test_quoted_column_names_match_f_form(spark):
+    """Column names with a space, a dot and a backtick: ``normalize``
+    keeps each one as the single column it names and casts it as the
+    ``F`` form does, and ``check_quality`` reports the ``F`` form's issues
+    and metrics: a null ratio over 5% in ``ask px``, a zero in
+    ``bid`px``."""
+    n = 200
+    schema = StructType(
+        [
+            StructField("date time", TimestampType()),
+            StructField("bid`px", FloatType()),
+            StructField("ask px", DoubleType()),
+            StructField("a.b", LongType()),
+        ]
+    )
+    rows = [
+        (BASE + dt.timedelta(seconds=i), i / n, None if i < 11 else 1.0 + i / n, i)
+        for i in range(n)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    names = df.columns
+    assert names == ["date time", "bid`px", "ask px", "a.b"]
+
+    out = normalize(df)
+    stand_in = [f"c{i}" for i in range(len(names))]
+    want = _f_form_normalize(df.toDF(*stand_in)).toDF(*names)
+    assert out.schema == want.schema
+    assert [f.dataType.simpleString() for f in out.schema] == [
+        "timestamp", "double", "double", "bigint",
+    ]
+    assert sorted(out.collect()) == sorted(want.collect())
+
+    required = ("date time", "bid`px", "ask px")
+    positive = ("bid`px", "ask px", "a.b")
+    report = check_quality(
+        out, required_cols=required, positive_cols=positive, datetime_col="date time"
+    )
+    issues, metrics = _f_form_quality(out, positive, "date time")
+    assert report.issues == issues
+    assert report.metrics == metrics
+    assert issues == [
+        "null ratio 0.055 > 0.05 in ask px",
+        "non-positive values in bid`px: min=0.0",
+        "non-positive values in a.b: min=0",
+    ]
+    assert not report.ok
+
+
+def test_folder_name_with_space_and_quote(spark, tmp_path):
+    """A symbol folder named ``EUR USD's`` ingests, skips and re-ingests
+    exactly like a plain one beside it."""
+    src = tmp_path / "src"
+    _ticks(src / "EUR USD's" / "tick 0's.parquet", 150)
+    _ticks(src / "GBPUSD" / "tick_0000.parquet", 120, start=1000)
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+
+    assert _counts(pipeline.run(str(src))) == (2, 2, 0, 0, 270)
+    assert _rows(pipeline, "gold.eur usd's") == 150
+    assert _rows(pipeline, "gold.gbpusd") == 120
+    assert _counts(pipeline.run(str(src))) == (0, 0, 2, 0, 0)
+
+    _ticks(src / "EUR USD's" / "tick 1's.parquet", 150, start=100)
+    assert _counts(pipeline.run(str(src))) == (1, 1, 2, 0, 100)
+    assert _rows(pipeline, "gold.eur usd's") == 250
+    assert _rows(pipeline, "gold.gbpusd") == 120
+    assert _rows(pipeline, "ops.ingest_ledger") == 3

@@ -191,27 +191,31 @@ def test_mor_delete_fixed_case(spark, tmp_path_factory):
         st.integers(min_value=0, max_value=30), min_size=0, max_size=20,
         unique=True,
     ),
-    when_matched=st.sampled_from(["update", "ignore", "delete"]),
+    # ignore-mode + condition is rejected up front by merge_into, so the
+    # strategy never draws it
+    matched=st.sampled_from(
+        [
+            (when, cond)
+            for when in ("update", "ignore", "delete")
+            for cond in (None, 2, 3)
+            if when != "ignore" or cond is None
+        ]
+    ),
     when_not_matched=st.sampled_from(["insert", "ignore"]),
     sync=st.booleans(),
-    cond_mod=st.sampled_from([None, 2, 3]),
 )
 @pytest.mark.slow
 def test_merge_matrix_matches_set_model(
-    spark, tmp_path_factory, tbl_keys, src_keys,
-    when_matched, when_not_matched, sync, cond_mod,
+    spark, tmp_path_factory, tbl_keys, src_keys, matched, when_not_matched, sync,
 ):
     """Every MERGE clause combination agrees with the plain set-algebra
     model computed in Python: matched rows follow when_matched (gated by
     the condition over the TABLE row), new keys follow when_not_matched,
-    table-only keys follow when_not_matched_by_source."""
-    from hypothesis import assume
-
+    table-only keys follow when_not_matched_by_source. ``matched`` is
+    the ``(when_matched, condition modulus)`` pair."""
     from apache_iceberg_pyiceberg_local_data_lakehouse_spark.dml import merge_into
 
-    # ignore-mode + condition is rejected up front by merge_into
-    assume(not (when_matched == "ignore" and cond_mod is not None))
-
+    when_matched, cond_mod = matched
     wh = tmp_path_factory.mktemp("merge_prop")
     cat = LakehouseCatalog(spark, str(wh))
     cat.create_namespace("gold")
@@ -1385,10 +1389,9 @@ def test_merge_matrix_fixed_case(spark, tmp_path_factory):
         tmp_path_factory,
         tbl_keys=[0, 1, 2, 3, 4, 6],
         src_keys=[2, 3, 4, 5, 7],
-        when_matched="update",
+        matched=("update", 2),
         when_not_matched="insert",
         sync=True,
-        cond_mod=2,
     )
 
 

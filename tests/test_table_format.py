@@ -508,31 +508,34 @@ def test_scan_changelog_mor_and_cow(catalog, spark):
         t.scan_changelog(v4)
 
 
-def test_orphan_gc_distributed_listing(catalog, spark):
-    """Past _GC_JOB_THRESHOLD batch dirs the orphan listing runs as a
-    Spark job (one task per batch dir); GC must still delete exactly the
-    unreferenced rewrites and keep the table readable."""
+def test_orphan_gc_lists_on_driver(catalog, spark):
+    """Orphan GC over 18 batch dirs lists the data files on the driver:
+    the expiry launches no Spark job, deletes exactly the unreferenced
+    rewrites and keeps the table readable."""
     from apache_iceberg_pyiceberg_local_data_lakehouse_spark.maintenance import (
-        _GC_JOB_THRESHOLD,
         _list_data_files,
     )
+    from tests.test_ingest_change_detection import _jobs
 
+    n_batches = 18
     t = catalog.create_table("gold.gcbig", TICK_SCHEMA, [])
-    for i in range(_GC_JOB_THRESHOLD + 2):
+    for i in range(n_batches):
         t.append(tick_df(spark, start=f"2024-01-01 {i:02d}:00:00", n=10).coalesce(1))
-    n_batch_dirs = len(os.listdir(t.data_dir))
-    assert n_batch_dirs >= _GC_JOB_THRESHOLD  # job path engaged
-    assert len(_list_data_files(t)) == _GC_JOB_THRESHOLD + 2
+    assert len(_list_data_files(t)) == n_batches
 
     compact(t, target_file_bytes=64 * 1024 * 1024)
-    res = expire_snapshots(
-        t,
-        older_than_ms=int(time.time() * 1000) + 10_000,
-        retain_last=1,
-        orphan_grace_secs=0.0,
+    res, jobs = _jobs(
+        spark,
+        lambda: expire_snapshots(
+            t,
+            older_than_ms=int(time.time() * 1000) + 10_000,
+            retain_last=1,
+            orphan_grace_secs=0.0,
+        ),
     )
-    assert res["deleted_files"] == _GC_JOB_THRESHOLD + 2  # every rewritten small
-    assert t.to_df().count() == (_GC_JOB_THRESHOLD + 2) * 10
+    assert jobs == 0
+    assert res["deleted_files"] == n_batches  # every rewritten small
+    assert t.to_df().count() == n_batches * 10
 
 
 def test_zorder_key_morton_interleave(spark):
