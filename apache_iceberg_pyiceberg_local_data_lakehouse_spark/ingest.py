@@ -30,12 +30,19 @@ Engine changes for scale (SURVEY.md §7):
 - the per-file loop becomes a per-symbol *batch*: all new files of a
   symbol are read as ONE DataFrame (Spark's multi-file parquet reader),
   so normalize/QC/dedup/append are one distributed job each, not O(files)
-  driver roundtrips. One aggregate pass over the batch feeds both the
-  quality gate and the dedup key bounds, and the deduped batch is staged
-  once and published metadata-only in both modes (default and
-  write-audit-publish), so its anti-join runs once. Per-file QC parity
-  mode (``per_file=True``) keeps the reference's file-granular
-  accept/reject semantics for tests.
+  driver roundtrips. The quality gate's numbers (rows, NULL counts,
+  price minimums, the ``DateTime`` range) come from the Parquet footers
+  of the batch's files, read on the driver as the reference reads its
+  PyArrow table; the aggregate pass runs only when the footers cannot
+  give its exact answer (``functions.quality``). The same numbers give
+  the dedup key bounds. The schema Spark inferred for a footer shape is
+  remembered per pipeline, so a repeated shape skips the inference job.
+  The deduped batch is staged once and published metadata-only in both
+  modes (default and write-audit-publish), so its anti-join runs once.
+  A plain run then costs 2 jobs for change detection plus 3 per table
+  (the dedup and the distributed write). Per-file QC parity mode
+  (``per_file=True``) keeps the reference's file-granular accept/reject
+  semantics for tests.
 - the per-table batches of one run overlap: each table's folders go to
   one worker of a thread pool, at most ``defaultParallelism`` at a
   time. A batch spends most of its time waiting on JVM planning and job
@@ -49,6 +56,8 @@ Engine changes for scale (SURVEY.md §7):
   is not 100 TB-safe and cannot be written concurrently). Their rows
   are already on the driver, so the driver writes them
   (``LakehouseTable.append_rows``): no Spark job per bookkeeping row.
+  Each accepting run adds one ledger file; past ``LEDGER_MAX_FILES`` the
+  ledger is compacted, so a poll reads a bounded number of them.
 """
 
 from __future__ import annotations
@@ -56,6 +65,7 @@ from __future__ import annotations
 import hashlib
 import logging
 import os
+import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -75,18 +85,23 @@ from pyspark.sql.types import (
 )
 from pyspark.util import inheritable_thread_target
 
+from . import maintenance
 from .catalog import LakehouseCatalog
-from .functions import quote_ident
 from .functions.normalize import normalize
-from .functions.quality import MIN_ROWS_THRESHOLD, check_quality
+from .functions.quality import MIN_ROWS_THRESHOLD, batch_stats, check_quality
 from .operators.dedup import dedup_against_table
 from .maintenance import expire_snapshots
+from .sources.files import READ_SCHEMA_CONFS, parquet_footers, read_schema_key
 from .table import PartitionField
 
 _log = logging.getLogger(__name__)
 
 NAMESPACE = "gold"  # lakehouse_pipeline.py:69
 OPS_NAMESPACE = "ops"
+# every run that accepts files adds one ledger data file, and change
+# detection reads them all on every poll: past this many the ledger is
+# compacted
+LEDGER_MAX_FILES = 64
 
 LEDGER_SCHEMA = StructType(
     [
@@ -158,6 +173,10 @@ class IngestPipeline:
         self._audit = self.catalog.ensure_table(
             f"{OPS_NAMESPACE}.audit_runs", AUDIT_SCHEMA
         )
+        # read-schema key -> the schema Spark inferred for it; shared by
+        # the run's table workers
+        self._read_schemas: dict[tuple, StructType] = {}
+        self._read_schemas_lock = threading.Lock()
 
     # -- ledger (ST2 exactly-once per file content) --------------------------
 
@@ -180,10 +199,31 @@ class IngestPipeline:
         }
 
     def _record_ledger(self, entries: list[tuple[str, str]]) -> None:
+        """Append the accepted files' ledger rows. Once the ledger holds
+        more than ``LEDGER_MAX_FILES`` data files it is compacted and its
+        old snapshots expired, so a poll's change detection opens a
+        bounded number of ledger files. The rows are committed by then,
+        so a failed compaction is reported, not raised."""
         if not entries:
             return
         now = datetime.now(tz=timezone.utc).replace(tzinfo=None)
-        self._ledger.append_rows([(p, c, now) for p, c in entries])
+        snap = self._ledger.append_rows([(p, c, now) for p, c in entries])
+        if len(snap.data_entries) > LEDGER_MAX_FILES:
+            try:
+                maintenance.compact(self._ledger)
+                self._expire(self._ledger)
+            except Exception:
+                _log.warning("ledger compaction failed", exc_info=True)
+
+    def _expire(self, table) -> None:
+        """M2 snapshot expiry (:401-405) under this pipeline's policy."""
+        expire_snapshots(
+            table,
+            older_than_ms=int(
+                (time.time() - self.expire_older_than_days * 86400) * 1000
+            ),
+            retain_last=self.retain_last,
+        )
 
     # -- pipeline ------------------------------------------------------------
 
@@ -348,7 +388,11 @@ class IngestPipeline:
         return obs.get["skipped"] or 0, changes
 
     def ingest_batch(
-        self, table_id: str, raw: DataFrame, write_audit_publish: bool = False
+        self,
+        table_id: str,
+        raw: DataFrame,
+        write_audit_publish: bool = False,
+        footers: list | None = None,
     ) -> tuple[int | None, list[str]]:
         """normalize -> QC -> ensure table -> dedup -> stage -> publish
         for one batch DataFrame; ``_ingest_files`` and the streaming
@@ -362,13 +406,22 @@ class IngestPipeline:
         published with a metadata-only commit - or aborted when it holds
         no rows (the reference's empty-append short-circuit, :388-392),
         leaving no snapshot and no files. The default path gates the
-        in-flight DataFrame before the write, and that one aggregate
-        pass also gives the dedup key bounds, so ``dedup_against_table``
-        runs no probe of its own. ``write_audit_publish=True`` (Iceberg's
-        WAP pattern) gates only the incoming row count before the write
-        and audits exactly the staged bytes that would become visible,
-        so a nondeterministic transform between QC and write cannot
-        bypass it."""
+        in-flight DataFrame before the write, and the gate's numbers
+        also give the dedup key bounds, so ``dedup_against_table`` runs
+        no probe of its own. ``write_audit_publish=True`` (Iceberg's WAP
+        pattern) gates only the incoming row count before the write and
+        audits exactly the staged bytes that would become visible, so a
+        nondeterministic transform between QC and write cannot bypass
+        it.
+
+        ``footers`` are the Parquet footers of the files ``raw`` reads
+        (``_ingest_files`` passes them). Given, the incoming gate and
+        the key bounds come from them, and the WAP audit reads the
+        staged files' own footers: no Spark job, unless a footer cannot
+        give the aggregate's exact answer. Without them (streaming
+        micro-batches) each gate is one aggregate pass of 2 jobs. From
+        files, with a remembered read schema, a batch costs 3 jobs in
+        either mode: the dedup and the distributed write."""
         df = normalize(raw)  # S1 + F1/F2
         has_key = "DateTime" in df.columns
         spec = (
@@ -380,29 +433,37 @@ class IngestPipeline:
         if write_audit_publish:
             # min-rows gates the INCOMING batch (reference semantics,
             # lakehouse_pipeline.py:137) - dedup may legitimately shrink
-            # a re-ingested batch to zero - so this rejects before any write
-            key = quote_ident("DateTime")
-            key_range = [f"min({key})", f"max({key})"] if has_key else []
-            n, *bounds = df.selectExpr("count(1)", *key_range).collect()[0]
-            if n < MIN_ROWS_THRESHOLD:
+            # a re-ingested batch to zero - so this rejects before any
+            # write. It needs the row count and the key range only.
+            stats = batch_stats(df, footers, positive_cols=())
+            if stats.rows < MIN_ROWS_THRESHOLD:
                 return None, ["too few rows"]
+            bounds = (stats.lo, stats.hi)
         else:
-            report = check_quality(df)  # P6/P7, A1/A2/A4/A5
+            report = check_quality(df, footers=footers)  # P6/P7, A1/A2/A4/A5
             if not report.ok:
                 return None, report.issues
             m = report.metrics
             bounds = (m["min_DateTime"], m["max_DateTime"])
         table = self.catalog.ensure_table(table_id, df.schema, spec)  # S8
         clean = dedup_against_table(
-            df, table, key="DateTime", bounds=tuple(bounds) if has_key else None
+            df, table, key="DateTime", bounds=bounds if has_key else None
         )  # J1
         staged = table.stage_append(clean, optimize_write=True)  # S5
+        entries = table.staged_entries(staged)
         if write_audit_publish:
-            report = check_quality(table.staged_scan(staged), min_rows=0)
+            # the staged files' own footers: exactly the bytes a publish
+            # would make visible
+            staged_footers = parquet_footers(
+                [os.path.join(table.location, e["path"]) for e in entries]
+            )
+            report = check_quality(
+                table.staged_scan(staged), min_rows=0, footers=staged_footers
+            )
             if not report.ok:
                 table.abort_staged(staged)
                 return None, report.issues
-        n = sum(e["rows"] for e in table.staged_entries(staged))
+        n = sum(e["rows"] for e in entries)
         if n > 0:
             table.publish_staged(staged)
         else:
@@ -429,16 +490,10 @@ class IngestPipeline:
                     done.extend(group)
             out.append((i, part, done))
 
-        # M2 snapshot expiry per table (:401-405); the batches are
-        # committed, so a failed expiry is reported, not raised
+        # snapshot expiry per table; the batches are committed, so a
+        # failed expiry is reported, not raised
         try:
-            expire_snapshots(
-                self.catalog.load_table(table_id),
-                older_than_ms=int(
-                    (time.time() - self.expire_older_than_days * 86400) * 1000
-                ),
-                retain_last=self.retain_last,
-            )
+            self._expire(self.catalog.load_table(table_id))
         except Exception:
             _log.warning("snapshot expiry of %s failed", table_id, exc_info=True)
         return out
@@ -447,8 +502,12 @@ class IngestPipeline:
         self, table_id: str, paths: list[str], summary: RunSummary, wap: bool
     ) -> bool:
         """``ingest_batch`` over ``paths`` read as one DataFrame, counted
-        into ``summary``. Returns whether the batch was accepted."""
-        n, issues = self.ingest_batch(table_id, self.spark.read.parquet(*paths), wap)
+        into ``summary``, its gate fed from the files' footers. Returns
+        whether the batch was accepted."""
+        footers = parquet_footers(paths)
+        n, issues = self.ingest_batch(
+            table_id, self._read_parquet(paths, footers), wap, footers=footers
+        )
         if n is None:
             summary.files_rejected += len(paths)
             summary.quality_issues.extend(
@@ -458,6 +517,29 @@ class IngestPipeline:
         summary.files_processed += len(paths)
         summary.rows_appended += n
         return True
+
+    def _read_parquet(self, paths: list[str], footers: list | None) -> DataFrame:
+        """``spark.read.parquet(*paths)``, without Spark's schema-inference
+        job when this pipeline has seen the batch's read-schema key
+        before. The key is every footer's ``read_schema_key`` (all must
+        agree) and the values of ``READ_SCHEMA_CONFS``. It is exact:
+        with ``mergeSchema`` off Spark infers from one file's footer
+        under those confs, and with it on, from identical footers."""
+        key = None
+        if footers:
+            keys = {read_schema_key(f) for f in footers}
+            if len(keys) == 1:
+                confs = tuple(self.spark.conf.get(k) for k in READ_SCHEMA_CONFS)
+                key = (*keys.pop(), confs)
+        with self._read_schemas_lock:
+            schema = self._read_schemas.get(key)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*paths)
+        df = self.spark.read.parquet(*paths)
+        if key is not None:
+            with self._read_schemas_lock:
+                self._read_schemas[key] = df.schema
+        return df
 
     def _append_audit(self, s: RunSummary) -> None:
         """S10 audit entry - a table append, not a JSON rewrite."""

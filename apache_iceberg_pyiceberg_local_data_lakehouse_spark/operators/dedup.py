@@ -12,7 +12,8 @@ Reference semantics preserved exactly (SURVEY.md §2.3 note + §7.4):
 - dedup is only *against committed data* - intra-batch duplicates all
   append (two identical rows in one file both land);
 - an empty target short-circuits (``:210-211``);
-- any failure scanning the target degrades to no-dedup (``:225-227``).
+- any failure scanning the target degrades to no-dedup (``:225-227``),
+  logged as a warning naming the table.
 
 X1/X2 - the scale generalizations a training-data pipeline needs:
 exact content-hash dedup, MinHash/LSH near-dedup, SimHash fingerprints.
@@ -20,11 +21,15 @@ exact content-hash dedup, MinHash/LSH near-dedup, SimHash fingerprints.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..table import LakehouseTable
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # J1: dedup against a committed table
@@ -72,7 +77,13 @@ def dedup_against_table(
         existing_keys = table.scan(selected_fields=[key], file_filter=keep)
         return new_df.join(existing_keys, on=key, how="left_anti")
     except Exception:
-        # graceful degradation: dedup skipped, all rows pass (:225-227)
+        # graceful degradation: dedup skipped, all rows pass (:225-227);
+        # logged, since every row of the batch will append
+        _log.warning(
+            "dedup against %s failed; all incoming rows pass",
+            table.location,
+            exc_info=True,
+        )
         return new_df
 
 

@@ -7,6 +7,9 @@
 - S12: content checksums via the binaryFile source + ``md5``: the batch
   ingest's change detection, matching the reference's md5-of-bytes
   ledger exactly.
+- Parquet footers read on the driver (``parquet_footers``): the ingest
+  quality gate's numbers, and the key (``read_schema_key``) under which
+  ingest remembers the schema Spark inferred for a footer shape.
 - X5: binaryFile ingestion for multimodal blobs (images/audio) into
   binary columns.
 """
@@ -17,6 +20,39 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+# the SQL confs Spark's ParquetToSparkSchemaConverter reads: a footer
+# and these values fix the schema Spark infers for it
+READ_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def parquet_footers(paths: list[str]) -> list | None:
+    """Each file's Parquet footer (``pyarrow.parquet.FileMetaData``),
+    read on the driver; ``None`` if any file's footer cannot be read,
+    so that Spark's reader reports the file as it always did."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        return [pq.read_metadata(p) for p in paths]
+    except (OSError, pa.ArrowException):
+        return None
+
+
+def read_schema_key(footer) -> tuple[str, bytes | None]:
+    """What Spark's schema inference reads from one footer: the Parquet
+    schema text (without pyarrow's object-address line) and the Spark
+    row schema a Spark writer stores beside it."""
+    text = str(footer.schema).split("\n", 1)[1]
+    return text, (footer.metadata or {}).get(_SPARK_ROW_METADATA)
 
 
 def read_parquet_recursive(spark: SparkSession, path: str) -> DataFrame:

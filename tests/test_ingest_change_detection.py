@@ -15,6 +15,10 @@ costs in Spark jobs.
   through ``normalize`` and ``check_quality`` as the ``F``-tree forms
   would compute them, and a folder name holding a space and a quote
   ingests like any other.
+- Ledger growth: a ledger past its file cap is compacted after the next
+  accepting run, and change detection answers as before.
+- Dedup failure: a committed-key scan that raises lets every row pass
+  and logs a warning naming the table.
 """
 
 from __future__ import annotations
@@ -337,3 +341,87 @@ def test_folder_name_with_space_and_quote(spark, tmp_path):
     assert _rows(pipeline, "gold.eur usd's") == 250
     assert _rows(pipeline, "gold.gbpusd") == 120
     assert _rows(pipeline, "ops.ingest_ledger") == 3
+
+
+def test_ledger_compacts_past_cap(spark, tmp_path, monkeypatch):
+    """A ledger past ``LEDGER_MAX_FILES`` data files is compacted after
+    the next accepting run's ledger write, back under the cap, and
+    change detection returns the same skips and new pairs after the
+    compaction as just before it. The pre-filled rows hold superseded
+    checksums of a listed file and rows of files no longer listed, and
+    a rejected file stays new."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark import maintenance
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.ingest import (
+        LEDGER_MAX_FILES,
+        file_checksum,
+    )
+
+    src = tmp_path / "src"
+    _ticks(src / "EURUSD" / "a.parquet", 150)
+    _ticks(src / "GBPUSD" / "few.parquet", 10)  # rejected: too few rows
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    assert _counts(pipeline.run(str(src))) == (2, 1, 0, 1, 150)
+    a = str(src / "EURUSD" / "a.parquet")
+    old = dt.datetime(2020, 1, 1)
+    for i in range(LEDGER_MAX_FILES):
+        rows = [(f"/gone/f{i}.parquet", f"{i:032x}", old)]
+        if i % 8 == 0:
+            rows.append((a, f"stale{i}", old + dt.timedelta(days=i)))
+        pipeline._ledger.append_rows(rows)
+
+    def ledger_files():
+        return len(pipeline._ledger.snapshot().data_entries)
+
+    assert ledger_files() == LEDGER_MAX_FILES + 1
+
+    symbols = sorted(p for p in src.iterdir() if p.is_dir())
+    seen = []
+    compact = maintenance.compact
+
+    def spying(table, *args, **kwargs):
+        detected = pipeline._detect_changes(symbols)
+        seen.append((ledger_files(), detected, pipeline.ingested()))
+        return compact(table, *args, **kwargs)
+
+    monkeypatch.setattr(maintenance, "compact", spying)
+    _ticks(src / "EURUSD" / "b.parquet", 150, start=100)
+    assert _counts(pipeline.run(str(src))) == (2, 1, 1, 1, 100)
+
+    [(files_before, changes, latest)] = seen
+    assert files_before == LEDGER_MAX_FILES + 2
+    assert ledger_files() <= LEDGER_MAX_FILES
+    few = str(src / "GBPUSD" / "few.parquet")
+    assert changes == (2, {1: [(few, file_checksum(few))]})
+    assert pipeline._detect_changes(symbols) == changes
+    assert pipeline.ingested() == latest
+    prefilled = LEDGER_MAX_FILES + LEDGER_MAX_FILES // 8
+    assert _rows(pipeline, "ops.ingest_ledger") == 2 + prefilled
+
+
+def test_dedup_scan_failure_is_logged(spark, tmp_path, monkeypatch, caplog):
+    """A committed-key scan that raises degrades to no dedup, as the
+    reference does, and logs a warning that names the table and carries
+    the exception."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.operators import dedup
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.table import (
+        LakehouseTable,
+    )
+
+    src = tmp_path / "src"
+    _ticks(src / "EURUSD" / "a.parquet", 150)
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    pipeline.run(str(src))
+    table = pipeline.catalog.load_table("gold.eurusd")
+
+    def broken(self, *args, **kwargs):
+        raise OSError("key scan failed")
+
+    monkeypatch.setattr(LakehouseTable, "scan", broken)
+    df = normalize(spark.read.parquet(str(src / "EURUSD" / "a.parquet")))
+    with caplog.at_level("WARNING", logger=dedup.__name__):
+        out = dedup_against_table(df, table)
+    assert out is df
+    [rec] = [r for r in caplog.records if r.name == dedup.__name__]
+    assert rec.levelname == "WARNING"
+    assert table.location in rec.getMessage()
+    assert isinstance(rec.exc_info[1], OSError)

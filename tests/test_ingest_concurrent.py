@@ -10,8 +10,8 @@
 - Expiry: a snapshot expiry that raises after the commit is logged as a
   warning, and the run still succeeds.
 - Order: counters and quality issues merge in sorted folder order.
-- Job guard: a plain two-symbol run launches as many jobs as the serial
-  loop did.
+- Job guards: a plain two-symbol run, and a write-audit-publish one,
+  launch 8 jobs.
 """
 
 from __future__ import annotations
@@ -103,10 +103,10 @@ def test_failed_table_writes_no_ledger_or_audit(spark, tmp_path, monkeypatch):
     pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
     ingest_batch = IngestPipeline.ingest_batch
 
-    def faulty(self, table_id, raw, write_audit_publish=False):
+    def faulty(self, table_id, raw, write_audit_publish=False, **kwargs):
         if table_id != "gold.audusd":
             raise RuntimeError(f"fault in {table_id}")
-        return ingest_batch(self, table_id, raw, write_audit_publish)
+        return ingest_batch(self, table_id, raw, write_audit_publish, **kwargs)
 
     monkeypatch.setattr(IngestPipeline, "ingest_batch", faulty)
     with pytest.raises(RuntimeError, match="fault in gold.eurusd"):
@@ -170,10 +170,11 @@ def test_wap_rejections_merge_in_folder_order(spark, tmp_path):
 
 def test_plain_run_jobs_on_nonempty_target(spark, tmp_path):
     """A plain two-symbol run on non-empty tables launches, counted
-    through the caller's job group, exactly the jobs the serial loop
-    launched (14 in the benchmark's shape, 14 here: 2 for change
-    detection, 6 per table). A pool that lost the caller's group would
-    count fewer."""
+    through the caller's job group, exactly 8 jobs: 2 for change
+    detection and 3 per table (the dedup and the distributed write).
+    The quality gate reads the files' footers, and the read schema was
+    remembered from the first run. A pool that lost the caller's group
+    would count fewer."""
     src = tmp_path / "src"
     pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
     for sym in ("EURUSD", "USDJPY"):
@@ -183,4 +184,21 @@ def test_plain_run_jobs_on_nonempty_target(spark, tmp_path):
         _ticks(src / sym / "b.parquet", n=1000, start=500)
     s, jobs = _jobs(spark, lambda: pipeline.run(str(src)))
     assert (s.files_processed, s.files_skipped, s.rows_appended) == (2, 2, 1000)
-    assert jobs == 14
+    assert jobs == 8
+
+
+def test_wap_run_jobs_on_nonempty_target(spark, tmp_path):
+    """A write-audit-publish two-symbol run on non-empty tables in which
+    both batches pass launches exactly 8 jobs, as many as a plain run:
+    the incoming row gate reads the source files' footers and the audit
+    reads the staged files' footers."""
+    src = tmp_path / "src"
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    for sym in ("EURUSD", "USDJPY"):
+        _ticks(src / sym / "a.parquet", n=1000)
+    pipeline.run(str(src), write_audit_publish=True)
+    for sym in ("EURUSD", "USDJPY"):
+        _ticks(src / sym / "b.parquet", n=1000, start=500)
+    s, jobs = _jobs(spark, lambda: pipeline.run(str(src), write_audit_publish=True))
+    assert (s.files_processed, s.files_skipped, s.rows_appended) == (2, 2, 1000)
+    assert jobs == 8
