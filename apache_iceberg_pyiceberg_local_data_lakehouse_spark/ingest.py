@@ -15,18 +15,21 @@ mapped step-by-step in SURVEY.md §3):
   persist ledger; append audit entry                     (:411-417)
 
 Engine changes for scale (SURVEY.md §7):
-- change detection is ONE query with ONE shuffle per run, not a check
-  per folder: every symbol folder's binaryFile md5 frame is unioned with
-  the raw ledger rows and grouped by path, which puts each listed file
-  next to its latest ledger checksum. One collect returns only the new
-  (path, checksum) pairs; the skip count rides the same job as an
-  observed metric. An idle poll costs 2 Spark jobs (the shuffle's map
-  stage and the result stage) for 1 folder or 100.
-- the projections and aggregates on the driver's hot path (checksums,
-  change detection, normalize, the quality gate, the write-audit-publish
-  row gate) are SQL text with backticked identifiers, not trees of ``F``
-  calls: each ``F`` call is a py4j round trip or several, and an idle
-  poll is mostly such round trips.
+- change detection runs on the driver, as the reference's does, and
+  launches no Spark job: each symbol folder is listed by the rules of
+  Spark's binaryFile scan (``sources.files.list_parquet_files``), the
+  listed files are md5-hashed on a thread pool of width
+  ``defaultParallelism`` (hashlib releases the GIL), and the ledger's
+  data files are read with pyarrow, batch by batch, keeping only the
+  rows of listed paths. Driver memory is O(listed files) plus one
+  batch, as Spark's own file index would hold. An idle poll costs 0
+  Spark jobs for 1 folder or 100: on small polls the fixed cost of
+  launching a job, not the bytes hashed, sets the latency. One path
+  serves both modes; only the grouping into batches differs.
+- the projections and aggregates on the driver's hot path (normalize,
+  the quality gate, the write-audit-publish row gate) are SQL text with
+  backticked identifiers, not trees of ``F`` calls: each ``F`` call is a
+  py4j round trip or several.
 - the per-file loop becomes a per-symbol *batch*: all new files of a
   symbol are read as ONE DataFrame (Spark's multi-file parquet reader),
   so normalize/QC/dedup/append are one distributed job each, not O(files)
@@ -39,8 +42,8 @@ Engine changes for scale (SURVEY.md §7):
   remembered per pipeline, so a repeated shape skips the inference job.
   The deduped batch is staged once and published metadata-only in both
   modes (default and write-audit-publish), so its anti-join runs once.
-  A plain run then costs 2 jobs for change detection plus 3 per table
-  (the dedup and the distributed write). Per-file QC parity mode
+  A plain run then costs 3 jobs per table (the dedup and the
+  distributed write). Per-file QC parity mode
   (``per_file=True``) keeps the reference's file-granular accept/reject
   semantics for tests.
 - the per-table batches of one run overlap: each table's folders go to
@@ -70,10 +73,9 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
-from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -91,7 +93,12 @@ from .functions.normalize import normalize
 from .functions.quality import MIN_ROWS_THRESHOLD, batch_stats, check_quality
 from .operators.dedup import dedup_against_table
 from .maintenance import expire_snapshots
-from .sources.files import READ_SCHEMA_CONFS, parquet_footers, read_schema_key
+from .sources.files import (
+    READ_SCHEMA_CONFS,
+    list_parquet_files,
+    parquet_footers,
+    read_schema_key,
+)
 from .table import PartitionField
 
 _log = logging.getLogger(__name__)
@@ -177,6 +184,8 @@ class IngestPipeline:
         # the run's table workers
         self._read_schemas: dict[tuple, StructType] = {}
         self._read_schemas_lock = threading.Lock()
+        # the width of the hashing and per-table pools
+        self._width = spark.sparkContext.defaultParallelism
 
     # -- ledger (ST2 exactly-once per file content) --------------------------
 
@@ -190,10 +199,10 @@ class IngestPipeline:
         )
 
     def ingested(self) -> dict[str, str]:
-        """Ledger as a driver dict - reference-parity helper for the
-        ``per_file`` mode and tests; the batch path never materializes
-        this (millions of files would not fit a driver dict), it groups
-        the raw ledger rows with the listed files (``_detect_changes``)."""
+        """The whole ledger as a driver dict, read through Spark so
+        merge-on-read tombstones apply. Change detection reads only the
+        listed paths' rows (``_ledger_checksums``) and falls back to this
+        only while the ledger holds pending deletes."""
         return {
             r["path"]: r["checksum"] for r in self.ledger_latest().collect()
         }
@@ -236,18 +245,19 @@ class IngestPipeline:
         """One pipeline run over ``source_root`` (reference entry point 1,
         ``lakehouse_scheduler.py --now``).
 
+        Both modes find new files the same way, on the driver, with no
+        Spark job (``_detect_changes``: list, md5, look up the ledger, as
+        the reference does at ``lakehouse_pipeline.py:343-357``); the new
+        files' checksums are reused for the ledger write. The files are
+        read and hashed by the driver, not by executors: this method
+        already walks ``source_root`` with ``pathlib``, so the driver must
+        see it, and on small polls launching a job costs more than the
+        hashing. An idle poll launches no Spark job and writes its audit
+        row on the driver.
         ``per_file=False`` (default): batch all new files per symbol into
-        one DataFrame - the scale path. Change detection is one query
-        with one shuffle per run over every symbol folder
-        (``_detect_changes``: binaryFile + md5 grouped by path with the
-        raw ledger rows); only the NEW files' (path, checksum) pairs reach
-        the driver, and their checksums are reused for the ledger write -
-        no per-file driver hashing anywhere. An idle poll runs that query
-        (2 Spark jobs) and writes its audit row on the driver.
+        one DataFrame - the scale path.
         ``per_file=True``: reference-parity mode - QC accepts/rejects each
-        file independently (a bad file doesn't poison its siblings) and
-        the md5 runs file-by-file on the driver exactly like the
-        reference (``lakehouse_pipeline.py:350-357``).
+        file independently (a bad file doesn't poison its siblings).
         ``write_audit_publish=True``: stage each batch invisibly, audit
         the staged bytes, publish metadata-only or abort (see
         ``ingest_batch``).
@@ -271,34 +281,18 @@ class IngestPipeline:
             return summary
 
         symbols = sorted(p for p in root.iterdir() if p.is_dir())
-        ledger = self.ingested() if per_file else None
-        changes: dict[int, list[tuple[str, str]]] = {}
-        if not per_file and symbols:
-            summary.files_skipped, changes = self._detect_changes(symbols)
+        summary.files_skipped, changes = self._detect_changes(symbols)
         # folders with new files, grouped by the table they feed:
         # EURUSD/ and eurusd/ both map to gold.eurusd and must not race
         work: dict[str, list[tuple[int, list[tuple[str, str]]]]] = {}
-        for i, symbol_dir in enumerate(symbols):
-            if per_file:
-                files = sorted(symbol_dir.rglob("*.parquet"))  # :343 (S2)
-                new_entries: list[tuple[str, str]] = []
-                for pfile in files:
-                    path = os.path.abspath(str(pfile))
-                    checksum = file_checksum(pfile)
-                    if ledger.get(path) == checksum:  # :352-357
-                        summary.files_skipped += 1
-                        continue
-                    new_entries.append((path, checksum))
-            else:
-                new_entries = changes.get(i, [])
-            if new_entries:
-                summary.tables_processed += 1
-                table_id = f"{self.namespace}.{symbol_dir.name.lower()}"  # :330-331
-                work.setdefault(table_id, []).append((i, new_entries))
+        for i, new_entries in sorted(changes.items()):
+            summary.tables_processed += 1
+            table_id = f"{self.namespace}.{symbols[i].name.lower()}"  # :330-331
+            work.setdefault(table_id, []).append((i, new_entries))
 
         # one worker per table; each task gets its own clone of the
         # caller's job group, job tags and session tags
-        width = min(len(work), self.spark.sparkContext.defaultParallelism) or 1
+        width = min(len(work), self._width) or 1
         with ThreadPoolExecutor(max_workers=width) as pool:
             futures = [
                 pool.submit(
@@ -329,63 +323,74 @@ class IngestPipeline:
     def _detect_changes(
         self, symbols: list[Path]
     ) -> tuple[int, dict[int, list[tuple[str, str]]]]:
-        """Change detection for every symbol folder as ONE query with ONE
-        shuffle. Each folder's md5 frame (listed exactly as a
-        single-folder scan lists it) is tagged with the folder's index in
-        ``symbols`` and a NULL ``ingested_at``, and unioned with the raw
-        ledger rows, which carry a NULL folder. Grouped by path, each
-        listed file meets its latest ledger checksum
-        (``max_by(checksum, ingested_at)``: the files' NULL timestamps
-        take no part), and it is skipped when the two are equal. A tag
-        is an integer, so no folder name is ever spliced into SQL text.
+        """Change detection for every symbol folder, on the driver, with
+        no Spark job. Each folder is listed as Spark's binaryFile scan
+        lists it (``list_parquet_files``), every listed file is hashed
+        with ``file_checksum`` on a pool of ``defaultParallelism``
+        threads, and a file is skipped when its checksum equals the
+        latest ledger checksum of its path (``_ledger_checksums``).
 
-        Returns ``(files skipped, {folder index: new (path, checksum)
-        pairs, sorted})``; a folder with nothing new is absent. Driver
-        memory is bounded by the NEW-file count: only unseen pairs are
-        collected (they must reach the driver anyway for the ledger
-        write).
-
-        The skip count is an ``Observation`` over the listed paths, and
-        it is exact. The observed aggregate sits above the grouping, so
-        it runs in the result stage, the stage whose tasks feed the
-        collect. Spark merges a result task's accumulator updates once
-        per partition (only while that partition's output is still
-        missing), so a retried or speculative task cannot count twice;
-        the map stage before the shuffle may re-run, but it carries no
-        metric. Each row the aggregate sees is one distinct listed path,
-        so it counts every skipped file exactly once."""
-        from .sources.files import file_checksums
-
-        listed = [
-            file_checksums(self.spark, str(d)).selectExpr(
-                f"{i} AS folder",
-                "path",
-                "checksum",
-                "CAST(NULL AS TIMESTAMP) AS ingested_at",
-            )
+        Returns ``(files skipped, {folder index in symbols: new (path,
+        checksum) pairs, sorted})``; a folder with nothing new is absent.
+        Driver memory is O(listed files): the listing, the checksums and
+        the listed paths' latest ledger entries."""
+        folder_of = {
+            path: i
             for i, d in enumerate(symbols)
-        ]
-        ledger = self._ledger.to_df().selectExpr(
-            "CAST(NULL AS INT) AS folder", "path", "checksum", "ingested_at"
-        )
-        obs = Observation()
-        rows = (
-            reduce(DataFrame.union, listed, ledger)
-            .groupBy("path")
-            .agg(
-                F.expr("max(checksum) FILTER (WHERE folder IS NOT NULL) AS checksum"),
-                F.expr("max(folder) AS folder"),
-                F.expr("max_by(checksum, ingested_at) AS seen"),
-            )
-            .where("folder IS NOT NULL")
-            .observe(obs, F.expr("count_if(seen <=> checksum) AS skipped"))
-            .where("NOT (seen <=> checksum)")
-            .collect()
-        )
+            for path in list_parquet_files(str(d))
+        }
+        if not folder_of:
+            return 0, {}
+        paths = sorted(folder_of)
+        width = min(len(paths), self._width)
+        with ThreadPoolExecutor(max_workers=width) as pool:
+            checksums = list(pool.map(file_checksum, paths))
+        seen = self._ledger_checksums(paths)
+        skipped = 0
         changes: dict[int, list[tuple[str, str]]] = {}
-        for path, checksum, folder, _ in sorted(rows):  # one row per path
-            changes.setdefault(folder, []).append((path, checksum))
-        return obs.get["skipped"] or 0, changes
+        for path, checksum in zip(paths, checksums):
+            if seen.get(path) == checksum:
+                skipped += 1
+            else:
+                changes.setdefault(folder_of[path], []).append((path, checksum))
+        return skipped, changes
+
+    def _ledger_checksums(self, paths: list[str]) -> dict[str, str]:
+        """The latest ledger checksum of each of ``paths`` that has one:
+        the entry with the greatest ``ingested_at`` wins, as
+        ``max_by(checksum, ingested_at)`` picks it. The current
+        snapshot's ledger files are read with pyarrow, one record batch
+        at a time, each cut to the rows of ``paths`` by ``is_in``. A
+        ledger with merge-on-read tombstones is read through Spark
+        (``ingested``), which applies them."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        snap = self._ledger.snapshot()
+        if snap.delete_entries:
+            ledger = self.ingested()
+            return {p: ledger[p] for p in paths if p in ledger}
+        wanted = pa.array(paths, pa.string())
+        latest: dict[str, tuple[int, str]] = {}
+        for e in snap.data_entries:
+            f = pq.ParquetFile(os.path.join(self._ledger.location, e["path"]))
+            for b in f.iter_batches(columns=["path", "checksum", "ingested_at"]):
+                b = b.filter(pc.is_in(b.column("path"), value_set=wanted))
+                if not b.num_rows:
+                    continue
+                at = b.column("ingested_at")
+                # microseconds since the epoch, whatever unit the writer
+                # chose (a Spark INT96 file reads back in nanoseconds)
+                at = at.cast(pa.timestamp("us", at.type.tz), safe=False)
+                for path, checksum, t in zip(
+                    b.column("path").to_pylist(),
+                    b.column("checksum").to_pylist(),
+                    at.cast(pa.int64()).to_pylist(),
+                ):
+                    if t is not None and (path not in latest or t > latest[path][0]):
+                        latest[path] = (t, checksum)
+        return {path: checksum for path, (_, checksum) in latest.items()}
 
     def ingest_batch(
         self,

@@ -4,9 +4,11 @@
   handles multi-file/recursive layouts; at scale, file listing happens on
   the driver against the FS/object store, reads on executors.
 - S3: directory-per-table layout - one DataFrame per first-level folder.
-- S12: content checksums via the binaryFile source + ``md5``: the batch
-  ingest's change detection, matching the reference's md5-of-bytes
-  ledger exactly.
+- S12: content checksums, matching the reference's md5-of-bytes ledger
+  exactly. Ingest's change detection lists a folder on the driver
+  (``list_parquet_files``, by the rules of Spark's binaryFile scan) and
+  hashes the files there; ``file_checksums`` is the same listing and
+  md5 as a distributed binaryFile scan.
 - Parquet footers read on the driver (``parquet_footers``): the ingest
   quality gate's numbers, and the key (``read_schema_key``) under which
   ingest remembers the schema Spark inferred for a footer shape.
@@ -74,22 +76,67 @@ def list_symbol_dirs(source_root: str) -> list[str]:
     )
 
 
+def _hidden_name(name: str) -> bool:
+    """Spark's ``HadoopFSUtils.shouldFilterOutPathName`` without its
+    ``_metadata`` exemption: a name starting with ``.``, one starting
+    with ``_`` that holds no ``=`` (``_k=1`` is a partition directory),
+    or an in-flight copy ending ``._COPYING_``."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def list_parquet_files(folder: str) -> list[str]:
+    """The files under ``folder``, at any depth, that Spark's binaryFile
+    scan with ``pathGlobFilter="*.parquet"`` and ``recursiveFileLookup``
+    reads (``file_checksums``), as sorted ``os.path.abspath`` strings:
+
+    - a directory is entered unless its name is hidden; Spark exempts
+      names starting ``_metadata`` or ``_common_metadata``, so it
+      enters ``_metadata/`` but not ``_d/``;
+    - a file is kept when its name is not hidden (no exemption: Spark's
+      data-path check drops ``_metadata.parquet``), ends ``.parquet``
+      (case-sensitive) and it is not empty;
+    - symlinked directories and files are followed; a broken link is
+      neither, and is skipped.
+
+    The listing runs on the driver, as Spark's file index lists there."""
+    out = []
+    stack = [folder]
+    while stack:
+        with os.scandir(stack.pop()) as it:
+            for e in it:
+                name = e.name
+                if e.is_dir():
+                    if not _hidden_name(name) or name.startswith(
+                        ("_metadata", "_common_metadata")
+                    ):
+                        stack.append(e.path)
+                elif (
+                    name.endswith(".parquet")
+                    and not _hidden_name(name)
+                    and e.is_file()
+                    and e.stat().st_size > 0
+                ):
+                    out.append(os.path.abspath(e.path))
+    return sorted(out)
+
+
 def file_checksums(
     spark: SparkSession,
     path: str,
     glob: str = "*.parquet",
     recursive: bool = True,
 ) -> DataFrame:
-    """S12 at scale: distributed md5 of file contents via the binaryFile
+    """S12 as a distributed scan: md5 of file contents via the binaryFile
     source - returns (path, length, modificationTime, checksum). The md5
     matches the reference's md5-of-bytes exactly
-    (``lakehouse_pipeline.py:122-128``), but runs on executors: the
-    ingest change-detection anti-join consumes this instead of a
-    sequential driver hash loop. ``path`` is normalized from Spark's
-    ``file:`` URI back to a plain filesystem path so it joins against
-    ledger entries recorded by any mode. The projection is one
-    ``selectExpr`` of SQL text: change detection calls this once per
-    symbol folder on every poll."""
+    (``lakehouse_pipeline.py:122-128``) and runs on executors. ``path``
+    is normalized from Spark's ``file:`` URI back to a plain filesystem
+    path, the form the ingest ledger stores. With the default arguments
+    it lists exactly the files of ``list_parquet_files``."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)

@@ -5,12 +5,13 @@ costs in Spark jobs.
   names in two folders) and file histories (content change, A->B->A
   revert, same-content rewrite) give exact ``RunSummary`` counts and
   gold row counts.
-- Job guard: an idle re-run launches the same, small number of Spark
-  jobs whether the source root holds 1 symbol folder or 4.
+- Job guard: an idle re-run launches no Spark job, whether the source
+  root holds 1 symbol folder or 4.
 - Dedup bounds: the quality pass's ``DateTime`` range is the one
   ``dedup_against_table`` would compute itself, and passing it in skips
   that probe without changing the deduped rows.
-- Driver round trips: an idle two-symbol poll sends few py4j commands.
+- Driver round trips: an idle two-symbol poll sends at most 10 py4j
+  commands.
 - Quoting: column names holding a space, a dot or a backtick pass
   through ``normalize`` and ``check_quality`` as the ``F``-tree forms
   would compute them, and a folder name holding a space and a quote
@@ -19,6 +20,10 @@ costs in Spark jobs.
   accepting run, and change detection answers as before.
 - Dedup failure: a committed-key scan that raises lets every row pass
   and logs a warning naming the table.
+- Listing: the driver's listing and md5 of a tree of awkward names
+  equal the distributed binaryFile scan's (``file_checksums``).
+- Tombstones: a ledger row removed by a merge-on-read DELETE makes its
+  file new again.
 """
 
 from __future__ import annotations
@@ -160,10 +165,9 @@ def test_change_detection_content_history(spark, tmp_path):
 
 
 def test_idle_rerun_jobs_do_not_grow_with_folders(spark, tmp_path):
-    """Change detection is one query per run: an idle re-run over 4
-    symbol folders launches as many Spark jobs as one over 1 folder, and
-    only 2 of them: the map and result stages of change detection's one
-    shuffle. The audit row is written by the driver."""
+    """Change detection runs on the driver: an idle re-run over 1 symbol
+    folder or 4 launches no Spark job. The audit row is written by the
+    driver."""
     idle_jobs = {}
     for n_folders in (1, 4):
         src = tmp_path / f"src{n_folders}"
@@ -173,8 +177,7 @@ def test_idle_rerun_jobs_do_not_grow_with_folders(spark, tmp_path):
         assert pipeline.run(str(src)).files_processed == n_folders
         s, idle_jobs[n_folders] = _jobs(spark, lambda: pipeline.run(str(src)))
         assert _counts(s) == (0, 0, n_folders, 0, 0)
-    assert idle_jobs[1] == idle_jobs[4], idle_jobs
-    assert idle_jobs[4] == 2, idle_jobs
+    assert idle_jobs == {1: 0, 4: 0}, idle_jobs
 
 
 def test_quality_bounds_feed_dedup(spark, tmp_path):
@@ -206,9 +209,9 @@ def test_quality_bounds_feed_dedup(spark, tmp_path):
 
 
 def test_idle_poll_round_trips(spark, tmp_path, monkeypatch):
-    """An idle two-symbol poll launches exactly 2 Spark jobs and sends at
-    most 200 py4j commands, GC detaches excluded (the ``F``-tree form
-    of the same poll sent about 410)."""
+    """An idle two-symbol poll launches no Spark job and sends at most 10
+    py4j commands, GC detaches excluded (change detection as a Spark
+    query sent up to 200, and its ``F``-tree form about 410)."""
     src = tmp_path / "src"
     for i, sym in enumerate(("EURUSD", "USDJPY")):
         _ticks(src / sym / "tick_0000.parquet", start=1000 * i)
@@ -227,8 +230,8 @@ def test_idle_poll_round_trips(spark, tmp_path, monkeypatch):
     s, jobs = _jobs(spark, lambda: pipeline.run(str(src)))
     monkeypatch.undo()
     assert _counts(s) == (0, 0, 2, 0, 0)
-    assert jobs == 2
-    assert len(sent) <= 200, len(sent)
+    assert jobs == 0
+    assert len(sent) <= 10, len(sent)
 
 
 def _f_form_normalize(df):
@@ -425,3 +428,100 @@ def test_dedup_scan_failure_is_logged(spark, tmp_path, monkeypatch, caplog):
     assert rec.levelname == "WARNING"
     assert table.location in rec.getMessage()
     assert isinstance(rec.exc_info[1], OSError)
+
+
+def test_driver_listing_equals_spark(spark, tmp_path):
+    """Change detection's driver listing and md5 give exactly the
+    ``(path, checksum)`` set of the distributed binaryFile scan over one
+    tree of hidden, exempt, partition-like, in-flight, wrongly cased,
+    empty, symlinked and oddly named files and directories."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.sources.files import (
+        file_checksums,
+    )
+
+    root = tmp_path / "SYM"
+    names = [
+        "_d/x.parquet",
+        ".d/x.parquet",
+        "_k=1/x.parquet",
+        "k=1/x.parquet",
+        "_metadata/x.parquet",
+        "_x.parquet",
+        ".x.parquet",
+        "_metadata.parquet",
+        "_k=2.parquet",
+        "x.parquet._COPYING_",
+        "X.PARQUET",
+        "a.parquet.bak",
+        "n/m/o/deep.parquet",
+        "sp ace.parquet",
+        "qu'ote.parquet",
+        "br[ack]et.parquet",
+        "pc%20t.parquet",
+        "n\u00f6.parquet",
+        "a.parquet",
+    ]
+    for name in names:
+        f = root / name
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(name.encode())
+    (root / "zero.parquet").write_bytes(b"")
+    (root / "empty").mkdir()
+    outside = tmp_path / "outside"
+    _ticks(outside / "linked.parquet", 120)
+    (root / "ln_dir").symlink_to(outside, target_is_directory=True)
+    (root / "ln_file.parquet").symlink_to(outside / "linked.parquet")
+
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    skipped, changes = pipeline._detect_changes([root])
+    want = {
+        (r["path"], r["checksum"])
+        for r in file_checksums(spark, str(root)).collect()
+    }
+    assert skipped == 0 and list(changes) == [0]
+    assert set(changes[0]) == want
+    assert len(want) == 13
+    kept = {p[len(str(root)) + 1 :] for p, _ in want}
+    assert {"_k=1/x.parquet", "_metadata/x.parquet", "_k=2.parquet"} <= kept
+    assert "ln_dir/linked.parquet" in kept and "ln_file.parquet" in kept
+
+
+def test_ledger_tombstone_reingests(spark, tmp_path):
+    """A merge-on-read DELETE of one ledger row leaves it pending as a
+    tombstone; change detection applies it, so the next run re-ingests
+    that file (its rows dedup to nothing), and the driver's ledger read
+    agrees with ``ingested()`` before the delete, while it is pending,
+    and after the re-ingest."""
+    from apache_iceberg_pyiceberg_local_data_lakehouse_spark.dml import delete_where
+
+    src = tmp_path / "src"
+    _ticks(src / "EURUSD" / "a.parquet", 150)
+    _ticks(src / "EURUSD" / "b.parquet", 150, start=150)
+    pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
+    assert _counts(pipeline.run(str(src))) == (1, 2, 0, 0, 300)
+    paths = sorted(str(p) for p in (src / "EURUSD").iterdir())
+
+    def driver_read_agrees():
+        latest = pipeline.ingested()
+        assert pipeline._ledger_checksums(paths) == {
+            p: latest[p] for p in paths if p in latest
+        }
+        return latest
+
+    # no tombstone yet: the pyarrow read of the ledger files
+    assert not pipeline._ledger.snapshot().delete_entries
+    assert sorted(driver_read_agrees()) == paths
+
+    a = str(src / "EURUSD" / "a.parquet")
+    delete_where(
+        pipeline._ledger,
+        F.col("path") == a,
+        mode="merge-on-read",
+        equality_cols=["path"],
+    )
+    assert pipeline._ledger.snapshot().delete_entries
+    assert a not in driver_read_agrees()
+    assert _counts(pipeline.run(str(src))) == (1, 1, 1, 0, 0)
+    assert _rows(pipeline, "gold.eurusd") == 300
+    assert a in driver_read_agrees()
+    assert _counts(pipeline.run(str(src))) == (0, 0, 2, 0, 0)

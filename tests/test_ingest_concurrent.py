@@ -11,7 +11,7 @@
   warning, and the run still succeeds.
 - Order: counters and quality issues merge in sorted folder order.
 - Job guards: a plain two-symbol run, and a write-audit-publish one,
-  launch 8 jobs.
+  launch 6 jobs.
 """
 
 from __future__ import annotations
@@ -170,11 +170,11 @@ def test_wap_rejections_merge_in_folder_order(spark, tmp_path):
 
 def test_plain_run_jobs_on_nonempty_target(spark, tmp_path):
     """A plain two-symbol run on non-empty tables launches, counted
-    through the caller's job group, exactly 8 jobs: 2 for change
-    detection and 3 per table (the dedup and the distributed write).
-    The quality gate reads the files' footers, and the read schema was
-    remembered from the first run. A pool that lost the caller's group
-    would count fewer."""
+    through the caller's job group, exactly 6 jobs: 3 per table (the
+    dedup and the distributed write). Change detection runs on the
+    driver, the quality gate reads the files' footers, and the read
+    schema was remembered from the first run. A pool that lost the
+    caller's group would count fewer."""
     src = tmp_path / "src"
     pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
     for sym in ("EURUSD", "USDJPY"):
@@ -184,12 +184,12 @@ def test_plain_run_jobs_on_nonempty_target(spark, tmp_path):
         _ticks(src / sym / "b.parquet", n=1000, start=500)
     s, jobs = _jobs(spark, lambda: pipeline.run(str(src)))
     assert (s.files_processed, s.files_skipped, s.rows_appended) == (2, 2, 1000)
-    assert jobs == 8
+    assert jobs == 6
 
 
 def test_wap_run_jobs_on_nonempty_target(spark, tmp_path):
     """A write-audit-publish two-symbol run on non-empty tables in which
-    both batches pass launches exactly 8 jobs, as many as a plain run:
+    both batches pass launches exactly 6 jobs, as many as a plain run:
     the incoming row gate reads the source files' footers and the audit
     reads the staged files' footers."""
     src = tmp_path / "src"
@@ -201,4 +201,4 @@ def test_wap_run_jobs_on_nonempty_target(spark, tmp_path):
         _ticks(src / sym / "b.parquet", n=1000, start=500)
     s, jobs = _jobs(spark, lambda: pipeline.run(str(src), write_audit_publish=True))
     assert (s.files_processed, s.files_skipped, s.rows_appended) == (2, 2, 1000)
-    assert jobs == 8
+    assert jobs == 6

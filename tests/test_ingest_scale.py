@@ -1,10 +1,11 @@
-"""Scale posture of the ingest/commit path: change detection and
-commit-time stats must not degenerate into per-file driver loops.
+"""Scale posture of the ingest/commit path: change detection runs on
+the driver without Spark jobs, and commit-time stats stay complete.
 
-- The batch ingest mode must never call the driver-side md5
-  (``ingest.file_checksum``) - checksums come from a distributed
-  binaryFile job left-joined against the ledger table, and only the
-  unseen files' (path, checksum) pairs reach the driver.
+- A re-run over 100 already-ingested files launches no Spark job:
+  listing, md5 and the ledger lookup all run on the driver. Skips,
+  row counts and a late file's re-ingest stay exact.
+- A re-run over 1,000 files calls no ``DataFrame.collect``: the ledger
+  is read from its files, not pulled through Spark.
 - Appends with hundreds of output files must still produce a complete
   manifest (rows, bytes, per-column min/max for every file) - the footer
   reads run as a Spark job past ``_STATS_JOB_THRESHOLD``.
@@ -21,13 +22,13 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from apache_iceberg_pyiceberg_local_data_lakehouse_spark import ingest as ingest_mod
 from apache_iceberg_pyiceberg_local_data_lakehouse_spark.catalog import (
     LakehouseCatalog,
 )
 from apache_iceberg_pyiceberg_local_data_lakehouse_spark.ingest import (
     IngestPipeline,
 )
+from tests.test_ingest_change_detection import _jobs
 
 N_FILES = 100
 
@@ -50,16 +51,10 @@ def _write_tick_files(src: str, n_files: int, rows_per_file: int = 120) -> None:
         )
 
 
-def test_batch_ingest_never_hashes_on_driver(spark, tmp_path, monkeypatch):
-    """100 files through the default (batch) mode with the driver md5
-    forbidden: discovery, skip detection and ledger recording must all
-    come from the distributed checksum job."""
-
-    def _forbidden(*a, **k):
-        raise AssertionError("driver-side file_checksum called in batch mode")
-
-    monkeypatch.setattr(ingest_mod, "file_checksum", _forbidden)
-
+def test_batch_rerun_launches_no_jobs(spark, tmp_path):
+    """100 files through the default (batch) mode; the idempotent re-run
+    over them launches no Spark job: discovery, hashing and the ledger
+    lookup all run on the driver."""
     src = tmp_path / "src" / "EURUSD"
     _write_tick_files(str(src), N_FILES)
     pipeline = IngestPipeline(spark, str(tmp_path / "wh"))
@@ -71,7 +66,8 @@ def test_batch_ingest_never_hashes_on_driver(spark, tmp_path, monkeypatch):
     assert table.to_df().count() == N_FILES * 120
 
     # idempotent re-run: everything checksum-skips, nothing appends
-    s2 = pipeline.run(str(tmp_path / "src"))
+    s2, jobs = _jobs(spark, lambda: pipeline.run(str(tmp_path / "src")))
+    assert jobs == 0
     assert s2.files_skipped == N_FILES
     assert s2.files_processed == 0
     assert s2.rows_appended == 0
@@ -117,38 +113,11 @@ def test_large_append_manifest_complete(spark, tmp_path):
     assert pruned.filter(F.col("k") == 5).count() == 1
 
 
-def _file_pairs(schema, rows) -> int | None:
-    """(path, checksum) pairs a collect brought to the driver: one per row
-    when the first columns are ``path, checksum``, plus one per element of
-    any collected list of ``(path, checksum, ...)`` structs. None when the
-    collect carries no such pairs at all."""
-    from pyspark.sql.types import ArrayType, StructType
-
-    def is_pair(fields):
-        return [f.name for f in fields[:2]] == ["path", "checksum"]
-
-    lists = [
-        f.name
-        for f in schema.fields
-        if isinstance(f.dataType, ArrayType)
-        and isinstance(f.dataType.elementType, StructType)
-        and is_pair(f.dataType.elementType.fields)
-    ]
-    top = is_pair(schema.fields)
-    if not (top or lists):
-        return None
-    return (len(rows) if top else 0) + sum(
-        len(r[name] or []) for r in rows for name in lists
-    )
-
-
-def test_rerun_collect_bounded_by_new_file_count(spark, tmp_path, monkeypatch):
-    """A re-run over a large already-ingested tree must NOT pull one row
-    per discovered file to the driver: skip counting is an aggregate, and
-    the only (path, checksum) pairs collected are the unseen files -
-    bounded by the NEW-file count (0 on a no-op re-run, 3 after 3 late
-    files), not the 1000 discovered files. Pairs are counted whether they
-    arrive as rows or inside a collected list."""
+def test_rerun_calls_no_collect(spark, tmp_path, monkeypatch):
+    """A re-run over a large already-ingested tree (1000 files) calls no
+    ``DataFrame.collect``: change detection reads the ledger's files on
+    the driver, so not even the skip count goes through Spark. 3 late
+    files then re-ingest exactly."""
     # patch the CONCRETE class (pyspark.sql.DataFrame is the abstract
     # base in Spark 4; instances override collect)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -160,25 +129,19 @@ def test_rerun_collect_bounded_by_new_file_count(spark, tmp_path, monkeypatch):
     s1 = pipeline.run(str(tmp_path / "src"))
     assert s1.files_processed == n_files
 
-    collected_file_rows: list[int] = []
+    collects = []
     orig_collect = DataFrame.collect
 
     def spy(self):
-        rows = orig_collect(self)
-        pairs = _file_pairs(self.schema, rows)
-        if pairs is not None:
-            collected_file_rows.append(pairs)
-        return rows
+        collects.append(self.schema.simpleString())
+        return orig_collect(self)
 
     monkeypatch.setattr(DataFrame, "collect", spy)
 
     s2 = pipeline.run(str(tmp_path / "src"))
     assert s2.files_skipped == n_files and s2.files_processed == 0
-    assert collected_file_rows, "no (path, checksum) collect was seen"
-    assert all(n == 0 for n in collected_file_rows), collected_file_rows
+    assert collects == []
 
-    collected_file_rows.clear()
     _write_tick_files(str(src / "late"), 3, rows_per_file=150)
     s3 = pipeline.run(str(tmp_path / "src"))
     assert s3.files_skipped == n_files and s3.files_processed == 3
-    assert max(collected_file_rows) == 3, collected_file_rows
